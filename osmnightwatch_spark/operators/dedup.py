@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import free_local_checkpoint
+from ..session import CacheScope
 
 DEFAULT_SHINGLE = 8
 DEFAULT_STRIDE = 16
@@ -109,8 +109,7 @@ def minhash_bands(sh: DataFrame, id_col: str, bands: int = 8) -> DataFrame:
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text: str = "text",
                       bands: int = 8, size: int = DEFAULT_SHINGLE,
                       stride: int = DEFAULT_STRIDE,
-                      max_bucket: int = 1000,
-                      materialize: bool = True) -> DataFrame:
+                      max_bucket: int = 1000) -> DataFrame:
     """Candidate near-dup pairs: documents sharing ≥1 (band, min-hash)
     bucket. Returns (id_a, id_b, n_shared_bands), id_a < id_b.
 
@@ -126,44 +125,38 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text: str = "text",
     and both sides of the pair join). Catalyst does not reuse the sig
     exchange across them (canonical plans diverge above it), so the
     lazy form recomputes sig — and its 8-md5-per-shingle pass, the
-    dominant CPU of the whole query — once per consumer.
-    ``materialize=True`` (default) persists sig, eager-checkpoints the
-    pair table and unpersists — the leak-free knn lifecycle (measured
-    1.37 → 1.12 s at sf0.1 with AQE-over-cached-plans on; an earlier
-    round measured the opposite before that config existed). At 10^12
-    docs signatures are the reusable artifact of a minhash pipeline
-    and would be a persisted table between jobs anyway.
-    ``materialize=False`` returns the fully lazy plan (composition /
-    plan-inspection use)."""
-    sig = minhash_bands(
-        shingles(df, id_col, text, size, stride, distinct=False), id_col, bands
-    )
-    if materialize:
-        sig = sig.persist()
-    hot = (
-        sig.groupBy("band", "min_h")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .where(F.col("bucket_n") > max_bucket)
-        .select("band", "min_h")
-    )
-    sized = sig.join(F.broadcast(hot), ["band", "min_h"], "left_anti")
-    # pair expansion as a bucket equi-join: AQE converts both sides to
-    # a broadcast hash join at bench scale and a co-partitioned shuffle
-    # join at 10^12 (bucket sizes stay ≤ max_bucket either way). An
-    # in-row collect_list + nested-transform expansion was measured
-    # ~30% SLOWER here — the array lambdas evaluate interpreted.
-    a = sized.select(F.col(id_col).alias("id_a"), "band", "min_h")
-    b = sized.select(F.col(id_col).alias("id_b"), "band", "min_h")
-    pairs = (
-        a.join(b, ["band", "min_h"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    if materialize:
-        pairs = pairs.localCheckpoint(eager=True)
-        sig.unpersist()
-    return pairs
+    dominant CPU of the whole query — once per consumer. So sig is
+    persisted, the pair table eager-checkpointed and sig released on
+    return or raise — the leak-free knn lifecycle (measured 1.37 →
+    1.12 s at sf0.1 with AQE-over-cached-plans on; an earlier round
+    measured the opposite before that config existed). At 10^12 docs
+    signatures are the reusable artifact of a minhash pipeline and
+    would be a persisted table between jobs anyway."""
+    with CacheScope() as scope:
+        sig = scope.persist(minhash_bands(
+            shingles(df, id_col, text, size, stride, distinct=False), id_col, bands
+        ))
+        hot = (
+            sig.groupBy("band", "min_h")
+            .agg(F.count(F.lit(1)).alias("bucket_n"))
+            .where(F.col("bucket_n") > max_bucket)
+            .select("band", "min_h")
+        )
+        sized = sig.join(F.broadcast(hot), ["band", "min_h"], "left_anti")
+        # pair expansion as a bucket equi-join: AQE converts both sides to
+        # a broadcast hash join at bench scale and a co-partitioned shuffle
+        # join at 10^12 (bucket sizes stay ≤ max_bucket either way). An
+        # in-row collect_list + nested-transform expansion was measured
+        # ~30% SLOWER here — the array lambdas evaluate interpreted.
+        a = sized.select(F.col(id_col).alias("id_a"), "band", "min_h")
+        b = sized.select(F.col(id_col).alias("id_b"), "band", "min_h")
+        return (
+            a.join(b, ["band", "min_h"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+            .localCheckpoint(eager=True)
+        )
 
 
 def jaccard_topk(df: DataFrame, id_col: str, text: str = "text", k: int = 20,
@@ -384,102 +377,93 @@ def dedup_clusters(pairs: DataFrame, all_ids: DataFrame | None = None,
     back to the (explicitly re-symmetrized) edge list, one
     symmetric-difference count as the convergence probe. Edge state is
     eager-localCheckpointed each round so plans stay O(1)-deep, and
-    superseded checkpoints are freed immediately
-    (``DataFrame.unpersist`` is a no-op on localCheckpoints). Raises
+    superseded checkpoints are freed immediately; all round state is
+    freed on return or raise. Raises
     RuntimeError if ``max_iters`` rounds pass without convergence — a
     silently partial labeling would under-deduplicate downstream.
     """
     # canonical undirected edges (lo, hi), self-loops dropped
-    e = (
-        pairs.select(
-            F.least("id_a", "id_b").alias("lo"),
-            F.greatest("id_a", "id_b").alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # node set from the RAW pairs (a doc appearing only in a self-pair
-    # still gets a label), checkpointed once for the final singleton fill
-    nodes = (
-        pairs.select(F.col("id_a").alias("node"))
-        .unionByName(pairs.select(F.col("id_b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iters):
-        # ---- large-star: for each node u (over symmetric adjacency),
-        # m(u) = min(u, min neighbors); every neighbor v > u re-wires
-        # to (m(u), v). Keeps every edge's larger endpoint, so no
-        # component splits; strictly shrinks long chains.
-        sym = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
-            e.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
-        mins = mins.select("u", F.least("u", "_mn").alias("m"))
-        e1 = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
+    with CacheScope() as scope:
+        e = scope.checkpoint(
+            pairs.select(
+                F.least("id_a", "id_b").alias("lo"),
+                F.greatest("id_a", "id_b").alias("hi"))
             .where(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        # ---- small-star: key each edge by its larger endpoint u;
-        # m(u) = min of its smaller neighbors; connect u and all its
-        # smaller neighbors to m(u).
-        d = e1.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        smins = d.groupBy("u").agg(F.min("v").alias("m"))
-        e2 = (
-            d.join(smins, "u")
-            .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
-            .where(F.col("lo") != F.col("hi"))
-            .unionByName(smins.select(F.col("m").alias("lo"),
-                                      F.col("u").alias("hi")))
+        # node set from the RAW pairs (a doc appearing only in a self-pair
+        # still gets a label), checkpointed once for the final singleton fill
+        nodes = scope.checkpoint(
+            pairs.select(F.col("id_a").alias("node"))
+            .unionByName(pairs.select(F.col("id_b").alias("node")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        # convergence: edge set unchanged (symmetric difference empty)
-        diff = (
-            e.withColumn("_s", F.lit(1))
-            .unionByName(e2.withColumn("_s", F.lit(2)))
-            .groupBy("lo", "hi").agg(F.count_distinct("_s").alias("_c"))
-            .where(F.col("_c") < 2)
-            .count()
-        )
-        free_local_checkpoint(e)
-        e = e2
-        if diff == 0:
-            converged = True
-            break
-    if not converged:
-        free_local_checkpoint(e)
-        free_local_checkpoint(nodes)
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} rounds — "
-            "raise max_iters; a partial labeling would silently "
-            "under-deduplicate"
-        )
-    # converged state is a star per component: (component_min, member)
-    labels = e.select(F.col("hi").alias("node"), F.col("lo").alias("label"))
-    centers_and_singletons = nodes.join(
-        e.select(F.col("hi").alias("node")), "node", "left_anti"
-    ).select("node", F.col("node").alias("label"))
-    labels = labels.unionByName(centers_and_singletons)
-    if all_ids is not None:
-        extra = (
-            all_ids.select(F.col(id_col).alias("node"))
-            .join(nodes, "node", "left_anti")
-            .select("node", F.col("node").alias("label"))
-        )
-        labels = labels.unionByName(extra)
-    # self-contained result: checkpoint the (node-sized) label table so
-    # the e/nodes round state can be freed now instead of leaking until
-    # the caller drops the result
-    out = labels.select(
-        F.col("node").alias(id_col), F.col("label").alias("keeper_id")
-    ).localCheckpoint(eager=True)
-    free_local_checkpoint(e)
-    free_local_checkpoint(nodes)
-    return out
+        for _ in range(max_iters):
+            # ---- large-star: for each node u (over symmetric adjacency),
+            # m(u) = min(u, min neighbors); every neighbor v > u re-wires
+            # to (m(u), v). Keeps every edge's larger endpoint, so no
+            # component splits; strictly shrinks long chains.
+            sym = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
+                e.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
+            mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
+            mins = mins.select("u", F.least("u", "_mn").alias("m"))
+            e1 = (
+                sym.join(mins, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
+                .where(F.col("lo") != F.col("hi"))
+                .distinct()
+            )
+            # ---- small-star: key each edge by its larger endpoint u;
+            # m(u) = min of its smaller neighbors; connect u and all its
+            # smaller neighbors to m(u).
+            d = e1.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+            smins = d.groupBy("u").agg(F.min("v").alias("m"))
+            e2 = scope.checkpoint(
+                d.join(smins, "u")
+                .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
+                .where(F.col("lo") != F.col("hi"))
+                .unionByName(smins.select(F.col("m").alias("lo"),
+                                          F.col("u").alias("hi")))
+                .distinct()
+            )
+            # convergence: edge set unchanged (symmetric difference empty)
+            diff = (
+                e.withColumn("_s", F.lit(1))
+                .unionByName(e2.withColumn("_s", F.lit(2)))
+                .groupBy("lo", "hi").agg(F.count_distinct("_s").alias("_c"))
+                .where(F.col("_c") < 2)
+                .count()
+            )
+            scope.release(e)
+            e = e2
+            if diff == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"dedup_clusters did not converge in {max_iters} rounds — "
+                "raise max_iters; a partial labeling would silently "
+                "under-deduplicate"
+            )
+        # converged state is a star per component: (component_min, member)
+        labels = e.select(F.col("hi").alias("node"), F.col("lo").alias("label"))
+        centers_and_singletons = nodes.join(
+            e.select(F.col("hi").alias("node")), "node", "left_anti"
+        ).select("node", F.col("node").alias("label"))
+        labels = labels.unionByName(centers_and_singletons)
+        if all_ids is not None:
+            extra = (
+                all_ids.select(F.col(id_col).alias("node"))
+                .join(nodes, "node", "left_anti")
+                .select("node", F.col("node").alias("label"))
+            )
+            labels = labels.unionByName(extra)
+        # self-contained result: checkpoint the (node-sized) label table so
+        # the e/nodes round state can be freed now instead of leaking until
+        # the caller drops the result
+        return labels.select(
+            F.col("node").alias(id_col), F.col("label").alias("keeper_id")
+        ).localCheckpoint(eager=True)
 
 
 def dedup_clusters_sql(pairs_sql: str, id_col: str = "doc_id",

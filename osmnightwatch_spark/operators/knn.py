@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cells as C
+from ..session import CacheScope
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -215,7 +216,7 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
              res: int | None = None,
              probe_id: str = "probe_id", cand_id: str = "cand_id",
              lon: str = "lon", lat: str = "lat",
-             exact: bool = True, materialize: bool = True,
+             exact: bool = True,
              n_candidates: int | None = None,
              metric: str = "planar",
              broadcast_probes: bool | None = None) -> DataFrame:
@@ -235,8 +236,12 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
     misrank east-west vs north-south neighbors.
 
     The exact path is multi-pass by nature (guarantee check + possible
-    ring expansion), so with ``materialize=True`` (default) it runs
-    eagerly in exactly three actions on the common (all-exact) path:
+    ring expansion), so it runs eagerly under one
+    :class:`~osmnightwatch_spark.session.CacheScope`: the top-k is
+    persisted, the (k×probes)-sized result is eager-checkpointed, and
+    every intermediate is released on return or raise — no
+    CacheManager entry outlives the call. The common (all-exact) path
+    takes exactly three actions:
 
     1. ``probes.count()`` — gives the probe cardinality for the
        exactness accounting below AND the join-side decision (probe
@@ -250,14 +255,11 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
     3. when ``n_ok == n_probes`` every ranked row is already exact, so
        the per-probe semi-join is skipped entirely and the (k×probes)-
        sized result is eager-checkpointed straight off the persisted
-       top-k; intermediates are unpersisted — no CacheManager entry
-       outlives the call.
+       top-k.
 
     Probes that fail the guarantee re-run on the expanded ring / brute
     ladder (rare by construction; extra jobs only on that path).
-    ``materialize=False`` returns the fully lazy ladder plan and
-    leaves cache lifecycle to the caller (plan-inspection /
-    composition use).
+    ``exact=False`` returns the lazy ring-1 plan with no actions.
 
     ``res=None`` (default) derives the resolution from the candidate
     count via :func:`auto_res` — sourced from ``n_candidates`` if the
@@ -280,8 +282,7 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
     # job-vs-driver-planning). The count is joined exactly where its
     # value is first needed.
     _count_box: dict = {}
-    _count_th = None
-    if exact and materialize:
+    if exact:
         import threading
 
         from pyspark import inheritable_thread_target
@@ -294,19 +295,17 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
         _count_th.start()
 
     def _n_probes():
-        if _count_th is not None:
-            _count_th.join()
-            return _count_box["n"]
-        return None
+        _count_th.join()
+        return _count_box["n"]
 
     def _bcast_probes():
         # auto: broadcast the ring-exploded probe side when the probe
         # set is small (see BROADCAST_PROBE_MAX); callers with out-of-
-        # band knowledge (self-kNN, lazy plans) can force either way
+        # band knowledge (self-kNN, lazy plans) can force either way.
+        # The lazy exact=False plan has no probe count: AQE decides.
         if broadcast_probes is not None:
             return broadcast_probes
-        n = _n_probes()
-        return n is not None and n <= BROADCAST_PROBE_MAX
+        return exact and _n_probes() <= BROADCAST_PROBE_MAX
 
     p = probes.select(
         F.col(probe_id).alias("_pid"),
@@ -385,14 +384,6 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
             (F.col("_found") >= k) & (F.col("_kth") <= guard)
         ).select("_pid")
 
-    def exactness_split(ranked_r: DataFrame, p_sub: DataFrame, r: int):
-        """(provably-exact rows, probes needing a wider ring)."""
-        ok = ok_probes(ranked_r, r)
-        return (
-            ranked_r.join(ok, "_pid", "left_semi"),
-            p_sub.join(ok, "_pid", "left_anti"),
-        )
-
     ranked = ring_topk(p, 1)
     if not exact:
         return ranked.select(
@@ -400,41 +391,35 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
             F.col("dist2").alias(dist_col), "rank",
         )
 
-    # the top-k feeds every downstream consumer (stats, good, residue
-    # anti-join): persist — measured 3.5× faster to materialize than
-    # localCheckpoint (the RDD conversion there bypasses AQE and
-    # shuffle reuse); the finish() path eager-checkpoints the small
-    # result and unpersists, so no CacheManager entry outlives the call
-    cached = [ranked.persist()]
-
     def finish(parts_):
         out = parts_[0].select("_pid", "_cid", "dist2", "rank")
         for extra in parts_[1:]:
             out = out.unionByName(extra.select("_pid", "_cid", "dist2", "rank"))
-        out = out.select(
+        # checkpoint the (k × probes)-sized result; the scope then
+        # releases every intermediate cache — nothing outlives the call
+        return out.select(
             F.col("_pid").alias(probe_id), F.col("_cid").alias(cand_id),
             F.col("dist2").alias(dist_col), "rank",
-        )
-        if materialize:
-            # checkpoint the (k × probes)-sized result, then release
-            # every intermediate cache — nothing outlives the call
-            out = out.localCheckpoint(eager=True)
-            for df in cached:
-                df.unpersist()
-        return out
+        ).localCheckpoint(eager=True)
 
-    # driver-side short-circuit: the common case is an empty residue,
-    # and the expansion/brute branches each re-shuffle the candidate
-    # side even when their probe side is empty at runtime. The check
-    # rides the persist-materializing action itself: counting the
-    # provably-exact probes off the (small, persisted) top-k is ONE
-    # job, and n_ok == n_probes ⟺ empty residue (ok ⊆ probes; with
-    # duplicate probe ids the counts differ and we merely take the
-    # slower residue path, whose anti-join then comes up empty —
-    # correctness is unaffected). count(), not isEmpty(): isEmpty's
-    # incremental-limit execution probes partitions in sequential
-    # waves (measured 3.5× slower on an empty anti-join)
-    if materialize:
+    with CacheScope() as scope:
+        # the top-k feeds every downstream consumer (stats, good, residue
+        # anti-join): persist — measured 3.5× faster to materialize than
+        # localCheckpoint (the RDD conversion there bypasses AQE and
+        # shuffle reuse)
+        ranked = scope.persist(ranked)
+
+        # driver-side short-circuit: the common case is an empty residue,
+        # and the expansion/brute branches each re-shuffle the candidate
+        # side even when their probe side is empty at runtime. The check
+        # rides the persist-materializing action itself: counting the
+        # provably-exact probes off the (small, persisted) top-k is ONE
+        # job, and n_ok == n_probes ⟺ empty residue (ok ⊆ probes; with
+        # duplicate probe ids the counts differ and we merely take the
+        # slower residue path, whose anti-join then comes up empty —
+        # correctness is unaffected). count(), not isEmpty(): isEmpty's
+        # incremental-limit execution probes partitions in sequential
+        # waves (measured 3.5× slower on an empty anti-join)
         ok = ok_probes(ranked, 1)
         n_ok = ok.count()
         n_probes = _n_probes()
@@ -442,58 +427,50 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
             # every probe exact ⇒ the semi-join would keep every
             # ranked row — checkpoint the persisted top-k directly
             return finish([ranked])
-        good = ranked.join(ok, "_pid", "left_semi")
+        parts = [ranked.join(ok, "_pid", "left_semi")]
         residue = p.join(ok, "_pid", "left_anti")
-        n_residue = n_probes - n_ok
-    else:
-        good, residue = exactness_split(ranked, p, 1)
-        n_residue = None
-    parts = [good]
 
-    # ring expansion (SURVEY §7.2(c)): residue probes rerun at r=8. A
-    # residue probe means its 3×3 block held < k candidates or the
-    # k-th lay outside the guard — rerunning at ring-8 costs one 17²-
-    # cell explode per such probe, NOT a pass over all candidates.
-    # Chebyshev radius covering the whole grid: lon wraps after 2^(res-1)
-    # but lat only clamps, so full cover needs the complete y range
-    r_full = (1 << res) - 1
-    r2 = min(8, r_full)
-    # broadcast decision for the expansion round: BROADCAST_PROBE_MAX
-    # is sized for the ring-1 ×9 explode, so rescale the cap by this
-    # ring's (2r+1)² fan-out — a 15k-probe residue at r=8 explodes to
-    # ~4.3M rows, far past the hint's intent. An explicit caller
-    # broadcast_probes hint wins either way (the documented contract).
-    if broadcast_probes is not None:
-        bcast_r2 = broadcast_probes
-    elif n_residue is not None:
-        bcast_r2 = n_residue <= max(1, BROADCAST_PROBE_MAX * 9
-                                    // ((2 * r2 + 1) ** 2))
-    else:
-        bcast_r2 = _bcast_probes()  # lazy path: keep the ring-1 decision
-    ranked2 = ring_topk(residue, r2, bcast=bcast_r2)
-    if r2 >= r_full:
-        # the expanded ring already spans the whole grid: provably
-        # exact by construction — no brute pass exists in the plan
-        parts.append(ranked2)
-    else:
-        ranked2 = ranked2.persist()
-        cached.append(ranked2)
-        good2, residue2 = exactness_split(ranked2, residue, r2)
-        parts.append(good2)
-        # final residue: provably rare (k-th neighbor farther than 8
-        # cells → locally near-empty data); broadcast brute against
-        # all candidates bounds correctness, not the common cost
-        brute = (
-            F.broadcast(residue2)
-            .crossJoin(c.drop("_ccell"))
-            .where(F.col("_pid") != F.col("_cid"))
-            .withColumn("dist2", d2)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        )
-        parts.append(brute)
-
-    return finish(parts)
+        # ring expansion (SURVEY §7.2(c)): residue probes rerun at r=8. A
+        # residue probe means its 3×3 block held < k candidates or the
+        # k-th lay outside the guard — rerunning at ring-8 costs one 17²-
+        # cell explode per such probe, NOT a pass over all candidates.
+        # Chebyshev radius covering the whole grid: lon wraps after 2^(res-1)
+        # but lat only clamps, so full cover needs the complete y range
+        r_full = (1 << res) - 1
+        r2 = min(8, r_full)
+        # broadcast decision for the expansion round: BROADCAST_PROBE_MAX
+        # is sized for the ring-1 ×9 explode, so rescale the cap by this
+        # ring's (2r+1)² fan-out — a 15k-probe residue at r=8 explodes to
+        # ~4.3M rows, far past the hint's intent. An explicit caller
+        # broadcast_probes hint wins either way (the documented contract).
+        if broadcast_probes is not None:
+            bcast_r2 = broadcast_probes
+        else:
+            bcast_r2 = n_probes - n_ok <= max(1, BROADCAST_PROBE_MAX * 9
+                                              // ((2 * r2 + 1) ** 2))
+        ranked2 = ring_topk(residue, r2, bcast=bcast_r2)
+        if r2 >= r_full:
+            # the expanded ring already spans the whole grid: provably
+            # exact by construction — no brute pass exists in the plan
+            parts.append(ranked2)
+        else:
+            ranked2 = scope.persist(ranked2)
+            ok2 = ok_probes(ranked2, r2)
+            parts.append(ranked2.join(ok2, "_pid", "left_semi"))
+            residue2 = residue.join(ok2, "_pid", "left_anti")
+            # final residue: provably rare (k-th neighbor farther than 8
+            # cells → locally near-empty data); broadcast brute against
+            # all candidates bounds correctness, not the common cost
+            brute = (
+                F.broadcast(residue2)
+                .crossJoin(c.drop("_ccell"))
+                .where(F.col("_pid") != F.col("_cid"))
+                .withColumn("dist2", d2)
+                .withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+            )
+            parts.append(brute)
+        return finish(parts)
 
 
 def knn_join_brute(probes: DataFrame, candidates: DataFrame, k: int,

@@ -38,6 +38,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import CacheScope
+
 Q = 1_000_000  # quantization grain: integer millionths of the unit vector
 
 
@@ -147,10 +149,10 @@ def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
     if assign not in ("expr", "join", "numpy"):
         raise ValueError(
             f"assign must be 'expr', 'join' or 'numpy', got {assign!r}")
-    q = embeddings.select(
-        F.col(id_col).alias("_id"), _quantize_col(vec, dims).alias("qv")
-    ).persist()
-    try:
+    with CacheScope() as scope:
+        q = scope.persist(embeddings.select(
+            F.col(id_col).alias("_id"), _quantize_col(vec, dims).alias("qv")
+        ))
         seeds = (q.orderBy("_id").limit(k)
                  .select("_id", "qv").collect())
         cents: dict[int, list[int]] = {
@@ -176,8 +178,6 @@ def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
         return assigned.select(
             F.col("_id").alias(id_col), "cluster",
             (F.col("_qsim") / qn).alias("sim"))
-    finally:
-        q.unpersist()
 
 
 def _assign_expr(q: DataFrame, cents: dict[int, list[int]]) -> DataFrame:

@@ -34,6 +34,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import CacheScope
+
 N_PLANES = 8
 
 
@@ -237,8 +239,7 @@ def _drop_hot_buckets(bucketed: DataFrame, max_bucket: int | None) -> DataFrame:
 def lsh_topk(embeddings: DataFrame, probe_pred, k: int, dims: int,
              id_col: str = "vec_id", vec: str = "embedding",
              planes: int = N_PLANES, tables: int = 1,
-             max_bucket: int | None = None,
-             materialize: bool = True) -> DataFrame:
+             max_bucket: int | None = None) -> DataFrame:
     """ANN top-k across ``tables`` LSH hash tables (approximate:
     recall grows with tables, bucket size shrinks with planes). Same
     output shape as brute. At scale pass ``planes=planes_for(n)``,
@@ -249,85 +250,77 @@ def lsh_topk(embeddings: DataFrame, probe_pred, k: int, dims: int,
     The bucketed table feeds three consumers (hot-bucket stats, probe
     side, candidate side); left lazy, the Arrow bucket kernel runs
     once per consumer and each evaluation pays the per-stage Python
-    setup. ``materialize=True`` (default) persists the bucketed table,
-    eager-checkpoints the (k × probes)-sized result and unpersists —
-    the knn-style leak-free lifecycle (measured 1.85 → 1.03 s at
-    sf0.1; at corpus scale the bucketed table is the reusable index
-    artifact a real pipeline would persist anyway). ``False`` returns
-    the fully lazy plan (composition / plan-inspection use)."""
-    bucketed = _bucketed_tables(embeddings, vec, dims, planes, tables)
-    if materialize:
-        bucketed = bucketed.persist()
-    probes = bucketed.where(probe_pred).select(
-        F.col(id_col).alias("probe_id"), F.col(vec).alias("emb_a"),
-        _norm2(F.col(vec)).alias("_n2a"),
-        "_tbl", "_bkt",
-    )
-    cands = _drop_hot_buckets(bucketed, max_bucket).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec).alias("emb_b"),
-        _norm2(F.col(vec)).alias("_n2b"),
-        "_tbl", "_bkt",
-    )
-    pairs = probes.join(cands, ["_tbl", "_bkt"]).where(
-        F.col("probe_id") != F.col("neighbor_id")
-    )
-    if tables > 1:
-        # a pair colliding in several tables must score once — dedup
-        # with a partial-agg groupBy (cheaper than distinct on arrays)
-        pairs = pairs.groupBy("probe_id", "neighbor_id").agg(
-            F.first("emb_a").alias("emb_a"), F.first("emb_b").alias("emb_b"),
-            F.first("_n2a").alias("_n2a"), F.first("_n2b").alias("_n2b"),
+    setup. So the bucketed table is persisted, the (k × probes)-sized
+    result eager-checkpointed and the table released on return or
+    raise — the knn-style leak-free lifecycle (measured 1.85 → 1.03 s
+    at sf0.1; at corpus scale the bucketed table is the reusable index
+    artifact a real pipeline would persist anyway)."""
+    with CacheScope() as scope:
+        bucketed = scope.persist(
+            _bucketed_tables(embeddings, vec, dims, planes, tables))
+        probes = bucketed.where(probe_pred).select(
+            F.col(id_col).alias("probe_id"), F.col(vec).alias("emb_a"),
+            _norm2(F.col(vec)).alias("_n2a"),
+            "_tbl", "_bkt",
         )
-    scored = _cosine_prenorm(pairs)
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "rank")
-    )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        bucketed.unpersist()
-    return out
+        cands = _drop_hot_buckets(bucketed, max_bucket).select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec).alias("emb_b"),
+            _norm2(F.col(vec)).alias("_n2b"),
+            "_tbl", "_bkt",
+        )
+        pairs = probes.join(cands, ["_tbl", "_bkt"]).where(
+            F.col("probe_id") != F.col("neighbor_id")
+        )
+        if tables > 1:
+            # a pair colliding in several tables must score once — dedup
+            # with a partial-agg groupBy (cheaper than distinct on arrays)
+            pairs = pairs.groupBy("probe_id", "neighbor_id").agg(
+                F.first("emb_a").alias("emb_a"), F.first("emb_b").alias("emb_b"),
+                F.first("_n2a").alias("_n2a"), F.first("_n2b").alias("_n2b"),
+            )
+        scored = _cosine_prenorm(pairs)
+        w = Window.partitionBy("probe_id").orderBy(
+            F.col("cosine").desc(), F.col("neighbor_id").asc()
+        )
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("probe_id", "neighbor_id", "rank")
+            .localCheckpoint(eager=True)
+        )
 
 
 def embedding_near_dup_pairs(embeddings: DataFrame, dims: int,
                              threshold_pct: int = 99,
                              id_col: str = "vec_id", vec: str = "embedding",
                              planes: int = N_PLANES, tables: int = 1,
-                             max_bucket: int | None = None,
-                             materialize: bool = True) -> DataFrame:
+                             max_bucket: int | None = None) -> DataFrame:
     """Embedding-cosine near-dup pairs within LSH buckets:
     (id_a, id_b) with cosine ≥ threshold_pct/100, id_a < id_b.
     Multi-table + ``max_bucket`` scale controls as :func:`lsh_topk`,
-    and the same ``materialize`` lifecycle (the bucketed table feeds
-    both self-join sides plus the hot-bucket stats)."""
-    raw = _bucketed_tables(embeddings, vec, dims, planes, tables)
-    if materialize:
-        raw = raw.persist()
-    bucketed = _drop_hot_buckets(raw, max_bucket)
-    a = bucketed.select(F.col(id_col).alias("id_a"), F.col(vec).alias("emb_a"),
-                        _norm2(F.col(vec)).alias("_n2a"), "_tbl", "_bkt")
-    b = bucketed.select(F.col(id_col).alias("id_b"), F.col(vec).alias("emb_b"),
-                        _norm2(F.col(vec)).alias("_n2b"), "_tbl", "_bkt")
-    pairs = a.join(b, ["_tbl", "_bkt"]).where(F.col("id_a") < F.col("id_b"))
-    if tables > 1:
-        pairs = pairs.groupBy("id_a", "id_b").agg(
-            F.first("emb_a").alias("emb_a"), F.first("emb_b").alias("emb_b"),
-            F.first("_n2a").alias("_n2a"), F.first("_n2b").alias("_n2b"),
+    and the same persist → checkpoint → release lifecycle (the bucketed
+    table feeds both self-join sides plus the hot-bucket stats)."""
+    with CacheScope() as scope:
+        raw = scope.persist(
+            _bucketed_tables(embeddings, vec, dims, planes, tables))
+        bucketed = _drop_hot_buckets(raw, max_bucket)
+        a = bucketed.select(F.col(id_col).alias("id_a"), F.col(vec).alias("emb_a"),
+                            _norm2(F.col(vec)).alias("_n2a"), "_tbl", "_bkt")
+        b = bucketed.select(F.col(id_col).alias("id_b"), F.col(vec).alias("emb_b"),
+                            _norm2(F.col(vec)).alias("_n2b"), "_tbl", "_bkt")
+        pairs = a.join(b, ["_tbl", "_bkt"]).where(F.col("id_a") < F.col("id_b"))
+        if tables > 1:
+            pairs = pairs.groupBy("id_a", "id_b").agg(
+                F.first("emb_a").alias("emb_a"), F.first("emb_b").alias("emb_b"),
+                F.first("_n2a").alias("_n2a"), F.first("_n2b").alias("_n2b"),
+            )
+        return (
+            _cosine_prenorm(pairs)
+            .where(F.col("cosine") >= F.lit(threshold_pct) / F.lit(100.0))
+            .select("id_a", "id_b")
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-    out = (
-        _cosine_prenorm(pairs)
-        .where(F.col("cosine") >= F.lit(threshold_pct) / F.lit(100.0))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        raw.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------

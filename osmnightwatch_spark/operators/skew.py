@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
+from ..session import CacheScope
 
 
 def hot_cells(points: DataFrame, res: int, max_rows_per_cell: int,
@@ -61,33 +62,32 @@ def adaptive_cells(points: DataFrame, base_res: int, max_rows_per_cell: int,
     # bounded by data distinctness, and it carries only two longs per
     # cell), then per level an aggregate over THAT, collecting only
     # the hot ids (small: these are the city cells)
-    leaf_stats = (
-        C.attach_cell(points, max_res, lon=lon, lat=lat, out="_leaf")
-        .groupBy("_leaf")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
-    )
-    hot: set[int] = set()
-    for res in range(base_res, max_res):
-        lvl = (
-            leaf_stats.groupBy(
-                C.parent_col(F.col("_leaf"), max_res - res).alias("c")
-            )
-            .agg(F.sum("n").alias("n"))
-            .where(F.col("n") > max_rows_per_cell)
+    with CacheScope() as scope:
+        leaf_stats = scope.persist(
+            C.attach_cell(points, max_res, lon=lon, lat=lat, out="_leaf")
+            .groupBy("_leaf")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        over = [int(r.c) for r in lvl.collect()]
-        if res == base_res:
-            hot_now = set(over)
-        else:
-            # hereditary: only cells whose parent already split count
-            hot_now = {
-                x for x in over if int(C.parent_cell(np.array([x]))[0]) in hot
-            }
-        if not hot_now:
-            break
-        hot |= hot_now
-    leaf_stats.unpersist()
+        hot: set[int] = set()
+        for res in range(base_res, max_res):
+            lvl = (
+                leaf_stats.groupBy(
+                    C.parent_col(F.col("_leaf"), max_res - res).alias("c")
+                )
+                .agg(F.sum("n").alias("n"))
+                .where(F.col("n") > max_rows_per_cell)
+            )
+            over = [int(r.c) for r in lvl.collect()]
+            if res == base_res:
+                hot_now = set(over)
+            else:
+                # hereditary: only cells whose parent already split count
+                hot_now = {
+                    x for x in over if int(C.parent_cell(np.array([x]))[0]) in hot
+                }
+            if not hot_now:
+                break
+            hot |= hot_now
 
     # --- single-pass application: per-level conditional re-encode
     df = C.attach_cell(points, max_res, lon=lon, lat=lat, out="_leaf")

@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Arrow batch row count for JVM↔Python transfer, pinned against the
 # PAYLOAD row size, not the metadata row size: the images table carries
@@ -92,24 +92,55 @@ def get_spark(app: str = "osmnightwatch_spark", cores: int | None = None,
     return spark
 
 
-def free_local_checkpoint(df) -> bool:
-    """Release the block storage behind an eager ``localCheckpoint``.
+class CacheScope:
+    """Owns an operator's intermediate caches for one call.
 
-    ``DataFrame.unpersist()`` is a no-op for localCheckpoints — the
-    data lives in the checkpoint RDD's blocks, not the CacheManager,
-    and is otherwise only freed when GC collects the RDD handle
-    (measured: ``getPersistentRDDs`` keeps the entry after
-    ``df.unpersist()``; unpersisting the ``LogicalRDD``'s backing RDD
-    removes it). Iterative operators that supersede a checkpoint every
-    round (e.g. ``dedup_clusters``) call this to free the previous
-    round eagerly. Returns False when ``df`` isn't a plain
-    localCheckpoint frame (nothing freed).
+    ``persist`` caches an intermediate; ``checkpoint`` eager-
+    localCheckpoints one (iteration state that must cut lineage).
+    Leaving the ``with`` block releases every intermediate still held,
+    whether the call returned or raised, so no CacheManager entry or
+    checkpoint block outlives the operator. ``release`` frees one
+    early (a superseded round). The operator's own result is not
+    tracked: it eager-checkpoints that inside the block, before the
+    intermediates it reads are released.
+
+    ``DataFrame.unpersist()`` is a no-op for localCheckpoints: the data
+    lives in the checkpoint RDD's blocks, not the CacheManager, and is
+    otherwise only freed when GC collects the RDD handle (measured:
+    ``getPersistentRDDs`` keeps the entry after ``df.unpersist()``;
+    unpersisting the ``LogicalRDD``'s backing RDD removes it).
     """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return False
-        plan.rdd().unpersist(False)
-        return True
-    except Exception:
-        return False
+
+    def __init__(self) -> None:
+        self._held: list[tuple[DataFrame, bool]] = []
+
+    def __enter__(self) -> "CacheScope":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        while self._held:
+            self._free(*self._held.pop())
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._held.append((df, False))
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint(eager=True)
+        self._held.append((df, True))
+        return df
+
+    def release(self, df: DataFrame) -> None:
+        for i, (held, ckpt) in enumerate(self._held):
+            if held is df:
+                del self._held[i]
+                self._free(held, ckpt)
+                return
+
+    @staticmethod
+    def _free(df: DataFrame, ckpt: bool) -> None:
+        if ckpt:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        else:
+            df.unpersist()

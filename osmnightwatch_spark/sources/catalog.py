@@ -34,6 +34,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import CacheScope
+
 CURRENT = "CURRENT"
 
 
@@ -193,27 +195,22 @@ class Table:
         partition-sized scans.
         """
         # -- data write: once, immutable, collision-free ------------------
-        persisted = None
-        if cluster_by is not None:
-            from pyspark.sql import functions as F
+        with CacheScope() as scope:
+            if cluster_by is not None:
+                from pyspark.sql import functions as F
 
-            # repartitionByRange runs a boundary-sampling job over its
-            # child before the shuffle — persist the input so the (in
-            # the streaming sink, full-merge-sized) plan is computed
-            # once, not twice
-            persisted = df.persist()
-            df = persisted.repartitionByRange(
-                max(1, n_files), F.col(cluster_by)
-            ).sortWithinPartitions(cluster_by)
-        provisional = (self.current_snapshot() or 0) + 1
-        rel_dir = os.path.join(
-            "data", f"snap-{provisional}-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.root, rel_dir)
-        try:
+                # repartitionByRange runs a boundary-sampling job over its
+                # child before the shuffle — persist the input so the (in
+                # the streaming sink, full-merge-sized) plan is computed
+                # once, not twice
+                df = scope.persist(df).repartitionByRange(
+                    max(1, n_files), F.col(cluster_by)
+                ).sortWithinPartitions(cluster_by)
+            provisional = (self.current_snapshot() or 0) + 1
+            rel_dir = os.path.join(
+                "data", f"snap-{provisional}-{uuid.uuid4().hex[:8]}")
+            out_dir = os.path.join(self.root, rel_dir)
             df.write.mode("errorifexists").parquet(out_dir)
-        finally:
-            if persisted is not None:
-                persisted.unpersist()
         new_files = []
         for fn in sorted(os.listdir(out_dir)):
             if not fn.endswith(".parquet"):

@@ -232,10 +232,10 @@ def test_phash_guard_rejects_bad_hamming(spark):
         D.phash_near_dup_pairs(df, max_hamming=8, bands=8)
 
 
-def test_minhash_guard_plan_has_no_window(spark, docs):
+def test_minhash_guard_plan_has_no_window(spark, docs, pre_checkpoint):
     """The skew guard must be partial-agg + broadcast anti-join, not a
     window over the bucket key (VERDICT r01 'what's wrong' #2)."""
-    plan = (D.minhash_lsh_pairs(docs, "doc_id", materialize=False)
+    plan = (pre_checkpoint(D.minhash_lsh_pairs, docs, "doc_id")
             ._jdf.queryExecution().executedPlan().toString())
     assert "Window" not in plan
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan

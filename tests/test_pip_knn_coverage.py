@@ -155,7 +155,7 @@ def test_build_distributed_matches_serial(spark):
             np.testing.assert_array_equal(s, d)
 
 
-def test_knn_empty_neighborhood_ring_expansion(spark):
+def test_knn_empty_neighborhood_ring_expansion(spark, pre_checkpoint):
     """Probes whose 3×3 block is empty resolve via the ring-8
     expansion; when the expanded ring spans the whole grid the plan is
     provably exact with NO brute crossJoin node (VERDICT r01)."""
@@ -171,8 +171,8 @@ def test_knn_empty_neighborhood_ring_expansion(spark):
         "lon": rng.uniform(-170, -160, 5),
         "lat": rng.uniform(-80, -70, 5),
     }))
-    # materialize=False exposes the lazy plan for inspection
-    lazy = knn_join(probes, cands, k=3, res=3, materialize=False)
+    # the result plan knn_join checkpoints, read before the checkpoint
+    lazy = pre_checkpoint(knn_join, probes, cands, k=3, res=3)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     out = knn_join(probes, cands, k=3, res=3)  # grid 8 → ring 8 covers it

@@ -253,7 +253,7 @@ def test_tile_counts_plan_no_python(spark):
     # everything after the generator source is JVM-native
     assert "ArrowEvalPython" not in plan.split("MapInPandas")[0]
 
-def test_lsh_multitable_plan_shape(spark):
+def test_lsh_multitable_plan_shape(spark, pre_checkpoint):
     """Multi-table ANN plan: bucket equi-joins only (no cartesian), hot
     buckets removed via broadcast anti-join, pair dedup via partial-agg
     groupBy — the 10^12-row-safe shape (VERDICT r01 #1)."""
@@ -267,8 +267,8 @@ def test_lsh_multitable_plan_shape(spark):
         "vec_id": np.arange(500),
         "embedding": list(map(list, rng.normal(size=(500, 8)))),
     }))
-    out = lsh_topk(df, F.col("vec_id") % 50 == 0, k=3, dims=8,
-                   planes=5, tables=2, max_bucket=100, materialize=False)
+    out = pre_checkpoint(lsh_topk, df, F.col("vec_id") % 50 == 0, k=3,
+                         dims=8, planes=5, tables=2, max_bucket=100)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan

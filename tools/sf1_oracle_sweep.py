@@ -143,7 +143,7 @@ def clusters_fixpoint_sweep() -> bool:
     spark = get_spark("sf1-cc", cores=16)
     t0 = time.time()
     d = spark.read.parquet(f"{DST}/documents.parquet")
-    pairs = minhash_lsh_pairs(d, "doc_id").localCheckpoint(eager=True)
+    pairs = minhash_lsh_pairs(d, "doc_id")  # already eager-checkpointed
     lab = dedup_clusters(pairs, all_ids=d)
     la = lab.select(F.col("doc_id").alias("id_a"), F.col("keeper_id").alias("ka"))
     lb = lab.select(F.col("doc_id").alias("id_b"), F.col("keeper_id").alias("kb"))
