@@ -9,7 +9,9 @@ Spark-native two-phase plan:
 1. **Prepare** (driver, once per polygon set — the PreparedPolygon
    analog, :486,637): each polygon → quadtree cell covering with cells
    classified FULL (entirely inside) or BOUNDARY (edge passes through)
-   — ``functions.geometry.cover_polygon``.
+   — ``functions.geometry.cover_polygon`` — plus a band index: per
+   (polygon, leaf-resolution grid row) the polygon's edges whose
+   y-range overlaps that row.
 2. **Candidate pass** (the R-tree analog): points get a cell id via the
    *native* ``cell_col`` expression (whole-stage codegen, no Python),
    then equi-join the covering table on ``cell``. Catalyst picks the
@@ -17,16 +19,21 @@ Spark-native two-phase plan:
    the 10^12-row point side is never shuffled.
 3. **Refine**: points that hit a FULL cell are inside by construction —
    zero per-point geometry work. Only BOUNDARY-cell hits run the exact
-   ray-cast, vectorized in an Arrow-batched pandas UDF against a
-   broadcast of the packed polygon edge arrays.
+   ray-cast: they equi-join the band index on (polygon, grid row) and
+   are filtered by a native SQL ``aggregate`` over that row's edges —
+   bit-identical to ``geometry.points_in_edgesoup`` over the whole
+   polygon (an edge whose y-range misses the point's row adds no
+   crossing and cannot hold it), with no Python in the plan.
 
 Scale notes (100 TB / 10^12 rows):
-* the point side is touched by exactly one narrow projection + one
-  map-side join — no shuffle, no Python, unless refinement is needed;
+* the point side is touched by one narrow projection + map-side joins
+  — no shuffle and no Python anywhere in the plan;
 * refinement volume is proportional to the polygon *perimeter* measured
   in cells, not to the point count: finer covering resolution trades a
-  bigger broadcast for less Python refine work (``cover_res`` knob,
-  ``max_cells`` caps the broadcast);
+  bigger broadcast for less refine work (``cover_res`` knob,
+  ``max_cells`` caps the broadcast); per refined point the cost is the
+  edges of one grid row, not of the whole polygon, so polygons with
+  10^4–10^6 vertices stay cheap;
 * hot cells (cities) don't skew this join: broadcast join has no
   shuffle; for the ``shuffle`` strategy AQE skew-join splitting applies.
 """
@@ -37,6 +44,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,15 +61,25 @@ BOUNDARY = int(G.BOUNDARY)
 #: polygon tuple) — see the docstring there
 _BUILD_CACHE: dict = {}
 
+#: per-edge array columns of the band index (ray-cast inputs)
+_EDGE_COLS = ("_bx1", "_by1", "_bx2", "_by2", "_binv")
+
+#: degrees each edge's y-range is widened by before it is assigned to
+#: grid rows — the row of an in-range point already lies inside the
+#: exact span (the row expression is monotone), so this only guards
+#: against a last-ulp disagreement between numpy and the JVM
+_BAND_TOL = 1e-9
+
 
 @dataclass
 class PreparedPolygons:
-    """Driver-side prepared polygon set: covering table + packed edges."""
+    """Driver-side prepared polygon set: covering table + band index."""
 
     covering: pd.DataFrame          # polygon_id LONG, cell LONG, kind TINYINT
     edges: dict[int, tuple]         # polygon_id -> (x1, y1, x2, y2) float64 arrays
     res: int                        # leaf (finest) covering resolution
     min_res: int                    # coarsest resolution present in the covering
+    bands: pd.DataFrame             # polygon_id, _band, + _EDGE_COLS arrays
 
     @classmethod
     def build(cls, polygons: list[tuple[int, bytes]], res: int = 7,
@@ -74,7 +92,7 @@ class PreparedPolygons:
         session) would otherwise pay per call — measured ~0.6 s per
         flagship run at the 236-polygon fixture (guide §5: keep data
         work off the driver). The cache also carries the per-session
-        covering-DataFrame/refine-UDF memos across calls.
+        DataFrame memos across calls.
         """
         key = (res, max_cells,
                tuple((int(p), bytes(w)) for p, w in polygons))
@@ -97,7 +115,8 @@ class PreparedPolygons:
             "kind": np.concatenate(cov_kind) if cov_kind else np.empty(0, np.int8),
         })
         min_res = int((covering["cell"].to_numpy() >> 58).min()) if len(covering) else res
-        out = cls(covering=covering, edges=edges, res=res, min_res=min_res)
+        out = cls(covering=covering, edges=edges, res=res, min_res=min_res,
+                  bands=_edge_table(edges, res))
         if len(_BUILD_CACHE) >= 16:  # bounded: a handful of live sets
             _BUILD_CACHE.clear()
         _BUILD_CACHE[key] = out
@@ -115,9 +134,9 @@ class PreparedPolygons:
         country polygons with 10^6 vertices — and embarrassingly
         parallel, so it runs as ``mapInPandas`` over a (polygon_id,
         wkb) DataFrame; only the (polygon_id, cell, kind) covering
-        table is collected back. The packed edge arrays are parsed
-        driver-side (one linear vectorized WKB scan; they must live on
-        the driver anyway to become the refine UDF's broadcast).
+        table is collected back. The edge arrays are parsed driver-side
+        (one linear vectorized WKB scan; they must live on the driver
+        anyway to become the band index).
         Reference analog: the prepared-geometry cache,
         ``AdminCountPerCountryAnalyzer.cs:470-490``.
         """
@@ -153,159 +172,118 @@ class PreparedPolygons:
             edges[int(pid)] = (soup.x1, soup.y1, soup.x2, soup.y2)
         min_res = (int((covering["cell"].to_numpy() >> 58).min())
                    if len(covering) else res)
-        return cls(covering=covering, edges=edges, res=res, min_res=min_res)
+        return cls(covering=covering, edges=edges, res=res, min_res=min_res,
+                   bands=_edge_table(edges, res))
+
+    def _per_session(self, spark: SparkSession, name: str, make) -> DataFrame:
+        """``make()``, memoized per session: the prepared tables are
+        immutable and repeated pip_join calls (flagship, coverage, every
+        bench run) would otherwise pay the pandas→Arrow→JVM conversion
+        of the same table on every plan build (driver-side, measured
+        ~0.1 s of the per-run planning gap — guide §5 "the driver should
+        do almost no data work"). applicationId is in the key: build()
+        memoization makes prepared sets outlive sessions, and a
+        recycled id() alone could alias a dead session's DataFrame."""
+        memo = self.__dict__.setdefault("_session_memo", {})
+        key = (id(spark), spark.sparkContext.applicationId, name)
+        if key not in memo:
+            memo[key] = make()
+        return memo[key]
 
     def covering_df(self, spark: SparkSession) -> DataFrame:
-        # Memoized per session: the covering is immutable and repeated
-        # pip_join calls (flagship, coverage, every bench run) were
-        # paying the pandas→Arrow→JVM conversion of the same table on
-        # every plan build (driver-side, measured ~0.1 s of the per-run
-        # planning gap — guide §5 "the driver should do almost no data
-        # work"). The returned DataFrame is a LocalRelation, so reuse
-        # also lets Catalyst skip re-shipping the rows.
-        cache = getattr(self, "_cov_df_cache", None)
-        if cache is None:
-            cache = {}
-            object.__setattr__(self, "_cov_df_cache", cache)
-        # applicationId in the key: build() memoization makes prepared
-        # sets outlive sessions, and a recycled id() alone could alias
-        # a dead session's DataFrame
-        key = (id(spark), spark.sparkContext.applicationId)
-        if key not in cache:
-            schema = T.StructType([
-                T.StructField("polygon_id", T.LongType(), False),
-                T.StructField("cell", T.LongType(), False),
-                T.StructField("kind", T.IntegerType(), False),
-            ])
-            pdf = self.covering.copy()
-            pdf["kind"] = pdf["kind"].astype("int32")
-            cache[key] = spark.createDataFrame(pdf, schema=schema)
-        return cache[key]
+        """The covering as a LocalRelation (per-session memo)."""
+        schema = T.StructType([
+            T.StructField("polygon_id", T.LongType(), False),
+            T.StructField("cell", T.LongType(), False),
+            T.StructField("kind", T.IntegerType(), False),
+        ])
+        return self._per_session(spark, "covering", lambda: spark.createDataFrame(
+            self.covering.astype({"kind": "int32"}), schema=schema))
 
-    def refine_udf(self, spark: SparkSession):
-        """Memoized per session: the refine UDF wraps a broadcast of
-        the packed edge table — re-broadcasting the same immutable
-        arrays on every pip_join call is pure per-plan overhead."""
-        cache = getattr(self, "_refine_cache", None)
-        if cache is None:
-            cache = {}
-            object.__setattr__(self, "_refine_cache", cache)
-        key = (id(spark), spark.sparkContext.applicationId)
-        if key not in cache:
-            cache[key] = _refine_udf(spark, self.edges)
-        return cache[key]
+    def bands_df(self, spark: SparkSession) -> DataFrame:
+        """The band index as a LocalRelation (per-session memo)."""
+        return self._per_session(spark, "bands", lambda: spark.createDataFrame(
+            self.bands, schema=_EDGE_SCHEMA))
 
 
-def _pack_edge_table(edges: dict[int, tuple]):
-    """Flatten the per-polygon edge dict into one set of contiguous
-    arrays (driver-side, once per prepared set): sorted pid keys, per-
-    pid (offset, count) into concatenated edge arrays, plus the
-    derived quantities the ray cast needs (``inv_dy``, per-edge
-    bboxes) precomputed once instead of per batch per polygon."""
-    keys = np.array(sorted(edges.keys()), dtype=np.int64)
-    xs1, ys1, xs2, ys2 = [], [], [], []
-    counts = np.zeros(len(keys), dtype=np.int64)
-    for i, p in enumerate(keys.tolist()):
-        x1, y1, x2, y2 = edges[p]
-        counts[i] = len(x1)
-        xs1.append(np.asarray(x1, dtype=np.float64))
-        ys1.append(np.asarray(y1, dtype=np.float64))
-        xs2.append(np.asarray(x2, dtype=np.float64))
-        ys2.append(np.asarray(y2, dtype=np.float64))
-    cat = (lambda a: np.concatenate(a) if a else np.empty(0, np.float64))
-    x1, y1 = cat(xs1), cat(ys1)
-    x2, y2 = cat(xs2), cat(ys2)
-    offs = np.concatenate([[0], np.cumsum(counts[:-1])]).astype(np.int64)
+_EDGE_SCHEMA = T.StructType(
+    [T.StructField("polygon_id", T.LongType(), False),
+     T.StructField("_band", T.LongType(), False)]
+    + [T.StructField(c, T.ArrayType(T.DoubleType(), False), False)
+       for c in _EDGE_COLS]
+)
+
+
+def _edge_table(edges: dict[int, tuple], res: int | None) -> pd.DataFrame:
+    """Edge arrays grouped per (polygon_id, _band), built vectorized.
+
+    With ``res``, ``_band`` is the leaf grid row of ``res`` (the numpy
+    twin of the ``_grid_spark_sql`` latitude row ``attach_cell`` uses)
+    and each edge is listed in every row its y-range, widened by
+    ``_BAND_TOL``, overlaps. With ``res=None`` every polygon is one
+    group holding its whole edge list (``_band`` 0). Groups without
+    edges are never emitted: the ray cast iterates ``sequence(0,
+    size - 1)``, and ``sequence(0, -1)`` is ``[0, -1]``.
+    """
+    pids = np.fromiter(edges, dtype=np.int64, count=len(edges))
+    n_edges = np.array([len(edges[p][0]) for p in pids.tolist()], dtype=np.int64)
+    x1, y1, x2, y2 = (
+        np.concatenate([np.asarray(edges[p][k], np.float64) for p in pids.tolist()])
+        if len(pids) else np.empty(0, np.float64)
+        for k in range(4)
+    )
+    pid = np.repeat(pids, n_edges)
+    if res is None:
+        lo = hi = np.zeros(len(x1), np.int64)
+    else:
+        def row(y):
+            return C.grid_xy(np.zeros_like(y), y, res)[1]
+        lo = row(np.minimum(y1, y2) - _BAND_TOL)
+        hi = row(np.maximum(y1, y2) + _BAND_TOL)
+    span = hi - lo + 1
+    edge = np.repeat(np.arange(len(x1), dtype=np.int64), span)
+    band = lo[edge] + np.arange(len(edge)) - np.repeat(np.cumsum(span) - span, span)
+    order = np.lexsort((band, pid[edge]))
+    edge, band = edge[order], band[order]
+    gpid = pid[edge]
+    new = np.ones(len(edge), dtype=bool)
+    new[1:] = (gpid[1:] != gpid[:-1]) | (band[1:] != band[:-1])
+    start = np.flatnonzero(new)
+    offsets = pa.array(np.append(start, len(edge)), pa.int32())
+    # the same expression as points_in_edgesoup's inv_dy
     dy = y2 - y1
     with np.errstate(divide="ignore", invalid="ignore"):
         inv_dy = np.where(dy != 0, 1.0 / np.where(dy == 0, 1.0, dy), 0.0)
-    return {
-        "keys": keys, "offs": offs, "counts": counts,
-        "x1": x1, "y1": y1, "x2": x2, "y2": y2, "inv_dy": inv_dy,
-        "minx": np.minimum(x1, x2), "maxx": np.maximum(x1, x2),
-        "miny": np.minimum(y1, y2), "maxy": np.maximum(y1, y2),
-    }
+    out = pd.DataFrame({"polygon_id": gpid[start], "_band": band[start]})
+    for name, v in zip(_EDGE_COLS, (x1, y1, x2, y2, inv_dy)):
+        out[name] = pa.ListArray.from_arrays(offsets, pa.array(v[edge])).to_pandas()
+    return out
 
 
-# pair-space chunk for the vectorized ray cast: bounds the transient
-# (pairs × ~8 float64 temp arrays) to ~256 MB per concurrent batch
-_PAIR_CHUNK = 4_000_000
-
-
-def _refine_udf(spark: SparkSession, edges: dict[int, tuple]):
-    """pandas UDF (lon, lat, polygon_id) -> bool, vectorized ray cast.
-
-    The packed edge arrays ride a Spark broadcast variable — one copy
-    per executor, not per task closure. The kernel evaluates ALL
-    (point, edge-of-its-polygon) pairs of a batch in one vectorized
-    pass: the previous per-polygon Python loop paid ~16 small numpy
-    calls per polygon present in the batch (~200 polygons × 48 tasks
-    at bench scale — measured 0.7 s of pip_join's 1.2 s, ~31 µs/row
-    for 23k boundary rows; guide §4.2 "hand whole batches to
-    vectorized native libraries"). Arithmetic per pair is unchanged
-    (same expressions as ``points_in_edgesoup``, crossing counts are
-    integer parity), so results are bit-identical.
-    """
-    bc = spark.sparkContext.broadcast(_pack_edge_table(edges))
-
-    @F.pandas_udf(T.BooleanType())
-    def inside(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        n = len(lon)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        t = bc.value
-        lon_v = lon.to_numpy(dtype=np.float64)
-        lat_v = lat.to_numpy(dtype=np.float64)
-        pid_v = pid.to_numpy(dtype=np.int64)
-        slot = np.searchsorted(t["keys"], pid_v)
-        if (slot >= len(t["keys"])).any() or \
-                not np.array_equal(t["keys"][np.minimum(
-                    slot, len(t["keys"]) - 1)], pid_v):
-            raise KeyError("polygon_id not in prepared edge table")
-        # group rows by polygon so each row's edge range is contiguous
-        order = np.argsort(slot, kind="stable")
-        X = lon_v[order]
-        Y = lat_v[order]
-        cnt = t["counts"][slot[order]]
-        off = t["offs"][slot[order]]
-        total = int(cnt.sum())
-        if total == 0:
-            return pd.Series(out)
-        # pair space: row i contributes cnt[i] consecutive pairs whose
-        # edge indices are off[i] .. off[i]+cnt[i]-1 (grouped arange)
-        start = np.concatenate([[0], np.cumsum(cnt[:-1])]).astype(np.int64)
-        pair_row = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
-        pair_edge = (np.arange(total, dtype=np.int64)
-                     - np.repeat(start, cnt) + np.repeat(off, cnt))
-        crossings = np.zeros(len(cnt), dtype=np.int64)
-        on_edge = np.zeros(len(cnt), dtype=bool)
-        for s in range(0, total, _PAIR_CHUNK):
-            pr = pair_row[s:s + _PAIR_CHUNK]
-            pe = pair_edge[s:s + _PAIR_CHUNK]
-            Xp, Yp = X[pr], Y[pr]
-            x1, y1 = t["x1"][pe], t["y1"][pe]
-            x2, y2 = t["x2"][pe], t["y2"][pe]
-            straddle = ((y1 <= Yp) & (Yp < y2)) | ((y2 <= Yp) & (Yp < y1))
-            xi = x1 + (Yp - y1) * (x2 - x1) * t["inv_dy"][pe]
-            crossings += np.bincount(pr[straddle & (xi > Xp)],
-                                     minlength=len(cnt))
-            cross = (x2 - x1) * (Yp - y1) - (y2 - y1) * (Xp - x1)
-            oe = ((np.abs(cross) <= 1e-12)
-                  & (Xp >= t["minx"][pe]) & (Xp <= t["maxx"][pe])
-                  & (Yp >= t["miny"][pe]) & (Yp <= t["maxy"][pe]))
-            on_edge |= np.bincount(pr[oe], minlength=len(cnt)) > 0
-        res = np.where(on_edge, True, (crossings & 1).astype(bool))
-        out[order] = res
-        return pd.Series(out)
-
-    return inside
+def _raycast_sql(lon: str, lat: str) -> str:
+    """Spark-SQL twin of :func:`geometry.points_in_edgesoup` over one
+    row's ``_EDGE_COLS`` arrays: the same per-pair operations in the
+    same order (Java has no implicit FMA, so every per-pair boolean
+    equals numpy's). The accumulator keeps the crossing parity in bit 0
+    and the on-edge flag in bit 1, so ``!= 0`` is
+    ``on_edge OR odd crossings`` (boundary counts inside)."""
+    X, Y = f"`{lon}`", f"`{lat}`"
+    x1, y1, x2, y2, inv = (f"`{c}`[_k]" for c in _EDGE_COLS)
+    straddle = (f"((({y1} <= {Y}) AND ({Y} < {y2}))"
+                f" OR (({y2} <= {Y}) AND ({Y} < {y1})))")
+    xi = f"({x1} + ((({Y} - {y1}) * ({x2} - {x1})) * {inv}))"
+    cross = f"((({x2} - {x1}) * ({Y} - {y1})) - (({y2} - {y1}) * ({X} - {x1})))"
+    on_edge = (f"((abs({cross}) <= 1.0E-12D)"
+               f" AND ({X} >= least({x1}, {x2})) AND ({X} <= greatest({x1}, {x2}))"
+               f" AND ({Y} >= least({y1}, {y2})) AND ({Y} <= greatest({y1}, {y2})))")
+    step = f"((_acc ^ IF({straddle} AND ({xi} > {X}), 1, 0)) | IF({on_edge}, 2, 0))"
+    return (f"aggregate(sequence(0, size(`{_EDGE_COLS[0]}`) - 1), 0,"
+            f" (_acc, _k) -> {step}) != 0")
 
 
 def pip_join(points: DataFrame, prepared: PreparedPolygons,
              lon: str = "lon", lat: str = "lat",
-             strategy: str = "auto", broadcast_limit: int = 2_000_000,
-             single_pass: bool = False) -> DataFrame:
+             strategy: str = "auto", broadcast_limit: int = 2_000_000) -> DataFrame:
     """points ⋈ polygons containment join.
 
     Returns ``points`` columns + ``polygon_id`` (inner-join semantics:
@@ -313,21 +291,15 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
     polygon drop out). Boundary points count as inside (reference
     Contains ∨ Overlaps, ``AdminCountPerCountryAnalyzer.cs:515-518``).
 
-    ``single_pass`` picks which resource the plan spends twice:
-
-    * False (default): FULL hits and BOUNDARY hits are separate
-      branches unioned — the Python ray-cast runs **only** on boundary
-      rows, but the upstream (scan + join) is evaluated once per
-      branch. Right when the input is a cheap columnar scan (Python is
-      the scarce resource; rescanning pruned parquet is nearly free).
-    * True: one pass with an OR-filter — the upstream is scanned once,
-      but the refine UDF is evaluated on every joined row (wasted
-      ray-casts on FULL hits). Right when the upstream is expensive
-      and not re-computable (then prefer materializing upstream — see
-      ``images_ops.verified_flagship`` — or use this flag).
+    FULL hits and BOUNDARY hits are separate branches unioned: the ray
+    cast runs only on boundary rows, at the price of evaluating the
+    upstream (scan + cell encode) once per branch — nearly free for a
+    pruned columnar scan (materialize an expensive upstream first, as
+    ``images_ops.verified_flagship`` does).
     """
     spark = points.sparkSession
-    cov = prepared.covering_df(spark)
+    cov = prepared.covering_df(spark).withColumnRenamed("cell", "_cell")
+    bands = prepared.bands_df(spark)
     if strategy == "auto":
         strategy = "broadcast" if len(prepared.covering) <= broadcast_limit else "shuffle"
 
@@ -340,7 +312,7 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
     pts_leaf = C.attach_cell(points, prepared.res, lon=lon, lat=lat,
                              out="_leaf")
 
-    def with_chain(base: DataFrame, levels: list[int]) -> DataFrame:
+    def with_chain(levels: list[int]) -> DataFrame:
         """Attach ``_cell`` for exactly the given covering levels — an
         ancestor level with no covering cells can never match, so each
         branch explodes only the levels its covering actually holds
@@ -353,20 +325,41 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
             for lv in levels
         ]
         if len(exprs) == 1:
-            out = base.withColumn("_cell", F.expr(exprs[0]))
+            out = pts_leaf.withColumn("_cell", F.expr(exprs[0]))
         else:
-            out = base.withColumn(
+            out = pts_leaf.withColumn(
                 "_cell", F.explode(F.expr(f"array({', '.join(exprs)})"))
             )
         return out.drop("_leaf")
 
+    def refine(hits: DataFrame) -> DataFrame:
+        """Exact ray cast of BOUNDARY hits against the edges of their
+        polygon's grid row (no band row: no edge there, so outside)."""
+        band = hits.withColumn("_band", F.expr(
+            C._grid_spark_sql(f"`{lat}`", -90.0, 180.0, prepared.res)))
+        idx = F.broadcast(bands) if strategy == "broadcast" else bands
+        return (band.join(idx, ["polygon_id", "_band"])
+                .where(F.expr(_raycast_sql(lon, lat)))
+                .drop("_band", *_EDGE_COLS))
+
     cov_res = prepared.covering["cell"].to_numpy() >> 58
     cov_kind = prepared.covering["kind"].to_numpy()
-    all_levels = sorted({int(r) for r in np.unique(cov_res)})
-    pts = with_chain(pts_leaf, all_levels)
-    cov = cov.withColumnRenamed("cell", "_cell")
+
+    def levels(kind: int | None = None) -> list[int]:
+        sel = cov_res if kind is None else cov_res[cov_kind == kind]
+        return sorted({int(r) for r in np.unique(sel)}) or [prepared.res]
+
     if strategy == "broadcast":
-        joined = pts.join(F.broadcast(cov), "_cell")
+        # Split FULL hits (inside by construction — no ray cast) from
+        # BOUNDARY hits. Each branch scans the input separately anyway,
+        # so give each its own minimal ancestor chain (per-kind
+        # covering levels).
+        full_hits = with_chain(levels(FULL)).join(
+            F.broadcast(cov.where(F.col("kind") == F.lit(FULL))), "_cell"
+        )
+        boundary_hits = refine(with_chain(levels(BOUNDARY)).join(
+            F.broadcast(cov.where(F.col("kind") == F.lit(BOUNDARY))), "_cell"
+        ))
     else:
         # co-partition both sides on the cell key via the join's OWN
         # exchanges. Deliberately NO hand .repartition("_cell"): a
@@ -376,52 +369,25 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
         # skew mitigation a planted-city hot cell needs (measured:
         # with repartition the hot cell never splits; without it the
         # skew reader kicks in — pinned by the shuffle-PIP plan test).
-        joined = pts.join(cov, "_cell")
-
-    inside = prepared.refine_udf(spark)
-    if single_pass:
-        refined = joined.where(
-            (F.col("kind") == F.lit(FULL))
-            | inside(F.col(lon), F.col(lat), F.col("polygon_id"))
-        )
-        return refined.drop("_cell", "kind")
-    # Split FULL hits (inside by construction — never touch Python)
-    # from BOUNDARY hits (exact ray-cast refine). An OR-filter would
-    # run the UDF over every joined row; at scale FULL rows dominate.
-    # Each branch scans the input separately anyway, so give each its
-    # own minimal ancestor chain (per-kind covering levels).
-    if strategy == "broadcast":
-        full_levels = sorted({int(r) for r in np.unique(cov_res[cov_kind == FULL])})
-        bnd_levels = sorted({int(r) for r in np.unique(cov_res[cov_kind == BOUNDARY])})
-        full_hits = with_chain(pts_leaf, full_levels or [prepared.res]).join(
-            F.broadcast(cov.where(F.col("kind") == F.lit(FULL))), "_cell"
-        )
-        boundary_hits = with_chain(pts_leaf, bnd_levels or [prepared.res]).join(
-            F.broadcast(cov.where(F.col("kind") == F.lit(BOUNDARY))), "_cell"
-        ).where(inside(F.col(lon), F.col(lat), F.col("polygon_id")))
-    else:
+        joined = with_chain(levels()).join(cov, "_cell")
         full_hits = joined.where(F.col("kind") == F.lit(FULL))
-        boundary_hits = joined.where(F.col("kind") == F.lit(BOUNDARY)).where(
-            inside(F.col(lon), F.col(lat), F.col("polygon_id"))
-        )
+        boundary_hits = refine(joined.where(F.col("kind") == F.lit(BOUNDARY)))
     return full_hits.unionByName(boundary_hits).drop("_cell", "kind")
 
 
 def pip_join_brute(points: DataFrame, polygons: list[tuple[int, bytes]],
                    lon: str = "lon", lat: str = "lat") -> DataFrame:
     """Reference implementation for tests: every point ray-cast against
-    every polygon (no covering prefilter). O(points × polygons)."""
+    every edge of every polygon by pip_join's SQL kernel (no covering
+    prefilter, no bands). O(points × edges)."""
     spark = points.sparkSession
     edges = {}
     for pid, wkb in polygons:
         soup = G.EdgeSoup.from_wkb(wkb)
         edges[int(pid)] = (soup.x1, soup.y1, soup.x2, soup.y2)
-    pids = spark.createDataFrame(
-        pd.DataFrame({"polygon_id": list(edges.keys())}),
-        schema=T.StructType([T.StructField("polygon_id", T.LongType(), False)]),
-    )
-    inside = _refine_udf(spark, edges)
+    table = spark.createDataFrame(_edge_table(edges, None), schema=_EDGE_SCHEMA)
     return (
-        points.crossJoin(F.broadcast(pids))
-        .where(inside(F.col(lon), F.col(lat), F.col("polygon_id")))
+        points.crossJoin(F.broadcast(table))
+        .where(F.expr(_raycast_sql(lon, lat)))
+        .drop("_band", *_EDGE_COLS)
     )

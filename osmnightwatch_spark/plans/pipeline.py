@@ -6,13 +6,13 @@ H3-encode + PIP-join + tile-assign pipeline"): given the images table,
 1. derive the geotag from ``phash`` (native arithmetic, codegen'd);
 2. assign every image a hierarchical tile (native ``cell_col``);
 3. broadcast PIP join against the admin polygon set (prepared
-   covering; refine only on boundary cells);
+   covering; native band-index ray cast only on boundary cells);
 4. aggregate: per (admin polygon, tile) image counts — the engine's
    analog of the reference's per-country admin feature counts
    (``AdminCountPerCountryAnalyzer.cs:222-260``).
 
 The point side is never shuffled before the final aggregation, and the
-only Python touched at scale is the boundary-cell refine.
+plan holds no Python operator at all.
 """
 
 from __future__ import annotations

@@ -1,6 +1,8 @@
 """End-to-end admin validator, relation closure, multimodal image ops,
 structured streaming, and physical-plan quality assertions."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -240,8 +242,10 @@ def test_pip_join_plan_shape(spark):
     # the huge point side must join map-side (broadcast), never shuffle
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # geotag + cell encode stay native: only the boundary refine is Python
-    assert plan.count("ArrowEvalPython") == 1
+    # geotag, cell encode and the boundary refine are all native
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # the boundary branch's band-index join is map-side too
+    assert re.search(r"BroadcastHashJoin \[polygon_id#\d+L, _band#\d+L\]", plan)
 
 
 def test_tile_counts_plan_no_python(spark):
