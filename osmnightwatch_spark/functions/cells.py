@@ -17,13 +17,17 @@ shifts, so Catalyst keeps the whole ladder inside codegen):
 
 Three implementations share this spec and are cross-checked in tests:
 
-* :func:`cell_of` / :func:`decode_cell` — vectorized numpy (used inside
-  pandas UDFs and by the pure-python oracle);
-* :func:`cell_col` — native Spark ``Column`` expression (bitwise
-  magic-number interleave; stays inside whole-stage codegen, no Python
-  boundary in the hot encode path);
-* :func:`cell_sql` — the identical expression rendered as ANSI SQL for
-  the DuckDB correctness oracle.
+* :func:`cell_of` / :func:`decode_cell` / :func:`ring_neighbors` —
+  vectorized numpy (used inside pandas UDFs and as the pure-python
+  oracle);
+* :func:`attach_cell` / :func:`ring_cells_col` /
+  :func:`parent_spark_sql` — the Spark side, rendered as Spark-SQL
+  text over staged grid columns (whole-stage codegen, no Python
+  boundary in the hot encode path); :func:`grid_col` is the one
+  ``Column``-form helper, for callers whose input is a computed
+  ``Column``;
+* :func:`cell_sql` / :func:`parent_sql` — the same arithmetic as ANSI
+  SQL for the DuckDB correctness oracle.
 
 Semantics deliberately equirectangular (not an icosahedral H3 clone):
 the engine only needs hierarchical containment, equal-area-enough
@@ -155,54 +159,6 @@ def cell_bounds(cell):
 
 
 # ---------------------------------------------------------------------------
-# Spark-native column expression (stays in whole-stage codegen)
-# ---------------------------------------------------------------------------
-
-
-def _part1by1_col(c: "Column", bits: int = 32) -> "Column":
-    """Bit-interleave spread as a Column tree.
-
-    ``bits`` bounds the input value (< 2^bits): a spread level with
-    ``shift >= bits`` is the identity there (the shifted copy lands
-    entirely inside the level's mask-cleared zone), so it is skipped —
-    bit-identical results with a much smaller expression tree. Each
-    kept level duplicates the subtree below it, so the tree is
-    ~2^levels leaf refs: at a typical kNN res of 6, 3 levels (~8 refs)
-    instead of 5 (~32) — this Column tree is built 18× per ring-1 call
-    and driver-side analysis time was measurable (~1 s/plan) before
-    the trim.
-    """
-    for shift, mask in ((16, _M1), (8, _M2), (4, _M3), (2, _M4), (1, _M5)):
-        if bits <= shift:
-            continue
-        c = (c.bitwiseOR(F.shiftleft(c, shift))).bitwiseAND(F.lit(mask))
-    return c
-
-
-def _grid_col(v: "Column", lo: float, span: float, res: int) -> "Column":
-    n = 1 << res
-    g = F.floor((v + F.lit(float(-lo))) / F.lit(span) * F.lit(n)).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), g))
-
-
-def cell_col(lon: "Column", lat: "Column", res: int) -> "Column":
-    """Native (JVM, codegen'd) lon/lat → cell id — the hot encode path.
-
-    Identical semantics to :func:`cell_of`; no Python/Arrow boundary.
-    """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in 0..{MAX_RES}, got {res}")
-    x = _grid_col(lon, -180.0, 360.0, res)
-    y = _grid_col(lat, -90.0, 180.0, res)
-    return (
-        F.lit(res << _RES_SHIFT)
-        .bitwiseOR(_part1by1_col(x, res))
-        .bitwiseOR(F.shiftleft(_part1by1_col(y, res), 1))
-        .cast("long")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Spark-SQL text renderers (single F.expr call per expression)
 #
 # Building the interleave as chained Column calls costs one py4j round
@@ -218,7 +174,16 @@ def cell_col(lon: "Column", lat: "Column", res: int) -> "Column":
 
 
 def _part1by1_spark_sql(e: str, bits: int = 32) -> str:
-    """Spark-SQL text twin of :func:`_part1by1_col` (same skip rule)."""
+    """Spark-SQL twin of :func:`_part1by1` for inputs below ``2^bits``.
+
+    A spread level with ``shift >= bits`` is the identity there (the
+    shifted copy lands entirely inside the level's mask-cleared zone),
+    so it is skipped — bit-identical results with a much smaller
+    expression. Each kept level references the text below it twice, so
+    the expression is ~2^levels refs of ``e``: at a typical kNN res of
+    6, 3 levels (~8 refs) instead of 5 (~32). Pass ``e`` as a staged
+    column ref, never as the floor chain itself.
+    """
     for shift, mask in ((16, _M1), (8, _M2), (4, _M3), (2, _M4), (1, _M5)):
         if bits <= shift:
             continue
@@ -227,37 +192,54 @@ def _part1by1_spark_sql(e: str, bits: int = 32) -> str:
 
 
 def _grid_spark_sql(e: str, lo: float, span: float, res: int) -> str:
-    """Spark-SQL text twin of :func:`_grid_col` (same op order)."""
+    """Clamped grid index of ``e`` at ``res`` (same op order as
+    :func:`grid_xy` and :func:`grid_col`)."""
     n = 1 << res
     g = f"CAST(FLOOR(((({e}) + {float(-lo)!r}D) / {float(span)!r}D) * {n}) AS BIGINT)"
     return f"GREATEST(0L, LEAST({n - 1}L, {g}))"
 
 
-def cell_spark_sql(lon_expr: str, lat_expr: str, res: int) -> str:
-    """lon/lat → cell id as ONE Spark-SQL string (inline, no staging —
-    use :func:`attach_cell` when the input expressions are non-trivial
-    so the interleave references staged columns, not the floor chain)."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in 0..{MAX_RES}, got {res}")
-    x = _grid_spark_sql(lon_expr, -180.0, 360.0, res)
-    y = _grid_spark_sql(lat_expr, -90.0, 180.0, res)
+def cell_from_grid_spark_sql(gx: str, gy: str, res: int) -> str:
+    """Grid coordinates → cell id (Spark-SQL twin of
+    :func:`cell_from_xy`). ``gx`` / ``gy`` are staged column refs: the
+    interleave references each of them ~2^levels times."""
     return (
-        f"CAST((({res << _RES_SHIFT}L | {_part1by1_spark_sql(x, res)})"
-        f" | shiftleft({_part1by1_spark_sql(y, res)}, 1)) AS BIGINT)"
+        f"CAST((({res << _RES_SHIFT}L | {_part1by1_spark_sql(gx, res)})"
+        f" | shiftleft({_part1by1_spark_sql(gy, res)}, 1)) AS BIGINT)"
     )
 
 
 def parent_spark_sql(e: str, steps: int = 1) -> str:
-    """Spark-SQL text twin of :func:`parent_col` (same bit arithmetic)."""
+    """Spark-SQL twin of :func:`parent_cell` (same bit arithmetic)."""
     res = f"shiftrightunsigned({e}, {_RES_SHIFT})"
     morton = f"(({e}) & {(1 << _RES_SHIFT) - 1}L)"
     return (f"(shiftleft(({res} - {steps}), {_RES_SHIFT})"
             f" | shiftrightunsigned({morton}, {2 * steps}))")
 
 
+#: ``(lo, span)`` of each grid axis: ``grid_col(v, *LON, res)``
+LON = (-180.0, 360.0)
+LAT = (-90.0, 180.0)
+
+
+def grid_col(v: "Column", lo: float, span: float, res: int) -> "Column":
+    """Clamped grid index of ``v`` at ``res`` as a ``Column`` — the
+    Column form of :func:`_grid_spark_sql` (same op order, same
+    values).
+
+    The one Column-form twin kept: its callers index computed Columns
+    (a bbox corner widened by a radius, ``least(_x1, _x2) - r``; an
+    intersection's min corner) inside ``sequence`` / join conditions
+    and need the grid index only, never the interleave.
+    """
+    n = 1 << res
+    g = F.floor((v + F.lit(float(-lo))) / F.lit(span) * F.lit(n)).cast("long")
+    return F.greatest(F.lit(0), F.least(F.lit(n - 1), g))
+
+
 def attach_cell(df, res: int, lon: str = "lon", lat: str = "lat",
                 out: str = "cell"):
-    """``df`` + cell-id column — the preferred Spark-side encode.
+    """``df`` + cell-id column — the Spark-side encode.
 
     Materializes the grid coordinates as intermediate columns in their
     own projection so the bit-interleave (which references each
@@ -271,84 +253,75 @@ def attach_cell(df, res: int, lon: str = "lon", lat: str = "lat",
         raise ValueError(f"res must be in 0..{MAX_RES}, got {res}")
     gx, gy = f"__gx_{out}", f"__gy_{out}"
     stage = df.withColumns({
-        gx: F.expr(_grid_spark_sql(f"`{lon}`", -180.0, 360.0, res)),
-        gy: F.expr(_grid_spark_sql(f"`{lat}`", -90.0, 180.0, res)),
+        gx: F.expr(_grid_spark_sql(f"`{lon}`", *LON, res)),
+        gy: F.expr(_grid_spark_sql(f"`{lat}`", *LAT, res)),
     })
-    cell = (
-        f"CAST((({res << _RES_SHIFT}L | {_part1by1_spark_sql(gx, res)})"
-        f" | shiftleft({_part1by1_spark_sql(gy, res)}, 1)) AS BIGINT)"
-    )
-    return stage.withColumn(out, F.expr(cell)).drop(gx, gy)
+    return (stage.withColumn(out, F.expr(cell_from_grid_spark_sql(gx, gy, res)))
+            .drop(gx, gy))
 
 
-def ring1_cells_col(df, res: int, lon: str = "lon", lat: str = "lat",
-                    out: str = "ring1"):
-    """``df`` + array column of the 3×3 (ring-1) neighbor cell ids —
-    fully native (JVM, codegen), bit-identical to
-    ``ring_neighbors(cell_of(lon, lat, res), k=1)``: longitude wraps
+def ring_cells_col(df, res: int, r: int, lon: str = "lon", lat: str = "lat",
+                   out: str = "ring"):
+    """``df`` + array column of the (2r+1)² ring-``r`` neighbor cell
+    ids — fully native (JVM, codegen), element-for-element equal to
+    ``ring_neighbors(cell_of(lon, lat, res), k=r)``: longitude wraps
     (``pmod`` — Spark's ``%`` is truncated and would go negative at
     the antimeridian, numpy's is floored), latitude clamps at the
-    poles (duplicate ids possible there — callers dedup with
-    ``array_distinct``).
+    poles. Duplicate ids are possible at the poles and, once
+    ``2r + 1`` exceeds the grid width, from the longitude wrap —
+    callers dedup with ``array_distinct``.
 
-    Scale rationale: the kNN probe side explodes ×9 through this; at
-    self-kNN scale the probe table is the full corpus, so an Arrow
-    round-trip here would ship every probe row to Python and back.
-    Shifted grid coordinates are materialized as intermediate columns
-    (same CollapseProject trick as :func:`attach_cell`) so the 18
-    bit-interleave chains reference cheap column refs.
+    Scale rationale: the kNN probe side explodes ×(2r+1)² through
+    this; at self-kNN scale the probe table is the full corpus, so an
+    Arrow round-trip here would ship every probe row to Python and
+    back. Every layer is materialized as intermediate columns (same
+    CollapseProject trick as :func:`attach_cell`): grid coordinates,
+    then the 2r+1 shifted x and y indexes, then their 2(2r+1)
+    interleaves, so each ring cell is a tiny 3-way OR of column refs
+    rather than two inlined interleave chains — the plan tree shrinks
+    ~6× at r=1 and driver-side analysis with it.
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in 0..{MAX_RES}, got {res}")
+    if r < 0:
+        raise ValueError(f"r must be >= 0, got {r}")
     n = 1 << res
+    offs = range(-r, r + 1)
     # each layer is ONE withColumns call of F.expr strings (one Py4J
-    # round trip + one analysis pass per layer, not per operator —
-    # chained Column building was a measurable slice of the driver-side
-    # plan-build cost; see the Spark-SQL renderer note above)
-    gx, gy = f"__r1gx_{out}", f"__r1gy_{out}"
+    # round trip + one analysis pass per layer, not per operator)
+    tag = f"__r{r}"
+    gx, gy = f"{tag}gx_{out}", f"{tag}gy_{out}"
     stage = df.withColumns({
-        gx: F.expr(_grid_spark_sql(f"`{lon}`", -180.0, 360.0, res)),
-        gy: F.expr(_grid_spark_sql(f"`{lat}`", -90.0, 180.0, res)),
+        gx: F.expr(_grid_spark_sql(f"`{lon}`", *LON, res)),
+        gy: F.expr(_grid_spark_sql(f"`{lat}`", *LAT, res)),
     })
-    xcols = {d: f"__r1x{d + 1}_{out}" for d in (-1, 0, 1)}
-    ycols = {d: f"__r1y{d + 1}_{out}" for d in (-1, 0, 1)}
+    xcols = {d: f"{tag}x{d + r}_{out}" for d in offs}
+    ycols = {d: f"{tag}y{d + r}_{out}" for d in offs}
     shifted = {}
-    for d in (-1, 0, 1):
+    for d in offs:
         shifted[xcols[d]] = F.expr(f"pmod((`{gx}` + {d}), {n})")
         shifted[ycols[d]] = F.expr(
             f"GREATEST(0L, LEAST({n - 1}L, (`{gy}` + {d})))"
         )
     stage = stage.withColumns(shifted)
-    # stage the 6 interleave results as their own (multiply-referenced,
-    # non-cheap ⇒ CollapseProject-stable) columns so the 9 ring cells
-    # are tiny 3-way ORs, not 18 inlined interleave chains — the plan
-    # tree shrinks ~6× and driver-side analysis with it
-    ixcols = {d: f"__r1ix{d + 1}_{out}" for d in (-1, 0, 1)}
-    iycols = {d: f"__r1iy{d + 1}_{out}" for d in (-1, 0, 1)}
+    ixcols = {d: f"{tag}ix{d + r}_{out}" for d in offs}
+    iycols = {d: f"{tag}iy{d + r}_{out}" for d in offs}
     stage = stage.withColumns(
         {ixcols[d]: F.expr(_part1by1_spark_sql(f"`{xcols[d]}`", res))
-         for d in (-1, 0, 1)}
+         for d in offs}
         | {iycols[d]: F.expr(
             f"shiftleft({_part1by1_spark_sql(f'`{ycols[d]}`', res)}, 1)")
-           for d in (-1, 0, 1)}
+           for d in offs}
     )
     base = res << _RES_SHIFT
     cells = ", ".join(
         f"CAST((({base}L | `{ixcols[dx]}`) | `{iycols[dy]}`) AS BIGINT)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
+        for dx in offs
+        for dy in offs
     )
     return stage.withColumn(out, F.expr(f"array({cells})")).drop(
         gx, gy, *xcols.values(), *ycols.values(),
         *ixcols.values(), *iycols.values()
-    )
-
-
-def parent_col(cell: "Column", steps: int = 1) -> "Column":
-    res = F.shiftrightunsigned(cell, _RES_SHIFT)
-    morton = cell.bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
-    return F.shiftleft(res - steps, _RES_SHIFT).bitwiseOR(
-        F.shiftrightunsigned(morton, 2 * steps)
     )
 
 
@@ -358,7 +331,7 @@ def parent_col(cell: "Column", steps: int = 1) -> "Column":
 
 
 def parent_sql(e: str, steps: int = 1) -> str:
-    """``parent_col`` rendered as ANSI SQL (same bit arithmetic)."""
+    """:func:`parent_cell` rendered as ANSI SQL (same bit arithmetic)."""
     res = f"(({e}) >> {_RES_SHIFT})"
     morton = f"(({e}) & {(1 << _RES_SHIFT) - 1})"
     return f"((({res} - {steps}) << {_RES_SHIFT}) | ({morton} >> {2 * steps}))"

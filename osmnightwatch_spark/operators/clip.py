@@ -36,19 +36,10 @@ oracle's 9-dp string hash needs no tolerance.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
-from .overlay import _gx, _gy
-
-
-def _cell_from_gxgy(gx: Column, gy: Column, res: int) -> Column:
-    return (
-        F.lit(res << C._RES_SHIFT).cast("long")
-        .bitwiseOR(C._part1by1_col(gx))
-        .bitwiseOR(F.shiftleft(C._part1by1_col(gy), 1))
-    )
 
 
 def clip_segments_to_tiles(segs: DataFrame, res: int,
@@ -79,10 +70,12 @@ def clip_segments_to_tiles(segs: DataFrame, res: int,
     covered = (
         s.select(
             "*",
-            F.explode(F.sequence(_gx(F.least("_x1", "_x2"), res),
-                                 _gx(F.greatest("_x1", "_x2"), res))).alias("_gx"),
-            F.sequence(_gy(F.least("_y1", "_y2"), res),
-                       _gy(F.greatest("_y1", "_y2"), res)).alias("_gys"),
+            F.explode(F.sequence(
+                C.grid_col(F.least("_x1", "_x2"), *C.LON, res),
+                C.grid_col(F.greatest("_x1", "_x2"), *C.LON, res))).alias("_gx"),
+            F.sequence(
+                C.grid_col(F.least("_y1", "_y2"), *C.LAT, res),
+                C.grid_col(F.greatest("_y1", "_y2"), *C.LAT, res)).alias("_gys"),
         )
         .select("*", F.explode("_gys").alias("_gy"))
         .drop("_gys")
@@ -127,7 +120,8 @@ def clip_segments_to_tiles(segs: DataFrame, res: int,
         .where(F.col("_t1") > F.col("_t0"))
         .select(
             "seg_id",
-            _cell_from_gxgy(F.col("_gx"), F.col("_gy"), res).alias("tile"),
+            F.expr(C.cell_from_grid_spark_sql("`_gx`", "`_gy`", res))
+            .alias("tile"),
             (F.col("_x1") + F.col("_t0") * dx).alias("cx1"),
             (F.col("_y1") + F.col("_t0") * dy).alias("cy1"),
             (F.col("_x1") + F.col("_t1") * dx).alias("cx2"),

@@ -51,9 +51,8 @@ def colocation_pairs(points: DataFrame, res: int, window_s: int,
     buckets are recoverable via :func:`hot_buckets`).
     """
     b = (
-        points.select(
-            F.col(entity).alias("_e"),
-            C.cell_col(F.col(lon), F.col(lat), res).alias("_cell"),
+        C.attach_cell(points, res, lon=lon, lat=lat, out="_cell").select(
+            F.col(entity).alias("_e"), "_cell",
             F.floor(F.unix_timestamp(F.col(ts)) / F.lit(int(window_s)))
             .cast("long").alias("_w"),
         )
@@ -86,9 +85,8 @@ def hot_buckets(points: DataFrame, res: int, window_s: int,
     window, n_entities)`` — the "report, don't silently truncate"
     companion (a dense bucket is an EVENT, not noise)."""
     return (
-        points.select(
-            F.col(entity).alias("_e"),
-            C.cell_col(F.col(lon), F.col(lat), res).alias("cell"),
+        C.attach_cell(points, res, lon=lon, lat=lat, out="_cell").select(
+            F.col(entity).alias("_e"), F.col("_cell").alias("cell"),
             F.floor(F.unix_timestamp(F.col(ts)) / F.lit(int(window_s)))
             .cast("long").alias("window"),
         )

@@ -41,7 +41,7 @@ def observed_coverage(points: DataFrame, prepared: PreparedPolygons,
     # encode once at fine_res; the tile is a pure bit-shift parent
     enriched = C.attach_cell(hits, fine_res, lon=lon, lat=lat, out="fine_cell")
     enriched = enriched.withColumn(
-        "tile", C.parent_col(F.col("fine_cell"), fine_res - tile_res)
+        "tile", F.expr(C.parent_spark_sql("`fine_cell`", fine_res - tile_res))
     )
     return (
         enriched.groupBy("tile", "polygon_id")

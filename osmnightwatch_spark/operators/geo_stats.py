@@ -181,9 +181,8 @@ def stay_points(points: DataFrame, res: int = 6, gap_s: int = 3600,
     from ..functions import cells as C
 
     w = Window.partitionBy(entity).orderBy(ts, tiebreak)
-    cells = points.select(
-        F.col(entity), F.col(ts), F.col(tiebreak),
-        C.cell_col(F.col(lon), F.col(lat), res).alias("_cell"),
+    cells = C.attach_cell(points, res, lon=lon, lat=lat, out="_cell").select(
+        F.col(entity), F.col(ts), F.col(tiebreak), "_cell",
         F.unix_timestamp(F.col(ts)).alias("_t"),
     )
     flagged = cells.select(
@@ -329,11 +328,11 @@ def hotspots(points: DataFrame, res: int = 4,
     """
     n = 1 << res
     m = n * n
-    from ..functions.cells import _grid_col
+    from ..functions import cells as C
 
     counts = (
-        points.select(_grid_col(F.col(lon), -180.0, 360.0, res).alias("gx"),
-                      _grid_col(F.col(lat), -90.0, 180.0, res).alias("gy"))
+        points.select(C.grid_col(F.col(lon), *C.LON, res).alias("gx"),
+                      C.grid_col(F.col(lat), *C.LAT, res).alias("gy"))
         .groupBy("gx", "gy").agg(F.count(F.lit(1)).alias("n"))
     )
     stats = counts.agg(

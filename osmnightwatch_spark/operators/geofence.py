@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .overlay import _gx, _gy
+from ..functions import cells as C
 
 
 def geofence_transitions(points: DataFrame, fences: DataFrame, res: int = 4,
@@ -81,18 +81,20 @@ def geofence_transitions(points: DataFrame, fences: DataFrame, res: int = 4,
         )
         .select(
             "*",
-            F.explode(F.sequence(_gx(F.col("lon0"), res),
-                                 _gx(F.col("lon1"), res))).alias("_gx"),
-            F.sequence(_gy(F.col("lat0"), res),
-                       _gy(F.col("lat1"), res)).alias("_gys"),
+            F.explode(F.sequence(
+                C.grid_col(F.col("lon0"), *C.LON, res),
+                C.grid_col(F.col("lon1"), *C.LON, res))).alias("_gx"),
+            F.sequence(
+                C.grid_col(F.col("lat0"), *C.LAT, res),
+                C.grid_col(F.col("lat1"), *C.LAT, res)).alias("_gys"),
         )
         .select("*", F.explode("_gys").alias("_gy"))
         .drop("_gys")
     )
 
     sightings = (
-        pts.withColumn("_gx", _gx(F.col("_px"), res))
-        .withColumn("_gy", _gy(F.col("_py"), res))
+        pts.withColumn("_gx", C.grid_col(F.col("_px"), *C.LON, res))
+        .withColumn("_gy", C.grid_col(F.col("_py"), *C.LAT, res))
         .join(covered, ["_gx", "_gy"])
         .where((F.col("_px") >= F.col("lon0")) & (F.col("_px") <= F.col("lon1"))
                & (F.col("_py") >= F.col("lat0")) & (F.col("_py") <= F.col("lat1")))

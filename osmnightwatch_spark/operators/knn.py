@@ -12,17 +12,19 @@ Exact in two rounds (the classic filter-and-refine kNN):
 
 1. **Candidate round** — candidates bucketed by cell at ``res``
    (native encode); probes explode to their own + ring-1 neighbor
-   cells (a pandas UDF computes the 9 neighbor ids — ring math needs
-   de-interleave — then ``explode``). Equi-join on cell, per-probe
+   cells (``cells.ring_cells_col``: the 9 neighbor ids as one native
+   array expression, then ``explode``). Equi-join on cell, per-probe
    top-k via ``row_number`` window.
 2. **Guarantee check** — a probe's result is provably exact iff its
    k-th distance ≤ its guaranteed radius (distance from the probe to
    the edge of its (2r+1)×(2r+1) cell block: everything outside the
    block is farther than that radius). Probes that fail (or found < k
-   candidates) re-run on an expanded ring (r=8); if that ring already
-   spans the whole grid the expansion is itself provably exact and no
-   brute pass exists in the plan. Only at fine resolutions does a
-   (provably tiny) final residue fall back to broadcast brute-force.
+   candidates) re-run on an expanded ring (r=8, the same native ring
+   generator: no round of the ladder starts a Python worker); if that
+   ring already spans the whole grid the expansion is itself provably
+   exact and no brute pass exists in the plan. Only at fine
+   resolutions does a (provably tiny) final residue fall back to
+   broadcast brute-force.
 
 Scale: round 1 shuffles candidates once by cell and probes ×9; the
 window partitions by probe_id (no hot key — each probe is its own
@@ -35,25 +37,11 @@ pass over every candidate.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import cells as C
 from ..session import CacheScope
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _ring_cells(cell: pd.Series, r: pd.Series) -> pd.Series:
-    """Chebyshev ring-r cell ids per probe cell — one vectorized
-    ``ring_neighbors`` call + a single C-level ``tolist`` (no per-row
-    Python); pole-clamp duplicates are removed JVM-side with
-    ``array_distinct`` by the caller."""
-    ring = C.ring_neighbors(cell.to_numpy(dtype=np.int64), k=int(r.iloc[0]))
-    return pd.Series(ring.tolist())
 
 
 def _dist2(plon, plat, clon, clat):
@@ -327,26 +315,14 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
     w = Window.partitionBy("_pid").orderBy(F.col("dist2").asc(), F.col("_cid").asc())
 
     def ring_topk(p_sub: DataFrame, r: int, bcast: bool | None = None) -> DataFrame:
-        if r == 1:
-            # common round: fully native 3×3 ring (no Python anywhere
-            # in the plan) — at self-kNN scale the probe side is the
-            # whole corpus and an Arrow round-trip here would be the
-            # dominant transfer
-            pc = C.ring1_cells_col(p_sub, res, lon="_plon", lat="_plat",
-                                   out="_ring")
-            exploded = pc.withColumn(
-                "_ccell", F.explode(F.array_distinct(F.col("_ring")))
-            ).drop("_ring")
-        else:
-            # expansion rounds run on the (provably small) residue —
-            # the vectorized ring UDF handles arbitrary r there
-            pc = C.attach_cell(p_sub, res, lon="_plon", lat="_plat",
-                               out="_pcell")
-            exploded = pc.withColumn(
-                "_ccell",
-                F.explode(F.array_distinct(_ring_cells(F.col("_pcell"),
-                                                       F.lit(r)))),
-            ).drop("_pcell")
+        # fully native (2r+1)² ring (no Python anywhere in the plan) —
+        # at self-kNN scale the ring-1 probe side is the whole corpus
+        # and an Arrow round-trip here would be the dominant transfer
+        pc = C.ring_cells_col(p_sub, res, r, lon="_plon", lat="_plat",
+                              out="_ring")
+        exploded = pc.withColumn(
+            "_ccell", F.explode(F.array_distinct(F.col("_ring")))
+        ).drop("_ring")
         if bcast is None:
             # resolved as late as possible: joins the overlapped
             # probe-count thread only once the plan above is built

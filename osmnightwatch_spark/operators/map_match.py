@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .overlay import _gx, _gy
+from ..functions import cells as C
 from .range_join import res_for_radius
 
 
@@ -61,7 +61,8 @@ def map_match(points: DataFrame, segments: DataFrame, radius: float,
     pts = points.select(
         F.col(point_id).alias("point_id"),
         F.col(lon).alias("_px"), F.col(lat).alias("_py"),
-        _gx(F.col(lon), res).alias("_gx"), _gy(F.col(lat), res).alias("_gy"),
+        C.grid_col(F.col(lon), *C.LON, res).alias("_gx"),
+        C.grid_col(F.col(lat), *C.LAT, res).alias("_gy"),
     )
     segs = (
         segments.select(
@@ -72,11 +73,13 @@ def map_match(points: DataFrame, segments: DataFrame, radius: float,
         .select(
             "*",
             F.explode(F.sequence(
-                _gx(F.least("_x1", "_x2") - F.lit(r), res),
-                _gx(F.greatest("_x1", "_x2") + F.lit(r), res))).alias("_gx"),
+                C.grid_col(F.least("_x1", "_x2") - F.lit(r), *C.LON, res),
+                C.grid_col(F.greatest("_x1", "_x2") + F.lit(r), *C.LON, res),
+            )).alias("_gx"),
             F.sequence(
-                _gy(F.least("_y1", "_y2") - F.lit(r), res),
-                _gy(F.greatest("_y1", "_y2") + F.lit(r), res)).alias("_gys"),
+                C.grid_col(F.least("_y1", "_y2") - F.lit(r), *C.LAT, res),
+                C.grid_col(F.greatest("_y1", "_y2") + F.lit(r), *C.LAT, res),
+            ).alias("_gys"),
         )
         .select("*", F.explode("_gys").alias("_gy"))
         .drop("_gys")

@@ -36,6 +36,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import cells as C
+
 
 def res_for_extent(avg_extent_deg: float) -> int:
     """Coarsest grid whose cells are no finer than the average rect
@@ -44,18 +46,6 @@ def res_for_extent(avg_extent_deg: float) -> int:
     if avg_extent_deg <= 0:
         raise ValueError(f"extent must be > 0, got {avg_extent_deg}")
     return max(0, min(16, int(math.floor(math.log2(180.0 / avg_extent_deg)))))
-
-
-def _gx(col, res: int):
-    n = 1 << res
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(
-        (col + F.lit(180.0)) / F.lit(360.0) * n))).cast("long")
-
-
-def _gy(col, res: int):
-    n = 1 << res
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(
-        (col + F.lit(90.0)) / F.lit(180.0) * n))).cast("long")
 
 
 def rect_overlay_join(a: DataFrame, b: DataFrame, res: int = 4,
@@ -74,10 +64,12 @@ def rect_overlay_join(a: DataFrame, b: DataFrame, res: int = 4,
                 F.col(idc),
                 F.col("lon0").alias(f"{p}lon0"), F.col("lon1").alias(f"{p}lon1"),
                 F.col("lat0").alias(f"{p}lat0"), F.col("lat1").alias(f"{p}lat1"),
-                F.explode(F.sequence(_gx(F.col("lon0"), res),
-                                     _gx(F.col("lon1"), res))).alias("_gx"),
-                F.sequence(_gy(F.col("lat0"), res),
-                           _gy(F.col("lat1"), res)).alias("_gys"),
+                F.explode(F.sequence(
+                    C.grid_col(F.col("lon0"), *C.LON, res),
+                    C.grid_col(F.col("lon1"), *C.LON, res))).alias("_gx"),
+                F.sequence(
+                    C.grid_col(F.col("lat0"), *C.LAT, res),
+                    C.grid_col(F.col("lat1"), *C.LAT, res)).alias("_gys"),
             )
             .select(idc, f"{p}lon0", f"{p}lon1", f"{p}lat0", f"{p}lat1",
                     "_gx", F.explode("_gys").alias("_gy"))
@@ -94,8 +86,8 @@ def rect_overlay_join(a: DataFrame, b: DataFrame, res: int = 4,
         .where((ilon1 > ilon0) & (ilat1 > ilat0)
                # owner-cell dedup: emit only from the intersection's
                # min-corner cell (present in both covers by construction)
-               & (F.col("_gx") == _gx(ilon0, res))
-               & (F.col("_gy") == _gy(ilat0, res)))
+               & (F.col("_gx") == C.grid_col(ilon0, *C.LON, res))
+               & (F.col("_gy") == C.grid_col(ilat0, *C.LAT, res)))
         .select(a_id, b_id,
                 ilon0.alias("ilon0"), ilon1.alias("ilon1"),
                 ilat0.alias("ilat0"), ilat1.alias("ilat1"),

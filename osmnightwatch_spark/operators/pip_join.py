@@ -13,7 +13,7 @@ Spark-native two-phase plan:
    (polygon, leaf-resolution grid row) the polygon's edges whose
    y-range overlaps that row.
 2. **Candidate pass** (the R-tree analog): points get a cell id via the
-   *native* ``cell_col`` expression (whole-stage codegen, no Python),
+   *native* ``attach_cell`` encode (whole-stage codegen, no Python),
    then equi-join the covering table on ``cell``. Catalyst picks the
    physical join; for dim-sized polygon sets we force ``broadcast`` so
    the 10^12-row point side is never shuffled.
@@ -307,8 +307,8 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
     # interiors, fine BOUNDARY rims) and its cells are disjoint per
     # polygon, so a point matches at most one covering cell per polygon.
     # Join the point's whole ancestor chain [min_res..res] — a native
-    # array of parent_col shifts, exploded (~res-min_res+1 narrow rows,
-    # no Python, no shuffle under the broadcast strategy).
+    # array of parent_spark_sql shifts, exploded (~res-min_res+1 narrow
+    # rows, no Python, no shuffle under the broadcast strategy).
     pts_leaf = C.attach_cell(points, prepared.res, lon=lon, lat=lat,
                              out="_leaf")
 

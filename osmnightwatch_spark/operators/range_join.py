@@ -86,7 +86,7 @@ def range_join(left: DataFrame, right: DataFrame, radius: float,
     res = res_for_radius(radius)
     extra = [F.col(c) for c in right_extra]
     if explode_left:
-        l = C.ring1_cells_col(left, res, lon=lon, lat=lat, out="_ring")
+        l = C.ring_cells_col(left, res, 1, lon=lon, lat=lat, out="_ring")
         l = l.select(
             F.col(left_id), F.col(lon).alias("_llon"), F.col(lat).alias("_llat"),
             F.explode(F.array_distinct("_ring")).alias("_cell"),
@@ -100,7 +100,7 @@ def range_join(left: DataFrame, right: DataFrame, radius: float,
             F.col(left_id), F.col(lon).alias("_llon"),
             F.col(lat).alias("_llat"), "_cell",
         )
-        r = C.ring1_cells_col(right, res, lon=lon, lat=lat, out="_ring")
+        r = C.ring_cells_col(right, res, 1, lon=lon, lat=lat, out="_ring")
         r = r.select(
             F.col(right_id), F.col(lon).alias("_rlon"), F.col(lat).alias("_rlat"),
             F.explode(F.array_distinct("_ring")).alias("_cell"), *extra,

@@ -38,16 +38,8 @@ from pyspark.sql import functions as F
 from ..functions import cells as C
 
 
-def _pixel_bits_col(m, depth: int):
-    """Low ``2·depth`` Morton bits → pixel offset (compact even bits)."""
-    out = m.bitwiseAND(F.lit(1))
-    for i in range(1, depth):
-        out = out.bitwiseOR(
-            F.shiftrightunsigned(m, i).bitwiseAND(F.lit(1 << i)))
-    return out
-
-
 def _pixel_bits_sql(m: str, depth: int) -> str:
+    """Low ``2·depth`` Morton bits → pixel offset (compact even bits)."""
     parts = [f"(({m}) & 1)"]
     for i in range(1, depth):
         parts.append(f"((({m}) >> {i}) & {1 << i})")
@@ -60,7 +52,7 @@ def density_grid(points: DataFrame, res: int, depth: int = 4,
     grid of every non-empty res-``res`` tile (px east, py north)."""
     # attach_cell (staged grid cols + one expr string per layer) keeps
     # the floor chain out of the interleave refs and the plan build off
-    # the py4j chatter path — same cell ids as the inline cell_col
+    # the py4j chatter path
     fine = C.attach_cell(points.select(F.col(lon), F.col(lat)),
                          res + depth, lon=lon, lat=lat, out="_fc") \
         .select("_fc")

@@ -337,9 +337,8 @@ def geo_balanced_sample(df: DataFrame, res: int, per_cell: int,
     h = F.md5(F.col(id_col).cast("string"))
     w = Window.partitionBy("_cell").orderBy("_h", id_col)
     return (
-        df.select(F.col(id_col),
-                  C.cell_col(F.col(lon), F.col(lat), res).alias("_cell"),
-                  h.alias("_h"))
+        C.attach_cell(df, res, lon=lon, lat=lat, out="_cell")
+        .select(F.col(id_col), "_cell", h.alias("_h"))
         .withColumn("cell_rank", F.row_number().over(w))
         .where(F.col("cell_rank") <= per_cell)
         .select(id_col, F.col("_cell").alias("cell"),

@@ -40,20 +40,16 @@ def snap_simplify(points: DataFrame, res: int,
     line's start exactly; the end survives unless it shares the last
     cell — the standard render-grid semantics)."""
     n = 1 << res
-    snapped = points.select(
-        F.col(way_col), F.col(seq_col).alias("_seq"),
-        C.cell_col(F.col(lon), F.col(lat), res).alias("_cell"),
-        # cell-center coordinates re-derived from the grid indices —
-        # pure arithmetic on the same floor()ed grid coords, with the
-        # SAME clamp cell_col applies: a boundary vertex (lon=180,
-        # lat=90) floors to n, which would emit a center outside the
-        # valid range, inconsistent with its dedup cell.
-        ((F.least(F.lit(n - 1), F.greatest(
-            F.lit(0), F.floor((F.col(lon) + 180.0) / 360.0 * n)))
-          + 0.5) / n * 360.0 - 180.0).alias("_clon"),
-        ((F.least(F.lit(n - 1), F.greatest(
-            F.lit(0), F.floor((F.col(lat) + 90.0) / 180.0 * n)))
-          + 0.5) / n * 180.0 - 90.0).alias("_clat"),
+    snapped = C.attach_cell(points, res, lon=lon, lat=lat, out="_cell").select(
+        F.col(way_col), F.col(seq_col).alias("_seq"), "_cell",
+        # cell-center coordinates from the same clamped grid indexes
+        # the cell id is built from: a boundary vertex (lon=180,
+        # lat=90) floors to n, which unclamped would emit a center
+        # outside the valid range, inconsistent with its dedup cell.
+        ((C.grid_col(F.col(lon), *C.LON, res) + 0.5) / n * 360.0 - 180.0)
+        .alias("_clon"),
+        ((C.grid_col(F.col(lat), *C.LAT, res) + 0.5) / n * 180.0 - 90.0)
+        .alias("_clat"),
     )
     w = Window.partitionBy(way_col).orderBy("_seq")
     kept = (

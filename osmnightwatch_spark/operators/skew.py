@@ -72,7 +72,8 @@ def adaptive_cells(points: DataFrame, base_res: int, max_rows_per_cell: int,
         for res in range(base_res, max_res):
             lvl = (
                 leaf_stats.groupBy(
-                    C.parent_col(F.col("_leaf"), max_res - res).alias("c")
+                    F.expr(C.parent_spark_sql("`_leaf`", max_res - res))
+                    .alias("c")
                 )
                 .agg(F.sum("n").alias("n"))
                 .where(F.col("n") > max_rows_per_cell)
@@ -95,13 +96,13 @@ def adaptive_cells(points: DataFrame, base_res: int, max_rows_per_cell: int,
     hot_lit = F.lit(sorted(hot)) if hot else F.array().cast("array<long>")
     for res in range(base_res, max_res + 1):
         this = (
-            C.parent_col(F.col("_leaf"), max_res - res)
+            F.expr(C.parent_spark_sql("`_leaf`", max_res - res))
             if res < max_res else F.col("_leaf")
         )
         if cell is None:
             cell = this
         else:
-            parent = C.parent_col(F.col("_leaf"), max_res - res + 1)
+            parent = F.expr(C.parent_spark_sql("`_leaf`", max_res - res + 1))
             cell = F.when(
                 F.array_contains(hot_lit, parent), this
             ).otherwise(cell)

@@ -4,7 +4,7 @@ The reference's analog is its per-country feature counting
 (``AdminCountPerCountryAnalyzer.cs:222-260``) and the id→blob bucketing
 of its scan index (``PbfParser/PbfIndexBuilder.cs:309-350``); here a
 tile is a quadtree cell at a chosen resolution and assignment is the
-*native* ``cell_col`` expression — pure whole-stage codegen, no Python,
+*native* ``attach_cell`` encode — pure whole-stage codegen, no Python,
 no shuffle until the aggregation itself (which map-side combines).
 
 Skew: city cells concentrate 20%+ of rows in 3 tiles. ``tile_counts``
@@ -41,10 +41,11 @@ def tile_counts(points: DataFrame, res: int, lon: str = "lon",
 def tile_rollup(tiles: DataFrame, steps: int = 1, tile: str = "tile",
                 value: str = "n_images") -> DataFrame:
     """Roll a per-tile aggregate up the hierarchy — parent id is pure
-    bit arithmetic (``parent_col``), so the rollup is a re-keyed agg
+    bit arithmetic (``parent_spark_sql``), so the rollup is a re-keyed agg
     with no re-encode of the raw data."""
     return (
-        tiles.withColumn("parent_tile", C.parent_col(F.col(tile), steps))
+        tiles.withColumn("parent_tile",
+                         F.expr(C.parent_spark_sql(f"`{tile}`", steps)))
         .groupBy("parent_tile")
         .agg(F.sum(value).alias(value))
     )
@@ -97,7 +98,7 @@ def compact_cells(cells: DataFrame, min_res: int, max_res: int,
     out = None
     for r in range(max_res, min_res, -1):
         parents = (
-            lvl.groupBy(C.parent_col(F.col("cell")).alias("parent"))
+            lvl.groupBy(F.expr(C.parent_spark_sql("`cell`")).alias("parent"))
             .agg(F.count(F.lit(1)).alias("n"),
                  F.collect_list("cell").alias("kids"))
         )
@@ -123,7 +124,7 @@ def tile_pyramid(points: DataFrame, min_res: int, max_res: int,
     Scale shape: the raw points are aggregated ONCE at ``max_res``
     (one shuffle, map-side combine absorbs city-cell skew), then the
     parent ladder is exploded over the ALREADY-AGGREGATED fine tiles
-    — parent ids are pure bit arithmetic (``parent_col``), so the
+    — parent ids are pure bit arithmetic (``parent_spark_sql``), so the
     second shuffle moves at most ``#fine_tiles × levels`` pre-combined
     rows, never the raw data. A per-level ladder of ``tile_rollup``
     calls would shuffle ``levels`` times; re-encoding raw points per

@@ -4,7 +4,7 @@ This is the BASELINE.json headline path ("images/sec through the
 H3-encode + PIP-join + tile-assign pipeline"): given the images table,
 
 1. derive the geotag from ``phash`` (native arithmetic, codegen'd);
-2. assign every image a hierarchical tile (native ``cell_col``);
+2. assign every image a hierarchical tile (native ``attach_cell``);
 3. broadcast PIP join against the admin polygon set (prepared
    covering; native band-index ray cast only on boundary cells);
 4. aggregate: per (admin polygon, tile) image counts — the engine's

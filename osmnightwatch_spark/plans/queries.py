@@ -2142,7 +2142,7 @@ def q_cell_compact(spark, sf_dir):
     from ..operators.tiling import compact_cells
 
     pts = _events_geo(spark, sf_dir)
-    cells = pts.select(C.cell_col(F.col("lon"), F.col("lat"), 6).alias("cell"))
+    cells = C.attach_cell(pts, 6).select("cell")
     return compact_cells(cells, min_res=2, max_res=6)
 
 

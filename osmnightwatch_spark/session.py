@@ -45,6 +45,20 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(zpath)
 
 
+def _default_driver_mem() -> str:
+    """Half of the host's physical memory, capped at 48g. The heap is
+    only a ceiling, but the JVM grows into it before collecting, so a
+    ceiling above RAM lets one session take the whole host."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{min(48 * 1024, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return "48g"
+
+
 def get_spark(app: str = "osmnightwatch_spark", cores: int | None = None,
               shuffle_partitions: int | None = None, ui: bool = False,
               extra: dict | None = None) -> SparkSession:
@@ -80,7 +94,9 @@ def get_spark(app: str = "osmnightwatch_spark", cores: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # SPARK_GRAFT_DRIVER_MEM: deployment override of the RAM-sized default
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", str(ui).lower())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -1,4 +1,4 @@
-"""Cell-encoding spec: three implementations, one behavior."""
+"""Cell-encoding spec: numpy, Spark SQL-text and DuckDB SQL, one behavior."""
 
 import duckdb
 import numpy as np
@@ -100,9 +100,10 @@ def test_spark_and_sql_parity(spark):
         exp = np.sort(C.cell_of(pdf.lon.to_numpy(), pdf.lat.to_numpy(), res))
         assert (got_spark == exp).all()
         assert (got_sql == exp).all()
-    # parent_col parity
+    # parent_spark_sql parity
     df2 = C.attach_cell(df, 12)
-    got = df2.select(C.parent_col(F.col("cell"), 5).alias("p")).toPandas()["p"]
+    got = df2.select(
+        F.expr(C.parent_spark_sql("`cell`", 5)).alias("p")).toPandas()["p"]
     exp = C.parent_cell(C.cell_of(pdf.lon.to_numpy(), pdf.lat.to_numpy(), 12), 5)
     assert (np.sort(got.to_numpy()) == np.sort(exp)).all()
 
@@ -114,29 +115,51 @@ def test_res_validation():
         C.cell_sql("lon", "lat", -1)
 
 
-def test_ring1_cells_col_matches_numpy(spark):
-    """Native 3×3 ring column is bit-identical (as a set per row) to
-    ring_neighbors(k=1), including antimeridian wrap and pole clamp."""
-    import numpy as np
-    import pandas as pd
+def test_ring_cells_col_matches_numpy(spark, tmp_path):
+    """The native ring-r array equals ring_neighbors(k=r) element for
+    element — antimeridian wrap, pole clamp, exact cell edges, and at
+    the small res values r >= grid/2, where the longitude wrap folds
+    the ring onto itself. The input is read from parquet so the staged
+    projections run as generated code (over a local pandas relation
+    Catalyst folds them into the relation instead)."""
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(9)
-    lon = np.concatenate([rng.uniform(-180, 180, 300),
-                          [-179.99, 179.99, 0.0, -180.0]])
-    lat = np.concatenate([rng.uniform(-90, 90, 300),
-                          [89.99, -89.99, 0.0, 90.0]])
-    pdf = pd.DataFrame({"i": np.arange(len(lon)), "lon": lon, "lat": lat})
-    for res in (3, 6, 10):
-        got = (
-            C.ring1_cells_col(spark.createDataFrame(pdf), res, out="ring")
-            .select("i", F.array_sort(F.array_distinct("ring")).alias("ring"))
-            .toPandas().set_index("i").ring
-        )
+    specials = np.array([-180.0, -179.99, 0.0, 179.99, 180.0])
+    lon = [rng.uniform(-180, 180, 300), np.repeat(specials, 5)]
+    lat = [rng.uniform(-90, 90, 300), np.tile(specials / 2, 5)]
+    for res in (2, 3, 6, 10):  # points exactly on cell edges
+        n = 1 << res
+        lon.append(-180.0 + rng.integers(0, n + 1, 20) * (360.0 / n))
+        lat.append(-90.0 + rng.integers(0, n + 1, 20) * (180.0 / n))
+    lon, lat = np.concatenate(lon), np.concatenate(lat)
+    assert len(lon) == 405
+    path = str(tmp_path / "pts")
+    spark.createDataFrame(pd.DataFrame(
+        {"i": np.arange(len(lon)), "lon": lon, "lat": lat})
+    ).write.parquet(path)
+    rs = (1, 2, 3, 8)
+    for res in (2, 3, 6, 10):
+        df = spark.read.parquet(path)
+        for r in rs:
+            df = C.ring_cells_col(df, res, r, out=f"ring{r}")
+        got = df.select("i", *[f"ring{r}" for r in rs]).toPandas()
+        got = got.sort_values("i").reset_index(drop=True)
         cells = C.cell_of(lon, lat, res)
-        exp = C.ring_neighbors(cells, 1)
-        for i in range(len(lon)):
-            assert sorted(set(int(v) for v in exp[i])) == list(got[i]), (res, i)
+        for r in rs:
+            exp = C.ring_neighbors(cells, r)
+            np.testing.assert_array_equal(
+                np.stack(got[f"ring{r}"].to_numpy()), exp, err_msg=f"{res} {r}")
+        if res == 6:
+            # staged interleaves survive as their own projection: each
+            # ring cell ORs column refs, not inlined interleave chains
+            plan = (C.ring_cells_col(spark.read.parquet(path), res, 1)
+                    ._jdf.queryExecution().executedPlan().toString())
+            assert "__r1ix0_ring" in plan and "__r1iy2_ring" in plan
+    assert not [c for c in C.ring_cells_col(spark.read.parquet(path), 3, 2)
+                .columns if c.startswith("__")]
+    with pytest.raises(ValueError):
+        C.ring_cells_col(spark.read.parquet(path), 3, -1)
 
 
 # --- compact_cells ----------------------------------------------------------

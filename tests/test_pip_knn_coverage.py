@@ -175,6 +175,8 @@ def test_knn_empty_neighborhood_ring_expansion(spark, pre_checkpoint):
     lazy = pre_checkpoint(knn_join, probes, cands, k=3, res=3)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+    # the ring-7 residue round is as native as the ring-1 round
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     out = knn_join(probes, cands, k=3, res=3)  # grid 8 → ring 8 covers it
     got = out.toPandas().sort_values(["probe_id", "rank"]).reset_index(drop=True)
     exp = knn_join_brute(probes, cands, k=3).toPandas().sort_values(
@@ -217,20 +219,50 @@ def test_knn_auto_res_degenerate_dense(spark):
         exp[["probe_id", "cand_id", "rank"]])
 
 
-def test_knn_ring1_plan_fully_native(spark):
-    """The common kNN round (ring-1) has NO Python in the plan — the
-    probe-side 3×3 expansion is the native ring1_cells_col."""
+def test_knn_ring1_plan_fully_native(spark, pre_checkpoint):
+    """The exact kNN result plan has NO Python in it: the ring-1
+    candidate round, the ring-8 expansion round and the brute residue
+    all run native — every probe-side (2r+1)² expansion is
+    ``cells.ring_cells_col``."""
     pts = pd.DataFrame({
         "probe_id": np.arange(50), "lon": np.linspace(-170, 170, 50),
         "lat": np.linspace(-80, 80, 50)})
     probes = spark.createDataFrame(pts)
     cands = spark.createDataFrame(pts.rename(columns={"probe_id": "cand_id"}))
-    # exact=False isolates the candidate round (the exact plan keeps
-    # the ring-8 EXPANSION branch, whose arbitrary-r UDF only ever
-    # runs on the provably-small residue)
-    lazy = knn_join(probes, cands, k=3, res=5, exact=False)
+    lazy = pre_checkpoint(knn_join, probes, cands, k=3, res=5)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
+    # the sparse diagonal fails ring-1, so the plan holds the ring-8
+    # round and the brute residue beside the candidate round
+    assert "Union" in plan and "BroadcastNestedLoop" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def _python_nodes(spark, fn):
+    """Run ``fn()`` and return ``(result, names)``: the Python
+    operators in any SQL execution started inside the call — eager
+    persists and checkpoints included, which a final-plan check cannot
+    see. Reads each execution's physical plan description from the SQL
+    status store: its plan graph (``planGraph``) stops at
+    ``InMemoryTableScan`` and never shows the plan a persist
+    materializes."""
+    import re
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        execs = store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    first = max(ids(), default=-1) + 1
+    out = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    started = [i for i in ids() if i >= first]
+    assert started, "no SQL execution recorded"
+    names = set()
+    for i in started:
+        text = store.execution(i).get().physicalPlanDescription()
+        names |= set(re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", text))
+    return out, sorted(names)
 
 
 def test_knn_haversine_matches_brute_high_latitude(spark):
@@ -253,7 +285,12 @@ def test_knn_haversine_matches_brute_high_latitude(spark):
         pdf[pdf.lat.abs() > 60].sample(60, random_state=5)
         .rename(columns={"pt_id": "probe_id"})
     )
-    got = knn_join(probes, cands, k=4, res=5, metric="haversine").toPandas()
+    # res 5: ring-1, then a persisted ring-8 round, then brute — and no
+    # SQL execution of the ladder runs a Python operator
+    out, python_nodes = _python_nodes(
+        spark, lambda: knn_join(probes, cands, k=4, res=5, metric="haversine"))
+    assert python_nodes == []
+    got = out.toPandas()
     exp = knn_join_brute(probes, cands, k=4, metric="haversine").toPandas()
     key = ["probe_id", "rank"]
     got = got.sort_values(key).reset_index(drop=True)
