@@ -37,6 +37,9 @@ pass over every candidate.
 
 from __future__ import annotations
 
+import threading
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -128,7 +131,7 @@ def _block_guard_haversine(res: int, r: int):
     return F.least(lat_bound, lon_bound)
 
 
-def auto_res(n_candidates: int, k: int, target_occ_per_k: int = 4) -> int:
+def auto_res(n_cands: int, k: int, target_occ_per_k: int = 4) -> int:
     """Resolution rule (the documented occupancy heuristic): pick res
     so expected cell occupancy ≈ ``target_occ_per_k × k`` under a
     uniform spread — cells hold enough candidates that ring-1 usually
@@ -141,18 +144,15 @@ def auto_res(n_candidates: int, k: int, target_occ_per_k: int = 4) -> int:
     per-probe window trims each probe to k rows and the ring ladder
     never scans beyond the probe's neighborhood.
 
-    The rule only needs ``n_candidates`` to order of magnitude (log4:
-    a 4× miss shifts res by one) — callers may pass a cheap upper
-    bound such as a pre-filter parquet footer count. Because the
-    derived res varies with the candidate count, ``exact=False``
-    callers who need reproducible approximate output across growing
-    inputs should pin ``res`` explicitly (the exact path's output is
-    res-invariant).
+    The rule only needs ``n_cands`` to order of magnitude (log4: a 4×
+    miss shifts res by one) — callers may pass a cheap upper bound such
+    as a pre-filter parquet footer count. :func:`knn_join`'s output is
+    res-invariant, so the derived res changes its cost, never its rows.
     """
     import math
 
     occ = max(1, target_occ_per_k * k)
-    cells = max(1.0, n_candidates / occ)
+    cells = max(1.0, n_cands / occ)
     return max(2, min(14, int(math.log(cells, 4))))
 
 
@@ -204,10 +204,7 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
              res: int | None = None,
              probe_id: str = "probe_id", cand_id: str = "cand_id",
              lon: str = "lon", lat: str = "lat",
-             exact: bool = True,
-             n_candidates: int | None = None,
-             metric: str = "planar",
-             broadcast_probes: bool | None = None) -> DataFrame:
+             metric: str = "planar") -> DataFrame:
     """Returns (probe_id, cand_id, dist2, rank) — per probe the k
     nearest candidates, rank 1..k by (dist2, cand_id) (deterministic
     tie-break). Probes and candidates may be the same table (self-kNN
@@ -223,8 +220,8 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
     exact at any latitude — including above 60° where planar degrees
     misrank east-west vs north-south neighbors.
 
-    The exact path is multi-pass by nature (guarantee check + possible
-    ring expansion), so it runs eagerly under one
+    The join is multi-pass by nature (guarantee check + possible ring
+    expansion), so it runs eagerly under one
     :class:`~osmnightwatch_spark.session.CacheScope`: the top-k is
     persisted, the (k×probes)-sized result is eager-checkpointed, and
     every intermediate is released on return or raise — no
@@ -247,22 +244,18 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
 
     Probes that fail the guarantee re-run on the expanded ring / brute
     ladder (rare by construction; extra jobs only on that path).
-    ``exact=False`` returns the lazy ring-1 plan with no actions.
 
     ``res=None`` (default) derives the resolution from the candidate
-    count via :func:`auto_res` — sourced from ``n_candidates`` if the
-    caller passes it, else from parquet footers driver-side (no Spark
-    job, pre-filter upper bound — fine for the log4 occupancy rule),
-    else one ``count()`` job. Pass an explicit res to pin it (see
-    :func:`auto_res` on why ``exact=False`` callers should)."""
+    count via :func:`auto_res` — from parquet footers driver-side (no
+    Spark job, pre-filter upper bound — fine for the log4 occupancy
+    rule), else one ``count()`` job. Pass an explicit res to pin it."""
     if metric not in ("planar", "haversine"):
         raise ValueError(f"metric must be planar|haversine, got {metric!r}")
     if res is None:
-        if n_candidates is None:
-            n_candidates = footer_rowcount(candidates)
-        if n_candidates is None:
-            n_candidates = candidates.count()
-        res = auto_res(n_candidates, k)
+        n_cands = footer_rowcount(candidates)
+        if n_cands is None:
+            n_cands = candidates.count()
+        res = auto_res(n_cands, k)
     # The probe count (exactness accounting + broadcast decision) is a
     # real Spark job; run it on a driver thread so it overlaps the
     # ~0.5 s of ring-plan construction below instead of preceding it
@@ -270,30 +263,17 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
     # job-vs-driver-planning). The count is joined exactly where its
     # value is first needed.
     _count_box: dict = {}
-    if exact:
-        import threading
 
-        from pyspark import inheritable_thread_target
+    @inheritable_thread_target
+    def _probe_count():
+        _count_box["n"] = probes.count()
 
-        @inheritable_thread_target
-        def _probe_count():
-            _count_box["n"] = probes.count()
-
-        _count_th = threading.Thread(target=_probe_count, daemon=True)
-        _count_th.start()
+    _count_th = threading.Thread(target=_probe_count, daemon=True)
+    _count_th.start()
 
     def _n_probes():
         _count_th.join()
         return _count_box["n"]
-
-    def _bcast_probes():
-        # auto: broadcast the ring-exploded probe side when the probe
-        # set is small (see BROADCAST_PROBE_MAX); callers with out-of-
-        # band knowledge (self-kNN, lazy plans) can force either way.
-        # The lazy exact=False plan has no probe count: AQE decides.
-        if broadcast_probes is not None:
-            return broadcast_probes
-        return exact and _n_probes() <= BROADCAST_PROBE_MAX
 
     p = probes.select(
         F.col(probe_id).alias("_pid"),
@@ -325,8 +305,10 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
         ).drop("_ring")
         if bcast is None:
             # resolved as late as possible: joins the overlapped
-            # probe-count thread only once the plan above is built
-            bcast = _bcast_probes()
+            # probe-count thread only once the plan above is built;
+            # broadcast the ring-exploded probe side when the probe set
+            # is small (see BROADCAST_PROBE_MAX)
+            bcast = _n_probes() <= BROADCAST_PROBE_MAX
         if bcast:
             exploded = F.broadcast(exploded)
         paired = exploded.join(c, "_ccell").where(F.col("_pid") != F.col("_cid"))
@@ -361,11 +343,6 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
         ).select("_pid")
 
     ranked = ring_topk(p, 1)
-    if not exact:
-        return ranked.select(
-            F.col("_pid").alias(probe_id), F.col("_cid").alias(cand_id),
-            F.col("dist2").alias(dist_col), "rank",
-        )
 
     def finish(parts_):
         out = parts_[0].select("_pid", "_cid", "dist2", "rank")
@@ -417,13 +394,9 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
         # broadcast decision for the expansion round: BROADCAST_PROBE_MAX
         # is sized for the ring-1 ×9 explode, so rescale the cap by this
         # ring's (2r+1)² fan-out — a 15k-probe residue at r=8 explodes to
-        # ~4.3M rows, far past the hint's intent. An explicit caller
-        # broadcast_probes hint wins either way (the documented contract).
-        if broadcast_probes is not None:
-            bcast_r2 = broadcast_probes
-        else:
-            bcast_r2 = n_probes - n_ok <= max(1, BROADCAST_PROBE_MAX * 9
-                                              // ((2 * r2 + 1) ** 2))
+        # ~4.3M rows, far past the cap's intent
+        bcast_r2 = n_probes - n_ok <= max(1, BROADCAST_PROBE_MAX * 9
+                                          // ((2 * r2 + 1) ** 2))
         ranked2 = ring_topk(residue, r2, bcast=bcast_r2)
         if r2 >= r_full:
             # the expanded ring already spans the whole grid: provably

@@ -35,7 +35,9 @@ Scale notes (100 TB / 10^12 rows):
   edges of one grid row, not of the whole polygon, so polygons with
   10^4–10^6 vertices stay cheap;
 * hot cells (cities) don't skew this join: broadcast join has no
-  shuffle; for the ``shuffle`` strategy AQE skew-join splitting applies.
+  shuffle; when the index outgrows the session's broadcast threshold
+  both sides shuffle on the cell key and AQE skew-join splitting
+  applies.
 """
 
 from __future__ import annotations
@@ -281,9 +283,17 @@ def _raycast_sql(lon: str, lat: str) -> str:
             f" (_acc, _k) -> {step}) != 0")
 
 
+def _index_bytes(prepared: PreparedPolygons) -> int:
+    """Estimated size of the covering plus band index: row count ×
+    schema width. A covering row is two longs and an int (20 B); a band
+    row is two longs (16 B) plus five doubles per edge it lists (40 B
+    per edge reference)."""
+    refs = int(prepared.bands[_EDGE_COLS[0]].map(len).sum())
+    return 20 * len(prepared.covering) + 16 * len(prepared.bands) + 40 * refs
+
+
 def pip_join(points: DataFrame, prepared: PreparedPolygons,
-             lon: str = "lon", lat: str = "lat",
-             strategy: str = "auto", broadcast_limit: int = 2_000_000) -> DataFrame:
+             lon: str = "lon", lat: str = "lat") -> DataFrame:
     """points ⋈ polygons containment join.
 
     Returns ``points`` columns + ``polygon_id`` (inner-join semantics:
@@ -296,19 +306,25 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
     upstream (scan + cell encode) once per branch — nearly free for a
     pruned columnar scan (materialize an expensive upstream first, as
     ``images_ops.verified_flagship`` does).
+
+    The covering and band index are broadcast when their estimated size
+    (:func:`_index_bytes`) fits under the session's
+    ``spark.sql.autoBroadcastJoinThreshold``; a threshold ≤ 0 turns
+    broadcast off. Otherwise both joins shuffle on their keys: the
+    10^12-row-covering shape.
     """
     spark = points.sparkSession
     cov = prepared.covering_df(spark).withColumnRenamed("cell", "_cell")
     bands = prepared.bands_df(spark)
-    if strategy == "auto":
-        strategy = "broadcast" if len(prepared.covering) <= broadcast_limit else "shuffle"
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    broadcast = limit > 0 and _index_bytes(prepared) <= limit
 
     # The quadtree covering holds cells at mixed resolutions (coarse FULL
     # interiors, fine BOUNDARY rims) and its cells are disjoint per
     # polygon, so a point matches at most one covering cell per polygon.
     # Join the point's whole ancestor chain [min_res..res] — a native
     # array of parent_spark_sql shifts, exploded (~res-min_res+1 narrow
-    # rows, no Python, no shuffle under the broadcast strategy).
+    # rows, no Python, no shuffle when the index is broadcast).
     pts_leaf = C.attach_cell(points, prepared.res, lon=lon, lat=lat,
                              out="_leaf")
 
@@ -337,7 +353,7 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
         polygon's grid row (no band row: no edge there, so outside)."""
         band = hits.withColumn("_band", F.expr(
             C._grid_spark_sql(f"`{lat}`", -90.0, 180.0, prepared.res)))
-        idx = F.broadcast(bands) if strategy == "broadcast" else bands
+        idx = F.broadcast(bands) if broadcast else bands
         return (band.join(idx, ["polygon_id", "_band"])
                 .where(F.expr(_raycast_sql(lon, lat)))
                 .drop("_band", *_EDGE_COLS))
@@ -349,7 +365,7 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
         sel = cov_res if kind is None else cov_res[cov_kind == kind]
         return sorted({int(r) for r in np.unique(sel)}) or [prepared.res]
 
-    if strategy == "broadcast":
+    if broadcast:
         # Split FULL hits (inside by construction — no ray cast) from
         # BOUNDARY hits. Each branch scans the input separately anyway,
         # so give each its own minimal ancestor chain (per-kind

@@ -26,8 +26,8 @@ Scale shape (the 100 TB argument): ONE equi-shuffle on the cell key.
 The left side explodes ×9 (``array_distinct`` first — pole clamping
 can fold ring cells together and would otherwise duplicate pairs);
 the right side is bucketed by its own cell, so each qualifying pair
-is produced exactly once — no distinct needed. Explode the smaller
-side (``explode_left``). Dense-city skew lands on the join's own
+is produced exactly once — no distinct needed. Pass the smaller side
+as ``left``: it pays the ×9. Dense-city skew lands on the join's own
 exchange, where AQE's skew splitter can act (join-owned exchanges
 only — the r3 lesson). Raising ``res`` is wrong here (exactness pins
 it to the radius); the skew escape hatch at 1000× density is
@@ -69,7 +69,6 @@ def res_for_radius(radius: float) -> int:
 def range_join(left: DataFrame, right: DataFrame, radius: float,
                left_id: str = "left_id", right_id: str = "right_id",
                lon: str = "lon", lat: str = "lat",
-               explode_left: bool = True,
                right_extra: tuple[str, ...] = ()) -> DataFrame:
     """All pairs at planar degree distance ≤ ``radius`` →
     ``(left_id, right_id, dist, *right_extra)``.
@@ -77,34 +76,23 @@ def range_join(left: DataFrame, right: DataFrame, radius: float,
     Inputs carry ``(id, lon, lat)`` with the id column pre-named via
     ``left_id`` / ``right_id``. Self-joins pass the same DataFrame
     twice (with distinct id aliases) and filter ``left_id == right_id``
-    afterwards if unwanted — self-pairs come out at dist 0.
-    ``explode_left=False`` flips which side pays the ×9 explode
-    (choose the smaller). ``right_extra`` columns ride through the
+    afterwards if unwanted — self-pairs come out at dist 0. The left
+    side pays the ×9 ring explode, so pass the smaller side as
+    ``left``. ``right_extra`` columns ride through the
     join from the right side (payload for downstream aggs — keeps
     consumers at ONE shuffle instead of a post-hoc rejoin).
     """
     res = res_for_radius(radius)
     extra = [F.col(c) for c in right_extra]
-    if explode_left:
-        l = C.ring_cells_col(left, res, 1, lon=lon, lat=lat, out="_ring")
-        l = l.select(
-            F.col(left_id), F.col(lon).alias("_llon"), F.col(lat).alias("_llat"),
-            F.explode(F.array_distinct("_ring")).alias("_cell"),
-        )
-        r = C.attach_cell(right, res, lon=lon, lat=lat, out="_cell").select(
-            F.col(right_id), F.col(lon).alias("_rlon"),
-            F.col(lat).alias("_rlat"), F.col("_cell"), *extra,
-        )
-    else:
-        l = C.attach_cell(left, res, lon=lon, lat=lat, out="_cell").select(
-            F.col(left_id), F.col(lon).alias("_llon"),
-            F.col(lat).alias("_llat"), "_cell",
-        )
-        r = C.ring_cells_col(right, res, 1, lon=lon, lat=lat, out="_ring")
-        r = r.select(
-            F.col(right_id), F.col(lon).alias("_rlon"), F.col(lat).alias("_rlat"),
-            F.explode(F.array_distinct("_ring")).alias("_cell"), *extra,
-        )
+    l = C.ring_cells_col(left, res, 1, lon=lon, lat=lat, out="_ring")
+    l = l.select(
+        F.col(left_id), F.col(lon).alias("_llon"), F.col(lat).alias("_llat"),
+        F.explode(F.array_distinct("_ring")).alias("_cell"),
+    )
+    r = C.attach_cell(right, res, lon=lon, lat=lat, out="_cell").select(
+        F.col(right_id), F.col(lon).alias("_rlon"),
+        F.col(lat).alias("_rlat"), F.col("_cell"), *extra,
+    )
     d2 = ((F.col("_llon") - F.col("_rlon")) * (F.col("_llon") - F.col("_rlon"))
           + (F.col("_llat") - F.col("_rlat")) * (F.col("_llat") - F.col("_rlat")))
     return (

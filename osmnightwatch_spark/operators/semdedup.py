@@ -23,19 +23,25 @@ engines. Assignment ties (exact integer-score equality only) break by
 centroid id. The result is bit-reproducible across engines, runs, and
 partitionings.
 
-Spark shape per Lloyd round: one broadcast of k centroid sum-vectors
-(driver-held Python ints — k·dims longs, trivially small), one
-map-side-combining groupBy producing k rows of integer sums. No
-shuffle of the corpus itself, no Python UDF — assignment is a
-whole-stage-codegen expression tree (k × dims integer mul-adds/row).
-The final dedup self-join shuffles once on the cluster id.
+Spark shape per Lloyd round: the k centroid sum-vectors (driver-held
+Python ints — k·dims longs, trivially small) ship in the scoring
+closure, and one map-side-combining groupBy produces k rows of integer
+sums. No shuffle of the corpus itself. Assignment is an Arrow-batched
+``mapInPandas`` kernel (one int64 matmul per batch) and the prune is
+one int64 Gram matmul per cluster (``applyInPandas``, the single
+shuffle on the cluster id). Both are Python operators by measurement:
+on 4 cores, 50k × 16-d rows, the whole-stage-codegen expression tree
+(k × dims inline mul-adds per row) plus the higher-order-function
+pair fold took 133–140 s at k=64 and 216–275 s at k=256 against
+9.4–11.0 s for the numpy kernels, with identical output; at k=64 the
+expression tree also outgrew Janino's 64 KB method limit.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import CacheScope
@@ -85,17 +91,6 @@ def _qnorm2_col(qv: str) -> F.Column:
     )
 
 
-def _qdot_cols(qv: str, csum: list[int]) -> F.Column:
-    """Exact bigint dot of the quantized vector with an integer centroid
-    sum (|q| ≤ 1e6, |csum| ≤ 1e6·n → products < 2^51·n; safe for any
-    realistic cluster size)."""
-    dot = None
-    for d, c in enumerate(csum):
-        term = F.element_at(F.col(qv), d + 1) * F.lit(int(c))
-        dot = term if dot is None else dot + term
-    return dot
-
-
 def _cnorm(csum: list[int]) -> float:
     """sqrt(Σ csum_d²) with the same left-to-right double sequence the
     SQL twin uses (exact ints → identical doubles → identical sqrt)."""
@@ -110,45 +105,18 @@ def _cnorm(csum: list[int]) -> float:
 # ---------------------------------------------------------------------------
 
 def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
-                  id_col: str = "vec_id", vec: str = "embedding",
-                  assign: str = "expr") -> DataFrame:
+                  id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
     """Cluster by spherical k-means over quantized embeddings; returns
     ``(id_col, cluster, sim)`` where ``sim`` is the cosine of the row
     against its final centroid direction (double, unrounded).
 
     Init: the quantized vectors of the ``k`` smallest ids (seed rows —
     deterministic, no RNG). Each round scores every row against every
-    centroid, argmax with (score desc, cid asc) ties, then re-sums
-    members per cluster in exact integers. Empty clusters drop out
-    (both engines agree: GROUP BY emits only non-empty groups).
-
-    ``assign`` picks the scoring strategy — both produce BIT-IDENTICAL
-    assignments (same integer dot, same double sequence, same ties;
-    pinned by test):
-
-    * ``"expr"`` — one ``array_max`` over k inline struct scores
-      (k·dims codegen mul-adds per row, centroids baked in as
-      literals). Zero extra shuffle, but the plan tree grows with
-      k·dims — right for k ≲ 100.
-    * ``"join"`` — centroids become a broadcast k-row DataFrame
-      (cid, csum array, cnorm double); scoring is a broadcast
-      nested-loop join + ``zip_with`` fold, argmax via a
-      ``groupBy(_id).agg(max(struct(s, -cid)))`` map-side-combining
-      agg. Plan size is O(1) in k, stays fully JVM-side.
-    * ``"numpy"`` — Arrow-batched ``mapInPandas``: one int64 matmul
-      per batch against the closure-shipped centroid matrix, no
-      shuffle, no per-centroid rows. The 100 TB path where k scales
-      with the corpus (SemDeDup needs per-cluster occupancy bounded,
-      so k ∝ N): at k=512 the matmul replaces a 512×-row-inflating
-      join with ~2 s of C-loop per 200k rows.
-
-    Exactness bound (both paths): the bigint dot needs
-    ``|q|·|csum| ≤ 1e6 · (1e6·m) < 2^63/dims`` per term-sum —
-    safe for cluster sizes ``m`` into the millions.
+    centroid with :func:`_assign_numpy`, argmax with (score desc, cid
+    asc) ties, then re-sums members per cluster in exact integers.
+    Empty clusters drop out (both engines agree: GROUP BY emits only
+    non-empty groups).
     """
-    if assign not in ("expr", "join", "numpy"):
-        raise ValueError(
-            f"assign must be 'expr', 'join' or 'numpy', got {assign!r}")
     with CacheScope() as scope:
         q = scope.persist(embeddings.select(
             F.col(id_col).alias("_id"), _quantize_col(vec, dims).alias("qv")
@@ -159,10 +127,8 @@ def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
             i: [int(x) for x in r.qv] for i, r in enumerate(seeds)}
 
         assigned = None
-        fn = {"expr": _assign_expr, "join": _assign_join,
-              "numpy": _assign_numpy}[assign]
         for it in range(iters + 1):  # final pass scores against last sums
-            assigned = fn(q, cents)
+            assigned = _assign_numpy(q, cents)
             if it == iters:
                 break
             sums = (
@@ -178,54 +144,6 @@ def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
         return assigned.select(
             F.col("_id").alias(id_col), "cluster",
             (F.col("_qsim") / qn).alias("sim"))
-
-
-def _assign_expr(q: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
-    """k inline struct scores; array_max keeps the expression linear in
-    k (a when-chain would replicate subtrees exponentially), ties →
-    lowest cid via the negated-cid struct field."""
-    scored = F.array_max(F.array(*[
-        F.struct(
-            (_qdot_cols("qv", csum).cast("double") / F.lit(_cnorm(csum))
-             ).alias("s"),
-            F.lit(-cid).alias("ncid"),
-        )
-        for cid, csum in cents.items()
-    ]))
-    return q.select("_id", "qv", scored.alias("_best")).select(
-        "_id", "qv",
-        (-F.col("_best")["ncid"]).cast("long").alias("cluster"),
-        F.col("_best")["s"].alias("_qsim"))
-
-
-def _assign_join(q: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
-    """Broadcast the k centroids as rows; exact bigint dot via a
-    zip_with/aggregate fold (same left-to-right sequence as the
-    unrolled expression), argmax via max(struct) with map-side
-    combine. ``first(qv)`` is safe: every row in an ``_id`` group
-    carries the identical qv."""
-    spark = q.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(cid), [int(x) for x in csum], _cnorm(csum))
-         for cid, csum in cents.items()],
-        "cid long, csum array<long>, cnorm double",
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "csum", lambda a, b: a * b),
-        F.lit(0).cast("long"), lambda acc, v: acc + v,
-    )
-    scored = q.join(F.broadcast(cdf)).select(
-        "_id", "qv",
-        F.struct((dot.cast("double") / F.col("cnorm")).alias("s"),
-                 (-F.col("cid")).alias("ncid")).alias("_sc"),
-    )
-    return (
-        scored.groupBy("_id")
-        .agg(F.max("_sc").alias("_best"), F.first("qv").alias("qv"))
-        .select("_id", "qv",
-                (-F.col("_best")["ncid"]).alias("cluster"),
-                F.col("_best")["s"].alias("_qsim"))
-    )
 
 
 def kmeans_sql(table: str, k: int, iters: int, dims: int,
@@ -270,21 +188,39 @@ def _assign_cte(name: str, cent: str, dims: int) -> str:
     )
 
 
+def _check_dot_bound(cents: dict[int, list[int]]) -> None:
+    """Raise ``ValueError`` before int64 scoring could wrap.
+
+    A quantized unit vector has ``|q|₂ ≤ Q + dims`` (each component is
+    at most one grain off ``x_d/|x|·Q``), so by Cauchy–Schwarz every
+    partial sum of ``q · csum`` — over any subset of dimensions, in any
+    summation order the matmul picks — is at most ``(Q + dims) ·
+    |csum|₂``, which stays below 2^63 while its square stays below
+    2^126. Checked on the driver's exact Python-int sums: centroid
+    norms below ~9·10¹² (at dims=16, about 9·10⁶ unit-vector members
+    pointing one way) always pass."""
+    for cid, csum in cents.items():
+        n2 = sum(c * c for c in csum)
+        if (Q + len(csum)) ** 2 * n2 >= 1 << 126:
+            raise ValueError(
+                f"centroid {cid}: integer sum too large for exact int64 "
+                f"scoring (|csum|² = {n2}); raise k so clusters hold "
+                f"fewer members")
+
+
 def _assign_numpy(q: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
     """Arrow-batched scorer: per batch, ONE int64 matmul of the
     quantized vectors against the centroid matrix — exact integer dots
     (order-free), then the identical cast-to-double / divide-by-cnorm
-    sequence, argmax with first-occurrence ties = lowest cid (centroid
-    rows are cid-sorted). Bit-identical to the other two paths
-    (pinned by test), ~100× their per-row cost at large k: the k·dims
-    mul-adds run as one C loop instead of k codegen branches or a
-    k-row join. No shuffle at all — this is the path for k in the
-    thousands. Exactness bound: |dot| ≤ dims·1e12·m must stay under
-    2^63 — cluster sizes m up to ~5·10⁵ at dims=16 (raise Q grain or
-    split clusters beyond that)."""
+    sequence the SQL twin uses, argmax with first-occurrence ties =
+    lowest cid (centroid rows are cid-sorted). No shuffle: the
+    k·dims mul-adds run as one C loop per batch, so cost grows with k
+    only through the matmul. Exactness: :func:`_check_dot_bound`
+    raises before any score could wrap."""
     import numpy as np
     import pandas as pd
 
+    _check_dot_bound(cents)
     cids = sorted(cents)
     cmat = np.array([cents[c] for c in cids], dtype=np.int64)
     norms = np.array([_cnorm(cents[c]) for c in cids], dtype=np.float64)
@@ -314,14 +250,13 @@ def _assign_numpy(q: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
 
 def _prune_numpy(a: DataFrame, tau: float, id_col: str) -> DataFrame:
     """Per-cluster keep/drop via one exact int64 Gram matrix per group
-    (applyInPandas). Bit-identical to the fold path: the fold's
-    per-element double products and running sums are all integers
-    < 2^53 (|q|≤1e6 ⇒ products ≤1e12, dims·1e12 ≪ 9e15), so its float
+    (applyInPandas). Bit-identical to the SQL twin's per-pair double
+    fold: its products and running sums are all integers < 2^53
+    (|q| ≤ 1e6 ⇒ products ≤ 1e12, dims·1e12 ≪ 9e15), so the float
     accumulation is EXACT and equals the integer matmul; norms and the
     divide share the same op sequence. The m×m matrix per cluster is
     the SemDeDup contract made explicit — k must bound per-cluster
-    occupancy anyway (k ∝ N), this just turns ~100 interpreted
-    HOF-fold ops per pair into one C matmul per cluster."""
+    occupancy anyway (k ∝ N)."""
     import numpy as np
     import pandas as pd
 
@@ -351,55 +286,22 @@ def _prune_numpy(a: DataFrame, tau: float, id_col: str) -> DataFrame:
 
 
 def semdedup(embeddings: DataFrame, k: int, iters: int, dims: int, tau: float,
-             id_col: str = "vec_id", vec: str = "embedding",
-             assign: str = "expr", prune: str = "fold") -> DataFrame:
+             id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
     """``(id_col, cluster, sim_r, kept)`` — ``kept = false`` for every
     row that has a same-cluster neighbor with pair-cosine ≥ ``tau``
     where the *neighbor* sits farther from the centroid (lower sim,
     ties by id): the paper's keep-the-outlier policy, reduced to pair
     edges. ``sim_r`` is the centroid cosine rounded to 9 (display
     only — decisions use the unrounded exact-int-derived value).
-
-    ``prune`` picks the pair-stage strategy — both bit-identical
-    (pinned by test): ``"fold"`` keeps everything JVM-side but pays
-    interpreted higher-order-function cost per pair (Spark does not
-    codegen ``aggregate``/``zip_with`` lambdas — measured 109 s for
-    81M pairs at 200k×k=512); ``"numpy"`` does one exact int64 Gram
-    matmul per cluster via applyInPandas (same shuffle, C-speed
-    pairs) — the large-scale path."""
+    Assignment is :func:`kmeans_assign`, the pair stage
+    :func:`_prune_numpy`; the result equals :func:`semdedup_sql`
+    row for row."""
     q = embeddings.select(
         F.col(id_col).alias("_id"), _quantize_col(vec, dims).alias("qv"))
-    a = kmeans_assign(embeddings, k, iters, dims, id_col, vec, assign).join(
+    a = kmeans_assign(embeddings, k, iters, dims, id_col, vec).join(
         q.withColumnRenamed("_id", id_col), id_col)
-    if prune == "numpy":
-        return _prune_numpy(a, tau, id_col).select(
-            id_col, "cluster", F.round("sim", 9).alias("sim_r"), "kept")
-    if prune != "fold":
-        raise ValueError(f"prune must be 'fold' or 'numpy', got {prune!r}")
-    left = a.select(F.col(id_col).alias("ida"), F.col("cluster"),
-                    F.col("sim").alias("sa"), F.col("qv").alias("qa"))
-    right = a.select(F.col(id_col).alias("idb"), F.col("cluster"),
-                     F.col("sim").alias("sb"), F.col("qv").alias("qb"))
-    pair_dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: (x * y).cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
-    na = F.sqrt(_qnorm2_col("qa"))
-    nb = F.sqrt(_qnorm2_col("qb"))
-    dropped = (
-        left.join(right, "cluster")
-        .where(F.col("ida") != F.col("idb"))
-        .where(pair_dot / (na * nb) >= F.lit(tau))
-        .where((F.col("sb") < F.col("sa")) |
-               ((F.col("sb") == F.col("sa")) & (F.col("idb") < F.col("ida"))))
-        .select(F.col("ida").alias(id_col))
-        .distinct()
-    )
-    return (
-        a.join(dropped.withColumn("_drop", F.lit(True)), id_col, "left")
-        .select(id_col, "cluster", F.round("sim", 9).alias("sim_r"),
-                F.coalesce(~F.col("_drop"), F.lit(True)).alias("kept"))
-    )
+    return _prune_numpy(a, tau, id_col).select(
+        id_col, "cluster", F.round("sim", 9).alias("sim_r"), "kept")
 
 
 def semdedup_sql(table: str, k: int, iters: int, dims: int, tau: float,

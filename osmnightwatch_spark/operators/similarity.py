@@ -133,24 +133,11 @@ def plane_weight(j: int, d: int) -> float:
     return ((j * 73856093 + d * 19349663) % 2001 - 1000) / 1000.0
 
 
-def lsh_bucket_col(vec: str, dims: int, planes: int = N_PLANES,
-                   offset: int = 0) -> F.Column:
-    """Bucket id: bit j = (w_{offset+j} · v > 0). Native expression.
-    ``offset`` selects a disjoint plane set per hash table."""
-    bucket = F.lit(0)
-    for j in range(planes):
-        dot = None
-        for d in range(dims):
-            w = plane_weight(offset + j, d)
-            term = F.element_at(F.col(vec), d + 1).cast("double") * F.lit(w)
-            dot = term if dot is None else dot + term
-        bucket = bucket + F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket.cast("long")
-
-
 def lsh_bucket_sql(vec: str, dims: int, planes: int = N_PLANES,
                    offset: int = 0) -> str:
-    """DuckDB twin of :func:`lsh_bucket_col` (same op order)."""
+    """DuckDB twin of one table of :func:`lsh_buckets_udf`: table
+    ``t`` is ``offset = t · planes``. Same op order (left-to-right over
+    dims), so bucket ids are bit-identical — asserted in tests."""
     parts = []
     for j in range(planes):
         terms = " + ".join(
@@ -163,17 +150,25 @@ def lsh_bucket_sql(vec: str, dims: int, planes: int = N_PLANES,
 
 def lsh_buckets_udf(dims: int, planes: int, tables: int):
     """Arrow-vectorized bucket computation: all ``tables`` bucket ids
-    per vector in one batch kernel.
+    per vector in one batch kernel; table ``t`` uses planes
+    ``t·planes .. (t+1)·planes - 1``. Bit j of a bucket id is
+    ``(w_j · v > 0)``, folded left to right over dims (the first term
+    effectively unseeded since ``0.0 + x == x`` in IEEE), the same
+    order as :func:`lsh_bucket_sql` — bucket ids are bit-identical to
+    the DuckDB twin, asserted in tests.
 
-    Why a pandas UDF when :func:`lsh_bucket_col` is "native": the
-    native form is a ``planes × dims``-term expression tree that falls
-    out of whole-stage codegen and evaluates interpreted per row
-    (~4k rows/s measured); the kernel below does the same arithmetic
-    as ``planes × dims`` vectorized ops over the batch axis. The fold
-    order (left-to-right over dims, first term effectively unseeded
-    since ``0.0 + x == x`` in IEEE) is IDENTICAL to both the Column
-    expression and the SQL twin, so bucket ids stay bit-identical
-    across all three implementations — asserted in tests.
+    Why a Python kernel: it beat every native form, all bit-identical
+    (200k × 16-d rows, 2 scan tasks, warm, 4 cores, planes/tables ∈
+    {8/1, 8/2, 6/4}):
+
+    =============================================== ===========
+    form                                            time
+    =============================================== ===========
+    this Arrow UDF                                  0.98–1.7 s
+    unrolled Column (``planes × dims`` terms)       1.6–4.4 s
+    staged-column native                            2.2–4.5 s
+    ``aggregate(zip_with)`` per plane (HOF form)    4.3–11.2 s
+    =============================================== ===========
     """
     import numpy as np
 

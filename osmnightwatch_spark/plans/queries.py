@@ -1005,7 +1005,8 @@ def q_lsh_histogram(spark, sf_dir):
     """ANN bucketing parity: LSH bucket histogram."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return (
-        e.withColumn("bucket", S.lsh_bucket_col("embedding", _EMB_DIMS))
+        e.withColumn("bucket", S.lsh_buckets_udf(_EMB_DIMS, S.N_PLANES, 1)(
+            F.col("embedding"))[0])
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
     )

@@ -104,8 +104,38 @@ def test_lsh_topk_subset_of_brute_candidates(spark, emb):
     assert (got["rank"] >= 1).all() and got.neighbor_id.isin(range(120)).all()
     # the planted near-dup is found for probe 3's bucket-mates? probe set
     # excludes 3; sanity: near-dup pair lands in the same bucket
-    b = df.withColumn("b", S.lsh_bucket_col("embedding", 16)).toPandas().set_index("vec_id").b
+    b = (df.select("vec_id", S.lsh_buckets_udf(16, S.N_PLANES, 1)(
+        F.col("embedding"))[0].alias("b")).toPandas().set_index("vec_id").b)
     assert b[3] == b[7]
+
+
+@pytest.mark.parametrize("planes,tables", [(8, 1), (8, 2), (6, 4)])
+def test_lsh_buckets_udf_matches_sql_twin(spark, planes, tables):
+    """The Arrow bucket kernel equals the DuckDB twin element for
+    element, per table (table t = plane offset t·planes), including
+    all-zero rows (every bit 0) and rows with -0.0 components."""
+    import duckdb
+
+    rng = np.random.default_rng(31)
+    vecs = rng.normal(size=(300, 16)).astype(np.float32)
+    vecs[0] = 0.0
+    vecs[1] = -0.0
+    vecs[2, ::2] = -0.0
+    vecs[3] = np.where(rng.random(16) < 0.5, np.float32(-0.0), vecs[3])
+    pdf = pd.DataFrame({"vec_id": range(len(vecs)),
+                        "embedding": [list(map(float, v)) for v in vecs]})
+    df = spark.createDataFrame(pdf, "vec_id long, embedding array<float>")
+    got = (df.select("vec_id", S.lsh_buckets_udf(16, planes, tables)(
+        F.col("embedding")).alias("b")).orderBy("vec_id").toPandas())
+    assert got.b.map(len).eq(tables).all()
+    con = duckdb.connect()
+    con.register("emb", pdf)
+    cols = ", ".join(f"{S.lsh_bucket_sql('embedding', 16, planes, t * planes)} AS t{t}"
+                     for t in range(tables))
+    want = con.execute(f"SELECT {cols} FROM emb ORDER BY vec_id").fetchnumpy()
+    for t in range(tables):
+        assert got.b.map(lambda b: int(b[t])).tolist() == want[f"t{t}"].tolist()
+    assert all(list(b) == [0] * tables for b in got.b[:2])
 
 
 def test_embedding_near_dup_pairs(spark, emb):
@@ -693,36 +723,62 @@ def test_semdedup_keep_outlier_and_determinism(spark):
         check_names=False)
 
 
-def test_semdedup_join_assignment_bit_identical(spark):
-    """The broadcast-join scoring path (the unbounded-k 100 TB route)
-    must reproduce the expression path bit-for-bit: same integer dot,
-    same double sequence, same (score desc, cid asc) ties."""
+def test_semdedup_matches_duckdb_twin_at_large_k(spark):
+    """At k=64 (where the retired inline-expression scorer outgrew
+    codegen) semdedup over a repartitioned input equals the DuckDB twin
+    row for row: same integer dots, same double sequence, same ties."""
+    import duckdb
+
     from osmnightwatch_spark.operators import semdedup as SD
 
     rng = np.random.default_rng(23)
+    base = rng.normal(size=(2000, 12))
+    base[1000:1200] = base[:200] + rng.normal(scale=0.05, size=(200, 12))
     pdf = pd.DataFrame({
-        "vec_id": range(200),
-        "embedding": [list(map(float, r))
-                      for r in rng.normal(size=(200, 12))],
+        "vec_id": range(len(base)),
+        "embedding": [list(map(float, r)) for r in base],
     })
-    df = spark.createDataFrame(pdf)
-    a = (SD.kmeans_assign(df, k=7, iters=2, dims=12, assign="expr")
-         .orderBy("vec_id").toPandas())
-    b = (SD.kmeans_assign(df, k=7, iters=2, dims=12, assign="join")
-         .orderBy("vec_id").toPandas())
-    pd.testing.assert_frame_equal(a, b)
-    c = (SD.kmeans_assign(df.repartition(5), k=7, iters=2, dims=12,
-                          assign="numpy").orderBy("vec_id").toPandas())
-    pd.testing.assert_frame_equal(a, c)
-    g1 = (SD.semdedup(df, k=7, iters=2, dims=12, tau=0.4, assign="join")
-          .orderBy("vec_id").toPandas())
-    g2 = (SD.semdedup(df, k=7, iters=2, dims=12, tau=0.4, assign="expr")
-          .orderBy("vec_id").toPandas())
-    pd.testing.assert_frame_equal(g1, g2)
-    g3 = (SD.semdedup(df.repartition(3), k=7, iters=2, dims=12, tau=0.4,
-                      assign="numpy", prune="numpy")
-          .orderBy("vec_id").toPandas())
-    pd.testing.assert_frame_equal(g1, g3)
+    df = spark.createDataFrame(pdf).repartition(5)
+    got = (SD.semdedup(df, k=64, iters=2, dims=12, tau=0.9)
+           .orderBy("vec_id").toPandas())
+    con = duckdb.connect()
+    con.register("emb", pdf)
+    want = con.execute(
+        SD.semdedup_sql("emb", k=64, iters=2, dims=12, tau=0.9)
+        + " ORDER BY vec_id").fetchdf()
+    assert got.cluster.nunique() > 32 and 0 < (~got.kept).sum() < len(got)
+    pd.testing.assert_frame_equal(
+        got.astype({"kept": bool, "cluster": "int64", "vec_id": "int64"}),
+        want.astype({"kept": bool, "cluster": "int64", "vec_id": "int64"}),
+        check_names=False)
+
+
+def test_semdedup_assign_rejects_sums_past_int64_bound(spark):
+    """Scores are exact int64 dots; a centroid sum large enough to
+    wrap one raises ValueError on the driver instead of returning
+    wrapped scores, while sums just under the bound still score
+    exactly."""
+    import math
+
+    from osmnightwatch_spark.operators import semdedup as SD
+
+    dims, Q = 4, SD.Q
+    q = spark.createDataFrame(
+        [(0, [Q // 2] * dims), (1, [-Q // 2] * dims), (2, [Q, 0, 0, 0])],
+        "_id long, qv array<bigint>")
+    # (Q + dims)² · dims · m² is the squared bound on every partial dot
+    m = math.isqrt(((1 << 126) - 1) // (dims * (Q + dims) ** 2))
+    with pytest.raises(ValueError, match="int64"):
+        SD._assign_numpy(q, {0: [14 * 10 ** 12, 0, 0, 0]})  # wraps at Q
+    with pytest.raises(ValueError, match="int64"):
+        SD._assign_numpy(q, {0: [1] * dims, 1: [m + 1] * dims})
+    cents = {0: [m] * dims, 1: [-m] * dims}
+    got = SD._assign_numpy(q, cents).orderBy("_id").collect()
+    for r in got:
+        dots = [sum(a * b for a, b in zip(r.qv, cents[c])) for c in (0, 1)]
+        best = max((0, 1), key=lambda c: dots[c])
+        assert r.cluster == best
+        assert r._qsim == float(dots[best]) / SD._cnorm(cents[best])
 
 
 def test_dedup_clusters_long_chain(spark):

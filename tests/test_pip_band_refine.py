@@ -72,20 +72,34 @@ def star_case():
     return polys, pts, _numpy_pairs(pts, polys)
 
 
+@pytest.fixture
+def join_shape(spark, request):
+    """``broadcast`` runs under the session's broadcast threshold;
+    ``shuffle`` sets it to -1 for the test, so pip_join shuffles its
+    covering and band index."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if request.param == "shuffle":
+        spark.conf.set(key, "-1")
+    yield request.param
+    spark.conf.set(key, prev)
+
+
 @pytest.mark.parametrize("max_cells", [4096, 256])
-@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
-def test_band_refine_matches_numpy_ray_cast(spark, star_case, strategy, max_cells):
+@pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
+def test_band_refine_matches_numpy_ray_cast(spark, star_case, join_shape, max_cells):
     """``max_cells=256`` caps the covering, so BOUNDARY cells sit above
     the leaf resolution while the band rows stay at it."""
     polys, pts, exp = star_case
     prep = PreparedPolygons.build(polys, res=RES, max_cells=max_cells)
-    q = pip_join(spark.createDataFrame(pts), prep, strategy=strategy)
+    q = pip_join(spark.createDataFrame(pts), prep)
     got = q.select("pt_id", "polygon_id").toPandas()
     assert not got.duplicated().any()
     assert set(map(tuple, got.to_numpy().tolist())) == exp
     assert len(exp) > 1000
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
+    assert ("BroadcastHashJoin" in plan) == (join_shape == "broadcast")
 
 
 def test_band_index_has_no_empty_band(star_case):
@@ -95,9 +109,9 @@ def test_band_index_has_no_empty_band(star_case):
     assert not bands.duplicated(["polygon_id", "_band"]).any()
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
-def test_pip_join_empty_polygon_set(spark, strategy):
+@pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
+def test_pip_join_empty_polygon_set(spark, join_shape):
     pts = spark.createDataFrame(pd.DataFrame(
         {"pt_id": [1, 2], "lon": [0.0, -150.0], "lat": [0.0, 60.0]}))
     prep = PreparedPolygons.build([], res=RES)
-    assert pip_join(pts, prep, strategy=strategy).count() == 0
+    assert pip_join(pts, prep).count() == 0

@@ -1,5 +1,5 @@
-"""Spatial operators vs brute-force oracles; strategy equivalence;
-skewed input behavior."""
+"""Spatial operators vs brute-force oracles; broadcast vs shuffle join
+equivalence; skewed input behavior."""
 
 import numpy as np
 import pandas as pd
@@ -46,9 +46,20 @@ def test_pip_join_matches_brute(spark, points_pdf, prep):
 
 
 def test_pip_join_shuffle_strategy_equal(spark, points_pdf, prep):
+    """A broadcast threshold of -1 turns pip_join's index broadcast
+    off; the shuffled join finds the same pairs."""
     pts = spark.createDataFrame(points_pdf)
-    bcast = _pip_sets(pip_join(pts, prep, strategy="broadcast").toPandas())
-    shuf = _pip_sets(pip_join(pts, prep, strategy="shuffle").toPandas())
+    bcast = _pip_sets(pip_join(pts, prep).toPandas())
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        out = pip_join(pts, prep)
+        shuf = _pip_sets(out.toPandas())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    assert "BroadcastHashJoin" not in plan
     assert bcast == shuf
 
 
@@ -237,16 +248,13 @@ def test_knn_ring1_plan_fully_native(spark, pre_checkpoint):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def _python_nodes(spark, fn):
-    """Run ``fn()`` and return ``(result, names)``: the Python
-    operators in any SQL execution started inside the call — eager
+def _plan_descriptions(spark, fn):
+    """Run ``fn()`` and return ``(result, texts)``: the physical plan
+    description of every SQL execution started inside the call — eager
     persists and checkpoints included, which a final-plan check cannot
-    see. Reads each execution's physical plan description from the SQL
-    status store: its plan graph (``planGraph``) stops at
-    ``InMemoryTableScan`` and never shows the plan a persist
-    materializes."""
-    import re
-
+    see. Read from the SQL status store: an execution's plan graph
+    (``planGraph``) stops at ``InMemoryTableScan`` and never shows the
+    plan a persist materializes."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def ids():
@@ -258,9 +266,18 @@ def _python_nodes(spark, fn):
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     started = [i for i in ids() if i >= first]
     assert started, "no SQL execution recorded"
+    return out, [store.execution(i).get().physicalPlanDescription()
+                 for i in started]
+
+
+def _python_nodes(spark, fn):
+    """Run ``fn()`` and return ``(result, names)``: the Python
+    operators in any SQL execution started inside the call."""
+    import re
+
+    out, texts = _plan_descriptions(spark, fn)
     names = set()
-    for i in started:
-        text = store.execution(i).get().physicalPlanDescription()
+    for text in texts:
         names |= set(re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", text))
     return out, sorted(names)
 
@@ -362,22 +379,30 @@ def test_knn_probe_side_broadcast_direction(spark):
     (ring-exploded probe) side. Left to AQE with this session's 64 MB
     broadcast ceiling, the 200k-row candidate side was chosen as the
     build side (BuildRight) — rebuilding an ~8 MB hash relation per
-    run dominated knn_join_k5. The broadcast_probes hint drives the
-    same code path the materialized auto-decision uses."""
+    run dominated knn_join_k5. 40 probes sit under
+    BROADCAST_PROBE_MAX, so the probe count alone decides it — even
+    here, where the candidate table is the smaller one and the planner
+    left alone would build from it."""
+    import re
+
     pts = pd.DataFrame({
         "probe_id": np.arange(40), "lon": np.linspace(-170, 170, 40),
         "lat": np.linspace(-80, 80, 40)})
     probes = spark.createDataFrame(pts)
     cands = spark.createDataFrame(
         pd.DataFrame({
-            "cand_id": np.arange(5000),
-            "lon": np.linspace(-179, 179, 5000),
-            "lat": np.linspace(-84, 84, 5000)}))
-    lazy = knn_join(probes, cands, k=3, res=5, exact=False,
-                    broadcast_probes=True)
-    lazy.collect()  # finalize the adaptive plan before reading it
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # the probe expansion (explode of the ring array) is the LEFT side
-    # of the join; its broadcast makes the build side BuildLeft
-    assert "BuildLeft" in plan.split("BroadcastHashJoin", 1)[1].split("\n")[0]
+            "cand_id": np.arange(12),
+            "lon": np.linspace(-179, 179, 12),
+            "lat": np.linspace(-84, 84, 12)}))
+    _, texts = _plan_descriptions(
+        spark, lambda: knn_join(probes, cands, k=3, res=5))
+    # the cell join's left side is the probe expansion (explode of the
+    # ring array); broadcasting it makes the build side BuildLeft. The
+    # tree line carries the build side, the numbered detail the keys.
+    sides = []
+    for t in texts:
+        built = {n: side for side, n in re.findall(
+            r"BroadcastHashJoin \w+ (Build\w+) \((\d+)\)", t)}
+        sides += [built[n] for n in re.findall(
+            r"\((\d+)\) BroadcastHashJoin[^\n]*\nLeft keys \[1\]: \[_ccell#", t)]
+    assert sides and set(sides) == {"BuildLeft"}

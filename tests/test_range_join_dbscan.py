@@ -34,21 +34,6 @@ def test_range_join_matches_brute(spark):
     assert (got.left_id == got.right_id).sum() == 200
 
 
-def test_range_join_explode_side_equivalence(spark):
-    """explode_left=False produces the identical pair set (the
-    pick-the-smaller-side knob can't change semantics)."""
-    rng = np.random.default_rng(5)
-    pdf = _pdf([(i, float(lo), float(la)) for i, (lo, la) in enumerate(
-        zip(rng.uniform(-30, 30, 120), rng.uniform(-30, 30, 120)))])
-    df = spark.createDataFrame(pdf)
-    a = df.withColumnRenamed("id", "left_id")
-    b = df.withColumnRenamed("id", "right_id")
-    g1 = (R.range_join(a, b, 4.0).orderBy("left_id", "right_id").toPandas())
-    g2 = (R.range_join(a, b, 4.0, explode_left=False)
-          .orderBy("left_id", "right_id").toPandas())
-    pd.testing.assert_frame_equal(g1, g2)
-
-
 def test_range_join_pole_no_duplicate_pairs(spark):
     """Latitude clamping folds ring cells together near the pole —
     array_distinct must keep each qualifying pair unique."""

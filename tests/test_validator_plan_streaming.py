@@ -310,7 +310,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
 
 def test_pip_join_shuffle_path_copartition_and_skew(spark):
-    """The strategy='shuffle' PIP path (the 10^12-row covering case):
+    """The shuffled PIP path (the 10^12-row covering case, selected by a
+    broadcast threshold of -1):
     both join sides co-partition on _cell through the join's OWN
     ENSURE_REQUIREMENTS exchanges — no hand repartition, because AQE's
     OptimizeSkewedJoin refuses to split REPARTITION_BY_COL shuffles —
@@ -345,7 +346,7 @@ def test_pip_join_shuffle_path_copartition_and_skew(spark):
     try:
         for k, v in tuned.items():
             spark.conf.set(k, v)
-        out = pip_join(pts, prep, strategy="shuffle")
+        out = pip_join(pts, prep)
         out.collect()  # collect() finalizes THIS frame's adaptive plan
         plan = out._jdf.queryExecution().executedPlan().toString()
     finally:

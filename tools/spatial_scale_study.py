@@ -101,12 +101,11 @@ def main():
     assert 0 < agg.cores < n_dbscan and agg.clusters > 0
     pts2.unpersist()
 
-    # --- SemDeDup via the matmul paths (k scales with the corpus) -----
+    # --- SemDeDup (k scales with the corpus) -------------------------
     vecs = synth_vecs(spark, n_vecs, dims=16).persist()
     vecs.count()
     t0 = time.time()
-    sd = semdedup(vecs, k=k_clusters, iters=2, dims=16, tau=0.9,
-                  assign="numpy", prune="numpy")
+    sd = semdedup(vecs, k=k_clusters, iters=2, dims=16, tau=0.9)
     sagg = sd.agg(F.count("*").alias("n"),
                   F.sum((~F.col("kept")).cast("long")).alias("dropped"),
                   F.countDistinct("cluster").alias("clusters")).collect()[0]
