@@ -25,7 +25,7 @@ Three implementations share this spec and are cross-checked in tests:
   text over staged grid columns (whole-stage codegen, no Python
   boundary in the hot encode path); :func:`grid_col` is the one
   ``Column``-form helper, for callers whose input is a computed
-  ``Column``;
+  ``Column``, and :func:`box_cells` the one bbox cover built on it;
 * :func:`cell_sql` / :func:`parent_sql` — the same arithmetic as ANSI
   SQL for the DuckDB correctness oracle.
 
@@ -229,12 +229,34 @@ def grid_col(v: "Column", lo: float, span: float, res: int) -> "Column":
 
     The one Column-form twin kept: its callers index computed Columns
     (a bbox corner widened by a radius, ``least(_x1, _x2) - r``; an
-    intersection's min corner) inside ``sequence`` / join conditions
-    and need the grid index only, never the interleave.
+    intersection's min corner) inside :func:`box_cells` / join
+    conditions and need the grid index only, never the interleave.
     """
     n = 1 << res
     g = F.floor((v + F.lit(float(-lo))) / F.lit(span) * F.lit(n)).cast("long")
     return F.greatest(F.lit(0), F.least(F.lit(n - 1), g))
+
+
+def box_cells(df, res: int, x0: "Column", y0: "Column", x1: "Column",
+              y1: "Column"):
+    """``df`` + ``_gx`` / ``_gy``: one row per grid cell at ``res`` of
+    the box ``[x0, x1] × [y0, y1]`` (lon/lat Columns, clamped to the
+    grid like :func:`grid_xy`; a zero-size box gives its one cell) —
+    the bbox cover of the overlay, geofence, map-match and clip
+    joins. ``_gx`` explodes in the first projection next to the
+    ``_gy`` range array, which explodes in a second one.
+    """
+    return (
+        df.select(
+            "*",
+            F.explode(F.sequence(grid_col(x0, *LON, res),
+                                 grid_col(x1, *LON, res))).alias("_gx"),
+            F.sequence(grid_col(y0, *LAT, res),
+                       grid_col(y1, *LAT, res)).alias("_gys"),
+        )
+        .select("*", F.explode("_gys").alias("_gy"))
+        .drop("_gys")
+    )
 
 
 def attach_cell(df, res: int, lon: str = "lon", lat: str = "lat",

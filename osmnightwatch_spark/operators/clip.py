@@ -17,8 +17,8 @@ without epsilon tuning). Vertical/horizontal segments take the
 containment branch (no 0/0 division is ever evaluated).
 
 Scale shape (the 100 TB argument): each segment explodes to the grid
-cells of its BOUNDING BOX at ``res`` (two bounded ``sequence``
-explodes — a GPS hop or road edge spans ~1–4 cells at a resolution
+cells of its BOUNDING BOX at ``res`` (``cells.box_cells`` — a GPS
+hop or road edge spans ~1–4 cells at a resolution
 chosen via ``overlay.res_for_extent`` from the average hop length);
 the clip predicate then discards bbox cells the segment misses. All
 arithmetic is whole-stage codegen; the only shuffle is whatever the
@@ -67,19 +67,9 @@ def clip_segments_to_tiles(segs: DataFrame, res: int,
         F.col(x1).alias("_x1"), F.col(y1).alias("_y1"),
         F.col(x2).alias("_x2"), F.col(y2).alias("_y2"),
     )
-    covered = (
-        s.select(
-            "*",
-            F.explode(F.sequence(
-                C.grid_col(F.least("_x1", "_x2"), *C.LON, res),
-                C.grid_col(F.greatest("_x1", "_x2"), *C.LON, res))).alias("_gx"),
-            F.sequence(
-                C.grid_col(F.least("_y1", "_y2"), *C.LAT, res),
-                C.grid_col(F.greatest("_y1", "_y2"), *C.LAT, res)).alias("_gys"),
-        )
-        .select("*", F.explode("_gys").alias("_gy"))
-        .drop("_gys")
-    )
+    covered = C.box_cells(
+        s, res, F.least("_x1", "_x2"), F.least("_y1", "_y2"),
+        F.greatest("_x1", "_x2"), F.greatest("_y1", "_y2"))
 
     lon0 = F.lit(-180.0) + F.col("_gx").cast("double") * F.lit(w)
     lon1 = F.lit(-180.0) + (F.col("_gx") + F.lit(1)).cast("double") * F.lit(w)

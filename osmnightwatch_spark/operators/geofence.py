@@ -23,8 +23,8 @@ dead at planet scale). This path never builds it:
 
 1. one per-entity window assigns a dense fix sequence number
    (millions of small groups — no skew unit);
-2. fences explode to the grid cells of their bbox at ``res`` (bounded
-   ``sequence`` explode, the ``rect_overlay_join`` covering); each
+2. fences explode to the grid cells of their bbox at ``res``
+   (``cells.box_cells``, the ``rect_overlay_join`` covering); each
    fix lands in exactly ONE cell, so the candidate equi-join on
    ``(gx, gy)`` touches only (fix, nearby-fence) pairs and the exact
    closed predicate keeps actual sightings — output-proportional,
@@ -74,22 +74,12 @@ def geofence_transitions(points: DataFrame, fences: DataFrame, res: int = 4,
         .withColumn("_seq", F.row_number().over(seq_w))
     )
 
-    covered = (
+    covered = C.box_cells(
         fences.select(
             F.col(fence_id).alias("fence_id"),
             F.col("lon0"), F.col("lon1"), F.col("lat0"), F.col("lat1"),
-        )
-        .select(
-            "*",
-            F.explode(F.sequence(
-                C.grid_col(F.col("lon0"), *C.LON, res),
-                C.grid_col(F.col("lon1"), *C.LON, res))).alias("_gx"),
-            F.sequence(
-                C.grid_col(F.col("lat0"), *C.LAT, res),
-                C.grid_col(F.col("lat1"), *C.LAT, res)).alias("_gys"),
-        )
-        .select("*", F.explode("_gys").alias("_gy"))
-        .drop("_gys")
+        ),
+        res, F.col("lon0"), F.col("lat0"), F.col("lon1"), F.col("lat1"),
     )
 
     sightings = (

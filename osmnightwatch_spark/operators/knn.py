@@ -261,10 +261,11 @@ def knn_join(probes: DataFrame, candidates: DataFrame, k: int,
     # ~0.5 s of ring-plan construction below instead of preceding it
     # (guide §2.6 "overlap independent jobs" — here the overlap is
     # job-vs-driver-planning). The count is joined exactly where its
-    # value is first needed.
+    # value is first needed. Given the session, the wrapper carries the
+    # caller's job tags and local properties into the thread.
     _count_box: dict = {}
 
-    @inheritable_thread_target
+    @inheritable_thread_target(probes.sparkSession)
     def _probe_count():
         _count_box["n"] = probes.count()
 

@@ -19,8 +19,8 @@ Nearest is pinned deterministically by ``(d2, seg_id)`` — equal
 distances break toward the smaller segment id on both engines.
 
 Scale shape (the 100 TB argument): segments explode to the grid
-cells of their ``radius``-EXPANDED bounding box (bounded ``sequence``
-explode at a resolution from ``range_join.res_for_radius`` — cells
+cells of their ``radius``-EXPANDED bounding box (``cells.box_cells``
+at a resolution from ``range_join.res_for_radius`` — cells
 no finer than the radius, so a road edge spans ~2–4 cells); each fix
 lands in exactly ONE cell. One equi-shuffle on ``(gx, gy)`` joins
 them, and every in-radius (fix, segment) pair shares the fix's cell
@@ -64,25 +64,15 @@ def map_match(points: DataFrame, segments: DataFrame, radius: float,
         C.grid_col(F.col(lon), *C.LON, res).alias("_gx"),
         C.grid_col(F.col(lat), *C.LAT, res).alias("_gy"),
     )
-    segs = (
+    segs = C.box_cells(
         segments.select(
             F.col(seg_id).alias("seg_id"),
             F.col(x1).alias("_x1"), F.col(y1).alias("_y1"),
             F.col(x2).alias("_x2"), F.col(y2).alias("_y2"),
-        )
-        .select(
-            "*",
-            F.explode(F.sequence(
-                C.grid_col(F.least("_x1", "_x2") - F.lit(r), *C.LON, res),
-                C.grid_col(F.greatest("_x1", "_x2") + F.lit(r), *C.LON, res),
-            )).alias("_gx"),
-            F.sequence(
-                C.grid_col(F.least("_y1", "_y2") - F.lit(r), *C.LAT, res),
-                C.grid_col(F.greatest("_y1", "_y2") + F.lit(r), *C.LAT, res),
-            ).alias("_gys"),
-        )
-        .select("*", F.explode("_gys").alias("_gy"))
-        .drop("_gys")
+        ),
+        res,
+        F.least("_x1", "_x2") - F.lit(r), F.least("_y1", "_y2") - F.lit(r),
+        F.greatest("_x1", "_x2") + F.lit(r), F.greatest("_y1", "_y2") + F.lit(r),
     )
 
     dx = F.col("_x2") - F.col("_x1")

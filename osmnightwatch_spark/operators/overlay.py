@@ -58,29 +58,17 @@ def rect_overlay_join(a: DataFrame, b: DataFrame, res: int = 4,
     lon0 ≤ lon1, lat0 ≤ lat1; no antimeridian wrap — split wrapped
     boxes upstream, the PIP covering convention).
     """
-    def cover(df: DataFrame, idc: str, p: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(idc),
-                F.col("lon0").alias(f"{p}lon0"), F.col("lon1").alias(f"{p}lon1"),
-                F.col("lat0").alias(f"{p}lat0"), F.col("lat1").alias(f"{p}lat1"),
-                F.explode(F.sequence(
-                    C.grid_col(F.col("lon0"), *C.LON, res),
-                    C.grid_col(F.col("lon1"), *C.LON, res))).alias("_gx"),
-                F.sequence(
-                    C.grid_col(F.col("lat0"), *C.LAT, res),
-                    C.grid_col(F.col("lat1"), *C.LAT, res)).alias("_gys"),
-            )
-            .select(idc, f"{p}lon0", f"{p}lon1", f"{p}lat0", f"{p}lat1",
-                    "_gx", F.explode("_gys").alias("_gy"))
-        )
+    def cover(df: DataFrame, idc: str, name: str) -> DataFrame:
+        box = df.select(idc, "lon0", "lon1", "lat0", "lat1")
+        return C.box_cells(box, res, F.col("lon0"), F.col("lat0"),
+                           F.col("lon1"), F.col("lat1")).alias(name)
 
     A = cover(a, a_id, "_a")
     B = cover(b, b_id, "_b")
-    ilon0 = F.greatest("_alon0", "_blon0")
-    ilon1 = F.least("_alon1", "_blon1")
-    ilat0 = F.greatest("_alat0", "_blat0")
-    ilat1 = F.least("_alat1", "_blat1")
+    ilon0 = F.greatest("_a.lon0", "_b.lon0")
+    ilon1 = F.least("_a.lon1", "_b.lon1")
+    ilat0 = F.greatest("_a.lat0", "_b.lat0")
+    ilat1 = F.least("_a.lat1", "_b.lat1")
     return (
         A.join(B, ["_gx", "_gy"])
         .where((ilon1 > ilon0) & (ilat1 > ilat0)

@@ -6,12 +6,13 @@ Recasts the reference's filter-and-refine containment join
 ``Intersects``→``Contains``∨``Overlaps`` refinement at :664-674) as a
 Spark-native two-phase plan:
 
-1. **Prepare** (driver, once per polygon set — the PreparedPolygon
+1. **Prepare** (once per polygon set, memoized — the PreparedPolygon
    analog, :486,637): each polygon → quadtree cell covering with cells
    classified FULL (entirely inside) or BOUNDARY (edge passes through)
-   — ``functions.geometry.cover_polygon`` — plus a band index: per
-   (polygon, leaf-resolution grid row) the polygon's edges whose
-   y-range overlaps that row.
+   — ``functions.geometry.cover_polygon``, on executors for large sets
+   and on the driver for small ones — plus a band index, built on the
+   driver: per (polygon, leaf-resolution grid row) the polygon's edges
+   whose y-range overlaps that row.
 2. **Candidate pass** (the R-tree analog): points get a cell id via the
    *native* ``attach_cell`` encode (whole-stage codegen, no Python),
    then equi-join the covering table on ``cell``. Catalyst picks the
@@ -63,6 +64,24 @@ BOUNDARY = int(G.BOUNDARY)
 #: polygon tuple) — see the docstring there
 _BUILD_CACHE: dict = {}
 
+#: total vertex (edge) count from which :meth:`PreparedPolygons.build`
+#: covers on executors: the smallest measured size at which executors
+#: won every rep. Seconds per cold build, local[4] on a 4-core host,
+#: res 7 random stars with an 8-vertex hole (300 random rectangles at
+#: res 6), the two paths alternating; at every size both paths gave
+#: the same covering and bands:
+#:
+#:   set                total   driver       executors   executors won
+#:   300 rectangles      1.2k   0.61–0.68    1.14–1.57   0 of 3
+#:   64 × 100 vertices   6.9k   0.35–0.37    0.76–0.92   0 of 3
+#:   64 × 250           16.5k   0.45–0.56    0.69–0.81   0 of 3
+#:   64 × 500           32.5k   0.65–1.06    0.86–1.22   2 of 7
+#:   64 × 600           38.9k   0.81–0.87    0.83–1.01   1 of 4
+#:   64 × 750           48.5k   1.11–1.34    0.88–1.16   4 of 4
+#:   64 × 1000          64.5k   1.34–1.88    1.01–1.13   7 of 7
+#:   64 × 10000          641k   9.3–11.6     3.9–4.7     3 of 3
+_EXECUTOR_MIN_VERTICES = 48_000
+
 #: per-edge array columns of the band index (ray-cast inputs)
 _EDGE_COLS = ("_bx1", "_by1", "_bx2", "_by2", "_binv")
 
@@ -73,14 +92,43 @@ _EDGE_COLS = ("_bx1", "_by1", "_bx2", "_by2", "_binv")
 _BAND_TOL = 1e-9
 
 
+def _cover_one(pid: int, polys: list, res: int, max_cells: int) -> pd.DataFrame:
+    """One polygon's covering rows — the kernel both build paths run,
+    so their coverings are identical."""
+    ids, kinds = G.cover_polygon(polys, res=res, max_cells=max_cells)
+    return pd.DataFrame({"polygon_id": np.full(len(ids), pid, np.int64),
+                         "cell": ids, "kind": kinds.astype(np.int8)})
+
+
+def _cover_on_executors(spark: SparkSession, polygons: list[tuple[int, bytes]],
+                        res: int, max_cells: int) -> pd.DataFrame:
+    """:func:`_cover_one` per polygon as ``mapInPandas`` over a
+    (polygon_id, wkb) DataFrame; only the covering rows are collected
+    back, reordered into input order (the driver loop's order)."""
+    src = spark.createDataFrame(pd.DataFrame({
+        "_i": np.arange(len(polygons), dtype=np.int64),
+        "polygon_id": [int(p) for p, _ in polygons],
+        "geom_wkb": [bytes(w) for _, w in polygons],
+    })).repartition(min(len(polygons), spark.sparkContext.defaultParallelism))
+
+    def gen(batches):
+        for b in batches:
+            for i, pid, wkb in zip(b["_i"], b["polygon_id"], b["geom_wkb"]):
+                yield _cover_one(int(pid), G.wkb_to_polygons(bytes(wkb)),
+                                 res, max_cells).assign(_i=i)
+
+    out = src.mapInPandas(
+        gen, "polygon_id long, cell long, kind tinyint, _i long").toPandas()
+    return (out.sort_values("_i", kind="stable").drop(columns="_i")
+            .reset_index(drop=True))
+
+
 @dataclass
 class PreparedPolygons:
-    """Driver-side prepared polygon set: covering table + band index."""
+    """Prepared polygon set: covering table + band index."""
 
     covering: pd.DataFrame          # polygon_id LONG, cell LONG, kind TINYINT
-    edges: dict[int, tuple]         # polygon_id -> (x1, y1, x2, y2) float64 arrays
     res: int                        # leaf (finest) covering resolution
-    min_res: int                    # coarsest resolution present in the covering
     bands: pd.DataFrame             # polygon_id, _band, + _EDGE_COLS arrays
 
     @classmethod
@@ -88,94 +136,49 @@ class PreparedPolygons:
               max_cells: int = 4096) -> "PreparedPolygons":
         """polygons: [(polygon_id, wkb_polygon_or_multipolygon), ...].
 
-        Memoized on the full input (polygon set is immutable): the
-        quadtree covering recursion is driver-side work a caller that
-        re-plans the same join (every bench run; any interactive
-        session) would otherwise pay per call — measured ~0.6 s per
-        flagship run at the 236-polygon fixture (guide §5: keep data
-        work off the driver). The cache also carries the per-session
-        DataFrame memos across calls.
+        Each WKB is parsed once on the driver, into the edge arrays the
+        band index is built from. The covering — the per-polygon
+        quadtree recursion, the expensive half of prepare — runs on
+        executors (``mapInPandas``, one task per polygon group) when the
+        set holds at least ``_EXECUTOR_MIN_VERTICES`` vertices and at
+        least 2 polygons and a Spark session is active; otherwise it
+        runs on the driver. The vertex count is checked first, so a
+        small set never touches the JVM. Both paths run
+        :func:`_cover_one` and give the same covering.
+
+        Memoized on the full input (polygon set is immutable): a caller
+        that re-plans the same join (every bench run, every streaming
+        micro-batch of the admin validator) pays the covering once. The
+        cache also carries the per-session DataFrame memos across
+        calls. Reference analog: the prepared-geometry cache,
+        ``AdminCountPerCountryAnalyzer.cs:470-490``.
         """
         key = (res, max_cells,
                tuple((int(p), bytes(w)) for p, w in polygons))
         hit = _BUILD_CACHE.get(key)
         if hit is not None:
             return hit
-        cov_pid, cov_cell, cov_kind = [], [], []
+        parsed = [(int(pid), G.wkb_to_polygons(wkb)) for pid, wkb in polygons]
         edges: dict[int, tuple] = {}
-        for pid, wkb in polygons:
-            polys = G.wkb_to_polygons(wkb)
-            ids, kinds = G.cover_polygon(polys, res=res, max_cells=max_cells)
-            cov_pid.append(np.full(len(ids), pid, dtype=np.int64))
-            cov_cell.append(ids)
-            cov_kind.append(kinds)
+        for pid, polys in parsed:
             soup = G.EdgeSoup(polys)
-            edges[int(pid)] = (soup.x1, soup.y1, soup.x2, soup.y2)
-        covering = pd.DataFrame({
-            "polygon_id": np.concatenate(cov_pid) if cov_pid else np.empty(0, np.int64),
-            "cell": np.concatenate(cov_cell) if cov_cell else np.empty(0, np.int64),
-            "kind": np.concatenate(cov_kind) if cov_kind else np.empty(0, np.int8),
-        })
-        min_res = int((covering["cell"].to_numpy() >> 58).min()) if len(covering) else res
-        out = cls(covering=covering, edges=edges, res=res, min_res=min_res,
-                  bands=_edge_table(edges, res))
+            edges[pid] = (soup.x1, soup.y1, soup.x2, soup.y2)
+        n_vertices = sum(len(e[0]) for e in edges.values())
+        spark = (SparkSession.getActiveSession()
+                 if n_vertices >= _EXECUTOR_MIN_VERTICES and len(parsed) >= 2
+                 else None)
+        if spark is not None:
+            covering = _cover_on_executors(spark, polygons, res, max_cells)
+        elif parsed:
+            covering = pd.concat([_cover_one(pid, polys, res, max_cells)
+                                  for pid, polys in parsed], ignore_index=True)
+        else:
+            covering = _cover_one(0, [], res, max_cells)
+        out = cls(covering=covering, res=res, bands=_edge_table(edges, res))
         if len(_BUILD_CACHE) >= 16:  # bounded: a handful of live sets
             _BUILD_CACHE.clear()
         _BUILD_CACHE[key] = out
         return out
-
-    @classmethod
-    def build_distributed(cls, spark: SparkSession,
-                          polygons: list[tuple[int, bytes]], res: int = 7,
-                          max_cells: int = 4096) -> "PreparedPolygons":
-        """:meth:`build` with the covering computation fanned out over
-        executors.
-
-        The per-polygon quadtree recursion (``cover_polygon``) is the
-        expensive half of prepare — minutes of driver time for real
-        country polygons with 10^6 vertices — and embarrassingly
-        parallel, so it runs as ``mapInPandas`` over a (polygon_id,
-        wkb) DataFrame; only the (polygon_id, cell, kind) covering
-        table is collected back. The edge arrays are parsed driver-side
-        (one linear vectorized WKB scan; they must live on the driver
-        anyway to become the band index).
-        Reference analog: the prepared-geometry cache,
-        ``AdminCountPerCountryAnalyzer.cs:470-490``.
-        """
-        if not polygons:
-            return cls.build([], res=res, max_cells=max_cells)
-        src = spark.createDataFrame(
-            pd.DataFrame({
-                "polygon_id": [int(p) for p, _ in polygons],
-                "geom_wkb": [bytes(w) for _, w in polygons],
-            })
-        ).repartition(min(len(polygons), spark.sparkContext.defaultParallelism))
-
-        def gen(batches):
-            for b in batches:
-                for pid, wkb in zip(b["polygon_id"], b["geom_wkb"]):
-                    polys = G.wkb_to_polygons(bytes(wkb))
-                    ids, kinds = G.cover_polygon(polys, res=res,
-                                                 max_cells=max_cells)
-                    yield pd.DataFrame({
-                        "polygon_id": np.full(len(ids), int(pid), np.int64),
-                        "cell": ids,
-                        "kind": kinds.astype(np.int32),
-                    })
-
-        covering = (
-            src.mapInPandas(gen, "polygon_id long, cell long, kind int")
-            .toPandas()
-        )
-        covering["kind"] = covering["kind"].astype(np.int8)
-        edges = {}
-        for pid, wkb in polygons:
-            soup = G.EdgeSoup(G.wkb_to_polygons(wkb))
-            edges[int(pid)] = (soup.x1, soup.y1, soup.x2, soup.y2)
-        min_res = (int((covering["cell"].to_numpy() >> 58).min())
-                   if len(covering) else res)
-        return cls(covering=covering, edges=edges, res=res, min_res=min_res,
-                   bands=_edge_table(edges, res))
 
     def _per_session(self, spark: SparkSession, name: str, make) -> DataFrame:
         """``make()``, memoized per session: the prepared tables are

@@ -117,6 +117,14 @@ def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
     Empty clusters drop out (both engines agree: GROUP BY emits only
     non-empty groups).
     """
+    return _kmeans(embeddings, k, iters, dims, id_col, vec).drop("qv")
+
+
+def _kmeans(embeddings: DataFrame, k: int, iters: int, dims: int,
+            id_col: str, vec: str) -> DataFrame:
+    """:func:`kmeans_assign` with the quantized vector ``qv`` of the
+    final scoring pass carried along, so :func:`semdedup` prunes on it
+    without quantizing and scanning its input again."""
     with CacheScope() as scope:
         q = scope.persist(embeddings.select(
             F.col(id_col).alias("_id"), _quantize_col(vec, dims).alias("qv")
@@ -143,7 +151,7 @@ def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
         qn = F.sqrt(_qnorm2_col("qv"))
         return assigned.select(
             F.col("_id").alias(id_col), "cluster",
-            (F.col("_qsim") / qn).alias("sim"))
+            (F.col("_qsim") / qn).alias("sim"), "qv")
 
 
 def kmeans_sql(table: str, k: int, iters: int, dims: int,
@@ -293,13 +301,11 @@ def semdedup(embeddings: DataFrame, k: int, iters: int, dims: int, tau: float,
     ties by id): the paper's keep-the-outlier policy, reduced to pair
     edges. ``sim_r`` is the centroid cosine rounded to 9 (display
     only — decisions use the unrounded exact-int-derived value).
-    Assignment is :func:`kmeans_assign`, the pair stage
-    :func:`_prune_numpy`; the result equals :func:`semdedup_sql`
-    row for row."""
-    q = embeddings.select(
-        F.col(id_col).alias("_id"), _quantize_col(vec, dims).alias("qv"))
-    a = kmeans_assign(embeddings, k, iters, dims, id_col, vec).join(
-        q.withColumnRenamed("_id", id_col), id_col)
+    Assignment is :func:`kmeans_assign` (whose last scoring pass also
+    hands over the quantized vectors: one input scan, no join back on
+    the id), the pair stage :func:`_prune_numpy`; the result equals
+    :func:`semdedup_sql` row for row."""
+    a = _kmeans(embeddings, k, iters, dims, id_col, vec)
     return _prune_numpy(a, tau, id_col).select(
         id_col, "cluster", F.round("sim", 9).alias("sim_r"), "kept")
 

@@ -9,14 +9,18 @@ Pipeline (mirrors ProcessPbf, SURVEY.md §3.1, stages 4-6):
    failure reason; failures become OpenAdminPolygon issues;
 3. admin_centre structural checks (:263-294);
 4. state construction: country (admin_level=2) polygons become the
-   prepared PIP set; every admin's representative point joins against
-   it → per-(country, level) sorted admin sets (A5) and the reverse
+   prepared PIP set (``PreparedPolygons.build``: memoized, so a
+   streaming re-run over the same countries covers them once, and
+   covered on executors once the countries hold enough vertices);
+   every admin's representative point joins against it →
+   per-(country, level) sorted admin sets (A5) and the reverse
    admin→country map (A6);
 5. expected-vs-actual diff (operators/issues.admin_diff_issues) →
    lost/gained/missing issues.
 
-Everything between the two pandas kernels (ring stitch, ray-cast
-refine) is native DataFrame ops.
+Everything but the pandas kernels (ring stitch, representative point,
+and the covering when the country set is large) is native DataFrame
+ops; the PIP refine is a native SQL ray cast.
 """
 
 from __future__ import annotations
@@ -100,22 +104,17 @@ def build_state(assembled: DataFrame, admin_meta: DataFrame,
                 cover_res: int = 7) -> DataFrame:
     """Actual state: (country_id, country_name, admin_level, admin_id).
 
-    Countries = assembled level-2 polygons (prepared covering, driver-
-    side — the dim side is small, as in the reference's in-memory
-    STRtree, :470-490); admins join by representative point (J3/J4).
+    Countries = assembled level-2 polygons, collected and prepared by
+    ``PreparedPolygons.build`` (the reference's in-memory STRtree,
+    :470-490; the builder picks driver or executors for the covering
+    itself); admins join by representative point (J3/J4).
     """
     meta = admin_meta.select("relation_id", "admin_level", "name")
     geoms = assembled.where(F.col("reason").isNull()).join(meta, "relation_id")
     countries = geoms.where(F.col("admin_level") == 2).select(
         "relation_id", "name", "geom_wkb").collect()
     polys = [(int(r.relation_id), bytes(r.geom_wkb)) for r in countries]
-    # the covering recursion is the expensive half of prepare: keep the
-    # serial fast path for tiny sets, fan out on executors otherwise
-    if len(polys) > 32:
-        prepared = PreparedPolygons.build_distributed(
-            assembled.sparkSession, polys, res=cover_res)
-    else:
-        prepared = PreparedPolygons.build(polys, res=cover_res)
+    prepared = PreparedPolygons.build(polys, res=cover_res)
     names = {int(r.relation_id): r.name for r in countries}
     admins = geoms.where(F.col("admin_level") > 2).withColumn(
         "rp", _rep_point(F.col("geom_wkb"))

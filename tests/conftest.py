@@ -6,6 +6,16 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
+def pytest_configure(config):
+    # a driver thread wrapped without its session loses the caller's
+    # job tags (so interruptTag cannot reach its jobs): fail the test
+    config.addinivalue_line(
+        "filterwarnings",
+        r"error:Spark session is not provided\. Tags will not be "
+        r"inherited\.:UserWarning",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from osmnightwatch_spark.session import get_spark

@@ -162,6 +162,45 @@ def test_ring_cells_col_matches_numpy(spark, tmp_path):
         C.ring_cells_col(spark.read.parquet(path), 3, -1)
 
 
+def test_box_cells_matches_numpy(spark, tmp_path):
+    """box_cells emits exactly the grid_xy range enumeration of each
+    box — corners past ±180 / ±90 (clamped), corners exactly on cell
+    edges, zero-size boxes — and leaks no staging column."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(21)
+    res = 5
+    n = 1 << res
+    lon0 = rng.uniform(-200, 200, 120)
+    lat0 = rng.uniform(-100, 100, 120)
+    w, h = rng.uniform(0, 40, 120), rng.uniform(0, 20, 120)
+    # corners on cell edges (including the grid's own ±180 / ±90 edges)
+    edge_x = -180.0 + rng.integers(0, n + 1, 40) * (360.0 / n)
+    edge_y = -90.0 + rng.integers(0, n + 1, 40) * (180.0 / n)
+    x0 = np.concatenate([lon0, edge_x, [-180.0, 180.0, 12.5, -250.0]])
+    y0 = np.concatenate([lat0, edge_y, [-90.0, 90.0, -3.0, -95.0]])
+    x1 = np.concatenate([lon0 + w, edge_x + (360.0 / n) * rng.integers(0, 3, 40),
+                         [-180.0, 180.0, 12.5, 250.0]])
+    y1 = np.concatenate([lat0 + h, edge_y + (180.0 / n) * rng.integers(0, 3, 40),
+                         [-90.0, 90.0, -3.0, 95.0]])
+    x1[100:110], y1[100:110] = x0[100:110], y0[100:110]  # zero-size boxes
+    path = str(tmp_path / "boxes")
+    spark.createDataFrame(pd.DataFrame(
+        {"i": np.arange(len(x0)), "x0": x0, "y0": y0, "x1": x1, "y1": y1})
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    out = C.box_cells(df, res, F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"))
+    assert out.columns == df.columns + ["_gx", "_gy"]
+    got = sorted(map(tuple, out.select("i", "_gx", "_gy").toPandas().to_numpy()))
+    gx0, gy0 = C.grid_xy(x0, y0, res)
+    gx1, gy1 = C.grid_xy(x1, y1, res)
+    want = sorted((i, gx, gy) for i in range(len(x0))
+                  for gx in range(gx0[i], gx1[i] + 1)
+                  for gy in range(gy0[i], gy1[i] + 1))
+    assert got == want
+    assert len(want) > len(x0)
+
+
 # --- compact_cells ----------------------------------------------------------
 
 def _expand_to(cell_ids, res):

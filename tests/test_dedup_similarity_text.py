@@ -753,6 +753,27 @@ def test_semdedup_matches_duckdb_twin_at_large_k(spark):
         check_names=False)
 
 
+def test_semdedup_scans_its_input_once(spark, tmp_path):
+    """semdedup prunes on the quantized vectors of k-means' last
+    scoring pass: its plan over a parquet input holds one scan of the
+    input and no join back on the id column."""
+    import re
+
+    from osmnightwatch_spark.operators import semdedup as SD
+
+    rng = np.random.default_rng(4)
+    path = str(tmp_path / "emb")
+    spark.createDataFrame(pd.DataFrame({
+        "vec_id": range(300),
+        "embedding": [list(map(float, r)) for r in rng.normal(size=(300, 8))],
+    })).write.parquet(path)
+    out = SD.semdedup(spark.read.parquet(path), k=4, iters=2, dims=8, tau=0.9)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert not re.search(r"Join.*vec_id", plan), plan
+    assert out.count() == 300
+
+
 def test_semdedup_assign_rejects_sums_past_int64_bound(spark):
     """Scores are exact int64 dots; a centroid sum large enough to
     wrap one raises ValueError on the driver instead of returning

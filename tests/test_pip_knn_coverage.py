@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 from osmnightwatch_spark.functions import geometry as G
+from osmnightwatch_spark.operators import pip_join as PJ
 from osmnightwatch_spark.operators.coverage import geometric_coverage, observed_coverage
 from osmnightwatch_spark.operators.knn import knn_join, knn_join_brute
 from osmnightwatch_spark.operators.pip_join import (
@@ -130,7 +131,8 @@ def test_geometric_coverage_expands_coarse_cells(spark):
     rect = [(1, P.rect_wkb(-180.0, -90.0, -135.0, -45.0))]
     truth = 1 / 8 * 1 / 4
     prep = PreparedPolygons.build(rect, res=7)
-    assert prep.min_res < 6  # the fixture really produces coarse cells
+    # the fixture really produces coarse cells
+    assert (prep.covering.cell.to_numpy() >> 58).min() < 6
     cov5 = geometric_coverage(spark, prep, tile_res=6).toPandas()
     cov0 = geometric_coverage(spark, prep, tile_res=0).toPandas()
     total5 = float((cov5.covered_fraction * 4.0 ** -6).sum())
@@ -142,28 +144,109 @@ def test_geometric_coverage_expands_coarse_cells(spark):
     assert (cov5.covered_fraction <= 1.0 + 1e-9).all()
 
 
-def test_build_distributed_matches_serial(spark):
-    """PreparedPolygons.build_distributed (executor-side covering
-    computation) is bit-identical to the serial driver build on a
-    polygon set large enough to exercise many partitions."""
-    rng = np.random.default_rng(5)
+def _jobs_and_plans(spark, fn):
+    """Run ``fn()`` and return ``(result, job_tags, plans)``: the tags
+    (``|``-joined) of each Spark job and the physical plan description
+    of each SQL execution started inside the call (selected by id, so a
+    bounded status store cannot hide them)."""
+    sc = spark.sparkContext
+    jobs = sc._jsc.sc().statusStore()
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def job_tags():
+        js = jobs.jobsList(None)
+        return {js.apply(i).jobId(): js.apply(i).jobTags().mkString("|")
+                for i in range(js.size())}
+
+    def exec_ids():
+        es = sql.executionsList()
+        return [es.apply(i).executionId() for i in range(es.size())]
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    first_job = max(job_tags(), default=-1) + 1
+    first_exec = max(exec_ids(), default=-1) + 1
+    out = fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tags = [t for i, t in job_tags().items() if i >= first_job]
+    plans = [sql.execution(i).get().physicalPlanDescription()
+             for i in exec_ids() if i >= first_exec]
+    return out, tags, plans
+
+
+def _star_set(n, k, seed):
+    rng = np.random.default_rng(seed)
     polys = []
+    for pid in range(n):
+        cx, cy = rng.uniform(-150, 150), rng.uniform(-60, 60)
+        r = rng.uniform(5, 20)
+        ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+        rad = rng.uniform(0.6 * r, r, k)
+        shell = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+        polys.append((100 + pid, G.rings_to_wkb([np.vstack([shell, shell[:1]])])))
+    return polys
+
+
+def test_build_picks_executors_by_vertex_count(spark):
+    """PreparedPolygons.build is the one builder: a set below
+    ``_EXECUTOR_MIN_VERTICES`` covers on the driver and starts no Spark
+    job; a set above it covers in a ``MapInPandas`` execution. Both
+    equal per-polygon ``cover_polygon`` in input order plus the band
+    table of their edges, and a second build of the large set is a
+    memo hit that starts no job."""
+    rng = np.random.default_rng(5)
+    rects = []
     for i in range(300):
         x0 = float(rng.uniform(-179, 170))
         y0 = float(rng.uniform(-84, 75))
-        polys.append((i, P.rect_wkb(x0, y0, x0 + rng.uniform(0.5, 8),
+        rects.append((i, P.rect_wkb(x0, y0, x0 + rng.uniform(0.5, 8),
                                     y0 + rng.uniform(0.5, 8))))
-    serial = PreparedPolygons.build(polys, res=6)
-    dist = PreparedPolygons.build_distributed(spark, polys, res=6)
-    key = ["polygon_id", "cell", "kind"]
-    a = serial.covering.sort_values(key).reset_index(drop=True)
-    b = dist.covering.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    assert serial.min_res == dist.min_res and serial.res == dist.res
-    assert set(serial.edges) == set(dist.edges)
-    for pid in (0, 137, 299):
-        for s, d in zip(serial.edges[pid], dist.edges[pid]):
-            np.testing.assert_array_equal(s, d)
+    stars = _star_set(8, PJ._EXECUTOR_MIN_VERTICES // 8 + 1, seed=9)
+    PJ._BUILD_CACHE.clear()
+    for polys, res, on_executors in ((rects, 6, False), (stars, 7, True)):
+        prep, jobs, plans = _jobs_and_plans(
+            spark, lambda: PreparedPolygons.build(polys, res=res))
+        assert bool(jobs) is on_executors
+        assert any("MapInPandas" in p for p in plans) is on_executors
+        want = []
+        edges = {}
+        for pid, wkb in polys:
+            ids, kinds = G.cover_polygon(G.wkb_to_polygons(wkb), res=res)
+            want.append(pd.DataFrame({"polygon_id": np.full(len(ids), pid, np.int64),
+                                      "cell": ids, "kind": kinds}))
+            soup = G.EdgeSoup.from_wkb(wkb)
+            edges[pid] = (soup.x1, soup.y1, soup.x2, soup.y2)
+        pd.testing.assert_frame_equal(prep.covering,
+                                      pd.concat(want, ignore_index=True))
+        band_want = PJ._edge_table(edges, res)
+        assert prep.bands.columns.tolist() == band_want.columns.tolist()
+        for c in ("polygon_id", "_band"):
+            assert prep.bands[c].tolist() == band_want[c].tolist()
+        for c in PJ._EDGE_COLS:
+            assert prep.bands[c].map(list).tolist() == band_want[c].map(list).tolist()
+    again, jobs, _ = _jobs_and_plans(
+        spark, lambda: PreparedPolygons.build(stars, res=7))
+    assert again is prep and not jobs
+
+
+def test_knn_probe_count_thread_keeps_job_tags(spark):
+    """knn_join counts its probes on a driver thread; every job the
+    call starts carries the job tag the caller added, so
+    ``interruptTag`` reaches the count job too."""
+    rng = np.random.default_rng(3)
+    probes = spark.createDataFrame(pd.DataFrame({
+        "probe_id": np.arange(40), "lon": rng.uniform(-10, 10, 40),
+        "lat": rng.uniform(-10, 10, 40)}))
+    cands = spark.createDataFrame(pd.DataFrame({
+        "cand_id": np.arange(500), "lon": rng.uniform(-10, 10, 500),
+        "lat": rng.uniform(-10, 10, 500)}))
+    spark.addTag("knn-probe")
+    try:
+        _, tags, _ = _jobs_and_plans(
+            spark, lambda: knn_join(probes, cands, k=3, res=5).collect())
+    finally:
+        spark.removeTag("knn-probe")
+    assert len(tags) >= 2
+    assert all("knn-probe" in t for t in tags), tags
 
 
 def test_knn_empty_neighborhood_ring_expansion(spark, pre_checkpoint):
