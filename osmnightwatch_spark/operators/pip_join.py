@@ -10,35 +10,37 @@ Spark-native two-phase plan:
    analog, :486,637): each polygon → quadtree cell covering with cells
    classified FULL (entirely inside) or BOUNDARY (edge passes through)
    — ``functions.geometry.cover_polygon``, on executors for large sets
-   and on the driver for small ones — plus a band index, built on the
-   driver: per (polygon, leaf-resolution grid row) the polygon's edges
-   whose y-range overlaps that row.
-2. **Candidate pass** (the R-tree analog): points get a cell id via the
-   *native* ``attach_cell`` encode (whole-stage codegen, no Python),
-   then equi-join the covering table on ``cell``. Catalyst picks the
-   physical join; for dim-sized polygon sets we force ``broadcast`` so
-   the 10^12-row point side is never shuffled.
-3. **Refine**: points that hit a FULL cell are inside by construction —
-   zero per-point geometry work. Only BOUNDARY-cell hits run the exact
-   ray-cast: they equi-join the band index on (polygon, grid row) and
-   are filtered by a native SQL ``aggregate`` over that row's edges —
-   bit-identical to ``geometry.points_in_edgesoup`` over the whole
-   polygon (an edge whose y-range misses the point's row adds no
-   crossing and cannot hold it), with no Python in the plan.
+   and on the driver for small ones — expanded to the leaf resolution
+   (the small side is replicated, never the point side), plus a band
+   index, built on the driver: per (polygon, leaf-resolution grid row)
+   the polygon's edges whose y-range overlaps that row.
+2. **Candidate pass** (the R-tree analog): points get their leaf cell
+   via the *native* ``attach_cell`` encode (whole-stage codegen, no
+   Python) and equi-join the leaf table on ``cell``: one probe per
+   point. For dim-sized polygon sets we force ``broadcast`` so the
+   10^12-row point side is never shuffled.
+3. **Refine**, in the same pass: FULL-cell hits are inside by
+   construction. BOUNDARY hits LEFT-join the band index on (polygon,
+   grid row) and one ``Filter`` ray-casts them only: a native SQL
+   ``aggregate`` over that row's edges — bit-identical to
+   ``geometry.points_in_edgesoup`` over the whole polygon (an edge
+   whose y-range misses the point's row adds no crossing and cannot
+   hold it), with no Python in the plan.
 
 Scale notes (100 TB / 10^12 rows):
-* the point side is touched by one narrow projection + map-side joins
-  — no shuffle and no Python anywhere in the plan;
+* the point side is scanned once and touched by one narrow projection
+  + two map-side joins — no shuffle, no explode and no Python;
 * refinement volume is proportional to the polygon *perimeter* measured
   in cells, not to the point count: finer covering resolution trades a
-  bigger broadcast for less refine work (``cover_res`` knob,
-  ``max_cells`` caps the broadcast); per refined point the cost is the
-  edges of one grid row, not of the whole polygon, so polygons with
-  10^4–10^6 vertices stay cheap;
+  bigger broadcast for less refine work (``cover_res`` knob; the leaf
+  table grows ~4× per level, capped at ``_MAX_LEAF_CELLS`` rows); per
+  refined point the cost is the edges of one grid row, not of the
+  whole polygon, so polygons with 10^4–10^6 vertices stay cheap;
 * hot cells (cities) don't skew this join: broadcast join has no
   shuffle; when the index outgrows the session's broadcast threshold
   both sides shuffle on the cell key and AQE skew-join splitting
-  applies.
+  applies (the band join keys a polygon's FULL hits on (polygon,
+  NULL); AQE splits a LEFT join's left side too).
 """
 
 from __future__ import annotations
@@ -81,6 +83,10 @@ _BUILD_CACHE: dict = {}
 #:   64 × 1000          64.5k   1.34–1.88    1.01–1.13   7 of 7
 #:   64 × 10000          641k   9.3–11.6     3.9–4.7     3 of 3
 _EXECUTOR_MIN_VERTICES = 48_000
+
+#: most rows :func:`_leaf_table` may expand a covering to (~80 MB; the
+#: 25 admin fixture polygons give 17k at res 7, 258k at 9, 4.08M at 11)
+_MAX_LEAF_CELLS = 1 << 22
 
 #: per-edge array columns of the band index (ray-cast inputs)
 _EDGE_COLS = ("_bx1", "_by1", "_bx2", "_by2", "_binv")
@@ -125,10 +131,12 @@ def _cover_on_executors(spark: SparkSession, polygons: list[tuple[int, bytes]],
 
 @dataclass
 class PreparedPolygons:
-    """Prepared polygon set: covering table + band index."""
+    """Prepared polygon set: quadtree covering, its expansion to the
+    leaf resolution, and the band index."""
 
     covering: pd.DataFrame          # polygon_id LONG, cell LONG, kind TINYINT
     res: int                        # leaf (finest) covering resolution
+    leaf: pd.DataFrame              # covering expanded to res, kind INT
     bands: pd.DataFrame             # polygon_id, _band, + _EDGE_COLS arrays
 
     @classmethod
@@ -145,6 +153,9 @@ class PreparedPolygons:
         runs on the driver. The vertex count is checked first, so a
         small set never touches the JVM. Both paths run
         :func:`_cover_one` and give the same covering.
+
+        ``leaf`` (:func:`_leaf_table`, the table :func:`pip_join`
+        probes) raises ``ValueError`` past ``_MAX_LEAF_CELLS`` rows.
 
         Memoized on the full input (polygon set is immutable): a caller
         that re-plans the same join (every bench run, every streaming
@@ -174,7 +185,8 @@ class PreparedPolygons:
                                   for pid, polys in parsed], ignore_index=True)
         else:
             covering = _cover_one(0, [], res, max_cells)
-        out = cls(covering=covering, res=res, bands=_edge_table(edges, res))
+        out = cls(covering=covering, res=res, leaf=_leaf_table(covering, res),
+                  bands=_edge_table(edges, res))
         if len(_BUILD_CACHE) >= 16:  # bounded: a handful of live sets
             _BUILD_CACHE.clear()
         _BUILD_CACHE[key] = out
@@ -197,13 +209,13 @@ class PreparedPolygons:
 
     def covering_df(self, spark: SparkSession) -> DataFrame:
         """The covering as a LocalRelation (per-session memo)."""
-        schema = T.StructType([
-            T.StructField("polygon_id", T.LongType(), False),
-            T.StructField("cell", T.LongType(), False),
-            T.StructField("kind", T.IntegerType(), False),
-        ])
         return self._per_session(spark, "covering", lambda: spark.createDataFrame(
-            self.covering.astype({"kind": "int32"}), schema=schema))
+            self.covering.astype({"kind": "int32"}), schema=_COVER_SCHEMA))
+
+    def leaf_df(self, spark: SparkSession) -> DataFrame:
+        """The leaf table as a LocalRelation (per-session memo)."""
+        return self._per_session(spark, "leaf", lambda: spark.createDataFrame(
+            self.leaf, schema=_COVER_SCHEMA))
 
     def bands_df(self, spark: SparkSession) -> DataFrame:
         """The band index as a LocalRelation (per-session memo)."""
@@ -211,12 +223,51 @@ class PreparedPolygons:
             self.bands, schema=_EDGE_SCHEMA))
 
 
+_COVER_SCHEMA = T.StructType([
+    T.StructField("polygon_id", T.LongType(), False),
+    T.StructField("cell", T.LongType(), False),
+    T.StructField("kind", T.IntegerType(), False),
+])
+
 _EDGE_SCHEMA = T.StructType(
     [T.StructField("polygon_id", T.LongType(), False),
      T.StructField("_band", T.LongType(), False)]
     + [T.StructField(c, T.ArrayType(T.DoubleType(), False), False)
        for c in _EDGE_COLS]
 )
+
+
+def _leaf_table(covering: pd.DataFrame, res: int) -> pd.DataFrame:
+    """``covering`` with every cell at level ``lv < res`` replaced by its
+    ``4^(res-lv)`` descendants at ``res`` (kind carried), built
+    vectorized. Descendant ``i`` of a cell with ``d = res - lv`` is
+    ``(res << 58) | ((morton << 2d) + i)``: the exact inverse of
+    ``parent_spark_sql``. Covering cells are disjoint per polygon, so
+    ``(polygon_id, cell)`` stays unique.
+
+    The row count ``Σ 4^(res-lv)`` is checked before anything is
+    allocated: a world-size polygon at a high ``res`` would otherwise
+    exhaust the driver.
+    """
+    cell = covering["cell"].to_numpy(np.int64)
+    depth = res - (cell >> C._RES_SHIFT)
+    levels, counts = np.unique(depth, return_counts=True)
+    total = sum(int(n) << (2 * int(d)) for d, n in zip(levels, counts))
+    if total > _MAX_LEAF_CELLS:
+        k = next(k for k in range(1, 64) if total <= _MAX_LEAF_CELLS << 2 * k)
+        raise ValueError(
+            f"the covering expands to {total} cells at res {res}, over the "
+            f"{_MAX_LEAF_CELLS} limit: use a coarser res (about "
+            f"{max(0, res - k)})")
+    fan = np.left_shift(np.int64(1), 2 * depth)
+    src = np.repeat(np.arange(len(cell)), fan)
+    i = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(fan) - fan, fan)
+    morton = cell[src] & ((1 << C._RES_SHIFT) - 1)
+    return pd.DataFrame({
+        "polygon_id": covering["polygon_id"].to_numpy(np.int64)[src],
+        "cell": (res << C._RES_SHIFT) | ((morton << (2 * depth[src])) + i),
+        "kind": covering["kind"].to_numpy()[src].astype(np.int32),
+    })
 
 
 def _edge_table(edges: dict[int, tuple], res: int | None) -> pd.DataFrame:
@@ -287,12 +338,12 @@ def _raycast_sql(lon: str, lat: str) -> str:
 
 
 def _index_bytes(prepared: PreparedPolygons) -> int:
-    """Estimated size of the covering plus band index: row count ×
-    schema width. A covering row is two longs and an int (20 B); a band
-    row is two longs (16 B) plus five doubles per edge it lists (40 B
-    per edge reference)."""
+    """Estimated size of the leaf table plus band index: row count ×
+    schema width. A leaf row is two longs and an int (20 B); a band row
+    is two longs (16 B) plus five doubles per edge it lists (40 B per
+    edge reference)."""
     refs = int(prepared.bands[_EDGE_COLS[0]].map(len).sum())
-    return 20 * len(prepared.covering) + 16 * len(prepared.bands) + 40 * refs
+    return 20 * len(prepared.leaf) + 16 * len(prepared.bands) + 40 * refs
 
 
 def pip_join(points: DataFrame, prepared: PreparedPolygons,
@@ -304,94 +355,37 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
     polygon drop out). Boundary points count as inside (reference
     Contains ∨ Overlaps, ``AdminCountPerCountryAnalyzer.cs:515-518``).
 
-    FULL hits and BOUNDARY hits are separate branches unioned: the ray
-    cast runs only on boundary rows, at the price of evaluating the
-    upstream (scan + cell encode) once per branch — nearly free for a
-    pruned columnar scan (materialize an expensive upstream first, as
-    ``images_ops.verified_flagship`` does).
+    One pass over ``points``: each point's leaf cell equi-joins the
+    leaf table once (a point matches at most one row per polygon);
+    BOUNDARY hits get their leaf grid row as ``_band`` (FULL hits
+    NULL), LEFT-join that row's edges, and one ``Filter`` keeps FULL
+    hits and the BOUNDARY hits the ray cast puts inside. As a filter,
+    not a join condition, the ray cast leaves the join in whole-stage
+    codegen; ``OR`` short-circuits it for FULL hits.
 
-    The covering and band index are broadcast when their estimated size
-    (:func:`_index_bytes`) fits under the session's
+    The leaf table and band index are broadcast when their estimated
+    size (:func:`_index_bytes`) fits under the session's
     ``spark.sql.autoBroadcastJoinThreshold``; a threshold ≤ 0 turns
     broadcast off. Otherwise both joins shuffle on their keys: the
-    10^12-row-covering shape.
+    10^12-row-covering shape, with no hand ``.repartition``: AQE
+    splits a hot cell only in a join's own exchanges.
     """
     spark = points.sparkSession
-    cov = prepared.covering_df(spark).withColumnRenamed("cell", "_cell")
+    leaf = prepared.leaf_df(spark).withColumnRenamed("cell", "_cell")
     bands = prepared.bands_df(spark)
     limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    broadcast = limit > 0 and _index_bytes(prepared) <= limit
-
-    # The quadtree covering holds cells at mixed resolutions (coarse FULL
-    # interiors, fine BOUNDARY rims) and its cells are disjoint per
-    # polygon, so a point matches at most one covering cell per polygon.
-    # Join the point's whole ancestor chain [min_res..res] — a native
-    # array of parent_spark_sql shifts, exploded (~res-min_res+1 narrow
-    # rows, no Python, no shuffle when the index is broadcast).
-    pts_leaf = C.attach_cell(points, prepared.res, lon=lon, lat=lat,
-                             out="_leaf")
-
-    def with_chain(levels: list[int]) -> DataFrame:
-        """Attach ``_cell`` for exactly the given covering levels — an
-        ancestor level with no covering cells can never match, so each
-        branch explodes only the levels its covering actually holds
-        (guide §3: don't multiply the join input for nothing; for the
-        typical uncapped covering the BOUNDARY rim lives only at the
-        leaf res, so that branch skips the explode entirely)."""
-        exprs = [
-            C.parent_spark_sql("`_leaf`", prepared.res - lv)
-            if lv != prepared.res else "`_leaf`"
-            for lv in levels
-        ]
-        if len(exprs) == 1:
-            out = pts_leaf.withColumn("_cell", F.expr(exprs[0]))
-        else:
-            out = pts_leaf.withColumn(
-                "_cell", F.explode(F.expr(f"array({', '.join(exprs)})"))
-            )
-        return out.drop("_leaf")
-
-    def refine(hits: DataFrame) -> DataFrame:
-        """Exact ray cast of BOUNDARY hits against the edges of their
-        polygon's grid row (no band row: no edge there, so outside)."""
-        band = hits.withColumn("_band", F.expr(
-            C._grid_spark_sql(f"`{lat}`", -90.0, 180.0, prepared.res)))
-        idx = F.broadcast(bands) if broadcast else bands
-        return (band.join(idx, ["polygon_id", "_band"])
-                .where(F.expr(_raycast_sql(lon, lat)))
-                .drop("_band", *_EDGE_COLS))
-
-    cov_res = prepared.covering["cell"].to_numpy() >> 58
-    cov_kind = prepared.covering["kind"].to_numpy()
-
-    def levels(kind: int | None = None) -> list[int]:
-        sel = cov_res if kind is None else cov_res[cov_kind == kind]
-        return sorted({int(r) for r in np.unique(sel)}) or [prepared.res]
-
-    if broadcast:
-        # Split FULL hits (inside by construction — no ray cast) from
-        # BOUNDARY hits. Each branch scans the input separately anyway,
-        # so give each its own minimal ancestor chain (per-kind
-        # covering levels).
-        full_hits = with_chain(levels(FULL)).join(
-            F.broadcast(cov.where(F.col("kind") == F.lit(FULL))), "_cell"
-        )
-        boundary_hits = refine(with_chain(levels(BOUNDARY)).join(
-            F.broadcast(cov.where(F.col("kind") == F.lit(BOUNDARY))), "_cell"
-        ))
-    else:
-        # co-partition both sides on the cell key via the join's OWN
-        # exchanges. Deliberately NO hand .repartition("_cell"): a
-        # user-injected REPARTITION_BY_COL shuffle is off-limits to
-        # AQE's OptimizeSkewedJoin (it only splits ENSURE_REQUIREMENTS
-        # exchanges), so hand-partitioning would disable exactly the
-        # skew mitigation a planted-city hot cell needs (measured:
-        # with repartition the hot cell never splits; without it the
-        # skew reader kicks in — pinned by the shuffle-PIP plan test).
-        joined = with_chain(levels()).join(cov, "_cell")
-        full_hits = joined.where(F.col("kind") == F.lit(FULL))
-        boundary_hits = refine(joined.where(F.col("kind") == F.lit(BOUNDARY)))
-    return full_hits.unionByName(boundary_hits).drop("_cell", "kind")
+    if limit > 0 and _index_bytes(prepared) <= limit:
+        leaf, bands = F.broadcast(leaf), F.broadcast(bands)
+    row = C._grid_spark_sql(f"`{lat}`", *C.LAT, prepared.res)
+    return (
+        C.attach_cell(points, prepared.res, lon=lon, lat=lat, out="_cell")
+        .join(leaf, "_cell")
+        .withColumn("_band", F.expr(f"IF(kind = {BOUNDARY}, {row}, NULL)"))
+        .join(bands, ["polygon_id", "_band"], "left")
+        .where(F.expr(f"kind = {FULL} OR (`{_EDGE_COLS[0]}` IS NOT NULL"
+                      f" AND {_raycast_sql(lon, lat)})"))
+        .select(*(f"`{c}`" for c in points.columns), "polygon_id")
+    )
 
 
 def pip_join_brute(points: DataFrame, polygons: list[tuple[int, bytes]],

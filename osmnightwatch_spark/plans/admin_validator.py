@@ -128,7 +128,7 @@ def build_state(assembled: DataFrame, admin_meta: DataFrame,
     ) if names else F.create_map()
     return hits.select(
         F.col("polygon_id").alias("country_id"),
-        name_expr.getItem(F.col("polygon_id")).alias("country_name"),
+        name_expr[F.col("polygon_id")].alias("country_name"),
         "admin_level", "admin_id",
     )
 

@@ -5,8 +5,10 @@ H3-encode + PIP-join + tile-assign pipeline"): given the images table,
 
 1. derive the geotag from ``phash`` (native arithmetic, codegen'd);
 2. assign every image a hierarchical tile (native ``attach_cell``);
-3. broadcast PIP join against the admin polygon set (prepared
-   covering; native band-index ray cast only on boundary cells);
+3. broadcast PIP join against the admin polygon set, in one pass:
+   one probe of the leaf-resolution covering per point, then a LEFT
+   band-index join whose native ray cast filters boundary-cell hits
+   only;
 4. aggregate: per (admin polygon, tile) image counts — the engine's
    analog of the reference's per-country admin feature counts
    (``AdminCountPerCountryAnalyzer.cs:222-260``).
@@ -55,10 +57,9 @@ def flagship(images: DataFrame, tile_res: int = 8, cover_res: int = 7,
     """images (input_hint shape) → flagship rollup (geotag from phash).
 
     Projects to ``phash`` alone before the join: the rollup output
-    carries no per-image id, so ``image_id`` would otherwise ride the
-    ancestor-chain explode and both union branches for nothing
-    (guide §2.3 "project before the exchange" — here, before the
-    fan-out; the parquet scan then reads a single column).
+    carries no per-image id, so ``image_id`` would otherwise ride
+    both joins for nothing (guide §2.3 "project before the exchange";
+    the parquet scan then reads a single column).
     """
     pts = I.with_geo(images.select("phash"))
     return flagship_points(pts, tile_res, cover_res, prepared)

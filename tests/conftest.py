@@ -14,6 +14,12 @@ def pytest_configure(config):
         r"error:Spark session is not provided\. Tags will not be "
         r"inherited\.:UserWarning",
     )
+    # getItem(Column) is deprecated and slated for removal: index maps
+    # with ``col[key]``
+    config.addinivalue_line(
+        "filterwarnings",
+        r"error:A column as 'key' in getItem is deprecated:FutureWarning",
+    )
 
 
 @pytest.fixture(scope="session")

@@ -7,12 +7,15 @@ end on the rows the band index splits them by. The points include
 every vertex, every edge midpoint and points lying exactly on row
 boundaries — the cases where a wrong band assignment would show."""
 
+import tracemalloc
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from osmnightwatch_spark.functions import geometry as G
 from osmnightwatch_spark.operators.pip_join import PreparedPolygons, pip_join
+from osmnightwatch_spark.sources import polygons as P
 
 RES = 7
 ROW = 180.0 / (1 << RES)
@@ -115,3 +118,74 @@ def test_pip_join_empty_polygon_set(spark, join_shape):
         {"pt_id": [1, 2], "lon": [0.0, -150.0], "lat": [0.0, 60.0]}))
     prep = PreparedPolygons.build([], res=RES)
     assert pip_join(pts, prep).count() == 0
+
+
+def _descendants(cell, res):
+    """``cell``'s descendants at ``res`` by repeated ``children``
+    (``cells`` module spec: ``((r+1) << 58) | (morton << 2) | q``)."""
+    lv = cell >> 58
+    if lv == res:
+        return [cell]
+    morton = cell & ((1 << 58) - 1)
+    return [d for q in range(4)
+            for d in _descendants(((lv + 1) << 58) | (morton << 2) | q, res)]
+
+
+@pytest.mark.parametrize("case", ["flagship_rects", "capped_stars"])
+def test_leaf_table_expands_covering(star_case, case):
+    """``leaf`` is the covering with every coarse cell replaced by its
+    leaf-resolution descendants, kind carried; ``capped_stars`` has
+    BOUNDARY cells above the leaf resolution."""
+    if case == "flagship_rects":
+        prep = PreparedPolygons.build(P.valid_polygon_list(rect_only=True), res=RES)
+    else:
+        prep = PreparedPolygons.build(star_case[0], res=RES, max_cells=256)
+        bnd = prep.covering[prep.covering.kind == G.BOUNDARY].cell.to_numpy()
+        assert (bnd >> 58).min() < RES
+    want = [(int(pid), d, int(kind))
+            for pid, cell, kind in prep.covering.itertuples(index=False)
+            for d in _descendants(int(cell), RES)]
+    leaf = prep.leaf
+    assert list(leaf.columns) == ["polygon_id", "cell", "kind"]
+    assert list(map(tuple, leaf.to_numpy().tolist())) == want
+    assert not leaf.duplicated(["polygon_id", "cell"]).any()
+    assert ((leaf.cell.to_numpy() >> 58) == RES).all()
+
+
+def test_leaf_table_guard_raises_before_expanding():
+    """A world rectangle at res 13 is one FULL cell at res 0: 4^13 leaf
+    cells. build refuses it, naming a coarser res, without allocating
+    the expansion (~512 MB of cell ids)."""
+    world = [(1, P.rect_wkb(-180.0, -90.0, 180.0, 90.0))]
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="coarser res"):
+            PreparedPolygons.build(world, res=13)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 << 20
+
+
+@pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
+def test_pip_join_is_one_pass(spark, tmp_path, join_shape):
+    """One scan of the point side, one leaf-table probe per point: no
+    branch union and no ancestor-chain ``Generate``. Broadcast: the
+    leaf table and band index are the plan's two broadcasts. The point
+    columns come through in order, a dotted name included."""
+    rng = np.random.default_rng(3)
+    spark.createDataFrame(pd.DataFrame({
+        "pt_id": np.arange(2000), "lon": rng.uniform(-180, 180, 2000),
+        "lat": rng.uniform(-85, 85, 2000), "src.tag": "x",
+    })).write.parquet(str(tmp_path / "pts"))
+    pts = spark.read.parquet(str(tmp_path / "pts"))
+    prep = PreparedPolygons.build(P.valid_polygon_list(rect_only=True), res=RES)
+    q = pip_join(pts, prep)
+    assert q.columns == pts.columns + ["polygon_id"]
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+    assert "Union" not in plan and "Generate" not in plan
+    if join_shape == "broadcast":
+        assert plan.count("BroadcastExchange") == 2
+    else:
+        assert "BroadcastHashJoin" not in plan
