@@ -5,7 +5,7 @@ reference engine uses via NetTopologySuite:
 
 * WKB encode/decode (the reference stores geometries as Gaia/WKB blobs,
   ``AdminCountPerCountryAnalyzer.cs:555-570``) — here plain
-  little-endian WKB Polygon / MultiPolygon / LineString;
+  little-endian WKB Polygon / MultiPolygon;
 * point-in-polygon by ray casting with even-odd rule + boundary
   detection (the refine step of the reference's filter-and-refine
   containment join, ``AdminCountPerCountryAnalyzer.cs:664-674``);
@@ -40,7 +40,7 @@ def snap(coords: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# WKB (little-endian; Polygon=3, MultiPolygon=6, LineString=2)
+# WKB (little-endian; Polygon=3, MultiPolygon=6)
 # ---------------------------------------------------------------------------
 
 
@@ -60,11 +60,6 @@ def polygons_to_wkb(polys: list[list[np.ndarray]]) -> bytes:
     for rings in polys:
         out.append(rings_to_wkb(rings))
     return b"".join(out)
-
-
-def linestring_to_wkb(coords: np.ndarray) -> bytes:
-    coords = np.asarray(coords, dtype=np.float64)
-    return struct.pack("<BII", 1, 2, len(coords)) + coords.astype("<f8").tobytes()
 
 
 def wkb_to_polygons(buf: bytes) -> list[list[np.ndarray]]:
@@ -99,13 +94,6 @@ def wkb_to_polygons(buf: bytes) -> list[list[np.ndarray]]:
             polys.append(rings)
         return polys
     raise ValueError(f"unsupported WKB geometry type {geom_type}")
-
-
-def wkb_to_linestring(buf: bytes) -> np.ndarray:
-    byte_order, geom_type, npts = struct.unpack_from("<BII", buf, 0)
-    if byte_order != 1 or geom_type != 2:
-        raise ValueError("expected little-endian WKB LineString")
-    return np.frombuffer(buf, dtype="<f8", count=npts * 2, offset=9).reshape(npts, 2)
 
 
 # ---------------------------------------------------------------------------

@@ -175,7 +175,7 @@ def asof_join_bucketed(
     key fits one task: e.g. rows_per_key_per_day ≈ 10M → hourly
     slices ≈ 400k rows/partition.
 
-    Cost trade, measured (tools/r5_scale_study.py at 3.75M rows,
+    Cost trade, measured (BENCH.md, round-5 scale study: 3.75M rows,
     local[32]): ~2 ref shuffles vs the plain path's 1, so at sizes
     where one task can still sort the hottest key the plain path wins
     on wall clock; bucketing is the CLUSTER-scale path — a 10⁹-row

@@ -19,7 +19,7 @@ containment branch (no 0/0 division is ever evaluated).
 Scale shape (the 100 TB argument): each segment explodes to the grid
 cells of its BOUNDING BOX at ``res`` (``cells.box_cells`` — a GPS
 hop or road edge spans ~1–4 cells at a resolution
-chosen via ``overlay.res_for_extent`` from the average hop length);
+chosen from the average hop length);
 the clip predicate then discards bbox cells the segment misses. All
 arithmetic is whole-stage codegen; the only shuffle is whatever the
 consumer does next (the emit itself is a narrow map). A

@@ -22,7 +22,7 @@ self-join produces pairs. The join is equi on (cell, window); a
 stadium cell-hour with k entities emits k²/2 pairs — that blowup is
 the OUTPUT, not an artifact, and is bounded by capping bucket
 cardinality (``max_per_bucket``: buckets denser than the cap are
-dropped and reported, the hot-bucket discipline of the LSH join —
+dropped, the hot-bucket discipline of the LSH join —
 a 50k-person bucket's 1.2B pairs are never what the analyst wants).
 One further groupBy aggregates pair evidence. No window functions, no
 Python, three shuffles total (bucket reduce, self-join, pair agg).
@@ -47,8 +47,7 @@ def colocation_pairs(points: DataFrame, res: int, window_s: int,
     (tumbling windows — a pair straddling a boundary co-locates only
     if some shared bucket exists; sliding detection = run twice with
     an offset, the standard cheap approximation). ``max_per_bucket``
-    drops buckets with more distinct entities than the cap (dropped
-    buckets are recoverable via :func:`hot_buckets`).
+    drops buckets with more distinct entities than the cap.
     """
     b = (
         C.attach_cell(points, res, lon=lon, lat=lat, out="_cell").select(
@@ -74,25 +73,6 @@ def colocation_pairs(points: DataFrame, res: int, window_s: int,
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_buckets"),
              F.sum(F.col("_nfa") * F.col("_nfb")).alias("n_sightings"))
-    )
-
-
-def hot_buckets(points: DataFrame, res: int, window_s: int,
-                min_entities: int, entity: str = "user_id",
-                ts: str = "ts", lon: str = "lon",
-                lat: str = "lat") -> DataFrame:
-    """The buckets a ``max_per_bucket`` cap would drop → ``(cell,
-    window, n_entities)`` — the "report, don't silently truncate"
-    companion (a dense bucket is an EVENT, not noise)."""
-    return (
-        C.attach_cell(points, res, lon=lon, lat=lat, out="_cell").select(
-            F.col(entity).alias("_e"), F.col("_cell").alias("cell"),
-            F.floor(F.unix_timestamp(F.col(ts)) / F.lit(int(window_s)))
-            .cast("long").alias("window"),
-        )
-        .groupBy("cell", "window")
-        .agg(F.count_distinct("_e").alias("n_entities"))
-        .where(F.col("n_entities") >= min_entities)
     )
 
 

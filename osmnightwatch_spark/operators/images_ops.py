@@ -1,5 +1,5 @@
-"""Multimodal (image-column) operators — decode, verify, feature
-extraction over the ``bytes BINARY`` column.
+"""Image-column operators — decode and verify over the ``bytes BINARY``
+column.
 
 The input_hint's per-row invariant (decoded-pixel allclose, PSNR ≥ 40
 dB for lossy, caption equality) becomes a *distributed* verification
@@ -9,13 +9,6 @@ Python at the plan level), emitting per-row check results. This is the
 compute-dominated stage of a real 10^12-image pipeline, so it is also
 the honest scaling-efficiency workload (bench.py): decode cost scales
 linearly with rows and parallelizes embarrassingly.
-
-``extract_features`` covers the feature-extraction shape: mean color,
-luma stats and a 4×4 thumbnail signature per image — stand-ins with
-real plumbing (schema, batching, partitioning) for model-based
-extractors; a real JPEG/PNG decode or NN featurizer would slot into
-the same kernel (codecs.decode raises NotImplementedError for formats
-needing external libs).
 """
 
 from __future__ import annotations
@@ -30,11 +23,6 @@ from ..functions import codecs as K
 
 VERIFY_SCHEMA = (
     "image_id string, phash long, phash_ok boolean, psnr double, caption_ok boolean"
-)
-
-FEATURE_SCHEMA = (
-    "image_id string, mean_r double, mean_g double, mean_b double, "
-    "luma_std double, thumb array<tinyint>"
 )
 
 
@@ -79,37 +67,6 @@ def decode_verify(images: DataFrame, check_psnr: bool = False) -> DataFrame:
             })
 
     return images.mapInPandas(kernel, VERIFY_SCHEMA)
-
-
-def extract_features(images: DataFrame) -> DataFrame:
-    """Vectorized feature extraction: channel means, luma stddev, 4×4
-    grayscale thumbnail (the ANN/embedding feeder shape)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "mean_r", "mean_g", "mean_b",
-                                   "luma_std", "thumb")}
-            # decode is inherently per-image (variable-size binaries);
-            # zip over column arrays avoids per-row .iloc overhead
-            for img_id, buf, fmt, w_, h_ in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-            ):
-                img = K.decode(buf, fmt, int(w_), int(h_)).astype(np.float64)
-                means = img.mean(axis=(0, 1))
-                luma = img.mean(axis=2)
-                h, w = luma.shape
-                yi = (np.arange(4)[:, None] * h) // 4
-                xi = (np.arange(4)[None, :] * w) // 4
-                thumb = (luma[yi, xi] // 2).astype(np.int8).ravel().tolist()
-                out["image_id"].append(img_id)
-                out["mean_r"].append(float(means[0]))
-                out["mean_g"].append(float(means[1]))
-                out["mean_b"].append(float(means[2]))
-                out["luma_std"].append(float(luma.std()))
-                out["thumb"].append(thumb)
-            yield pd.DataFrame(out)
-
-    return images.mapInPandas(kernel, FEATURE_SCHEMA)
 
 
 def verified_flagship(images: DataFrame, tile_res: int = 8,

@@ -24,28 +24,18 @@ the intersection's min corner (that cell is by construction in BOTH
 covers), so no distinct/array_distinct shuffle is ever needed.
 Dense-city skew lands on the join's own exchange (AQE-splittable);
 a continent-sized rect is the one skew unit — cap its explode by
-choosing ``res`` from the AVERAGE extent (``res_for_extent``) and
+choosing ``res`` from the AVERAGE extent (the coarsest grid whose
+cells are no finer than it, ~2×2 cells per average rect) and
 route outliers through a broadcast side, exactly like the PIP join's
 prepared-covering path.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
-
-
-def res_for_extent(avg_extent_deg: float) -> int:
-    """Coarsest grid whose cells are no finer than the average rect
-    extent — the average rect then covers ≤ ~2×2 cells, bounding the
-    explode factor. Mirrors ``range_join.res_for_radius``."""
-    if avg_extent_deg <= 0:
-        raise ValueError(f"extent must be > 0, got {avg_extent_deg}")
-    return max(0, min(16, int(math.floor(math.log2(180.0 / avg_extent_deg)))))
 
 
 def rect_overlay_join(a: DataFrame, b: DataFrame, res: int = 4,

@@ -111,7 +111,7 @@ def render_density_tiles(grid: DataFrame, depth: int = 4) -> DataFrame:
             "cell": [int(pdf["cell"].iloc[0])],
             "w": [side], "h": [side], "fmt": ["ppm"],
             "bytes": [buf],
-            "phash": [int(np.int64(np.uint64(K.phash64(img))))],
+            "phash": [K.phash64(img)],
         })
 
     return grid.groupBy("cell").applyInPandas(

@@ -104,11 +104,14 @@ def _cnorm(csum: list[int]) -> float:
 # deterministic k-means (integer centroid sums)
 # ---------------------------------------------------------------------------
 
-def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
-                  id_col: str = "vec_id", vec: str = "embedding") -> DataFrame:
+def _kmeans(embeddings: DataFrame, k: int, iters: int, dims: int,
+            id_col: str, vec: str) -> DataFrame:
     """Cluster by spherical k-means over quantized embeddings; returns
-    ``(id_col, cluster, sim)`` where ``sim`` is the cosine of the row
-    against its final centroid direction (double, unrounded).
+    ``(id_col, cluster, sim, qv)`` where ``sim`` is the cosine of the
+    row against its final centroid direction (double, unrounded) and
+    ``qv`` the quantized vector of the final scoring pass, so
+    :func:`semdedup` prunes on it without quantizing and scanning its
+    input again.
 
     Init: the quantized vectors of the ``k`` smallest ids (seed rows —
     deterministic, no RNG). Each round scores every row against every
@@ -117,14 +120,6 @@ def kmeans_assign(embeddings: DataFrame, k: int, iters: int, dims: int,
     Empty clusters drop out (both engines agree: GROUP BY emits only
     non-empty groups).
     """
-    return _kmeans(embeddings, k, iters, dims, id_col, vec).drop("qv")
-
-
-def _kmeans(embeddings: DataFrame, k: int, iters: int, dims: int,
-            id_col: str, vec: str) -> DataFrame:
-    """:func:`kmeans_assign` with the quantized vector ``qv`` of the
-    final scoring pass carried along, so :func:`semdedup` prunes on it
-    without quantizing and scanning its input again."""
     with CacheScope() as scope:
         q = scope.persist(embeddings.select(
             F.col(id_col).alias("_id"), _quantize_col(vec, dims).alias("qv")
@@ -156,7 +151,7 @@ def _kmeans(embeddings: DataFrame, k: int, iters: int, dims: int,
 
 def kmeans_sql(table: str, k: int, iters: int, dims: int,
                id_col: str = "vec_id", vec: str = "embedding") -> str:
-    """DuckDB twin of :func:`kmeans_assign` → ``(id_col, cluster, sim,
+    """DuckDB twin of :func:`_kmeans` → ``(id_col, cluster, sim,
     q1..qdims)`` (the quantized components ride along for reuse)."""
     qcols = ", ".join(f"{e} AS q{d}" for d, e in
                       enumerate(_quantize_sql(vec, dims)))
@@ -301,7 +296,7 @@ def semdedup(embeddings: DataFrame, k: int, iters: int, dims: int, tau: float,
     ties by id): the paper's keep-the-outlier policy, reduced to pair
     edges. ``sim_r`` is the centroid cosine rounded to 9 (display
     only — decisions use the unrounded exact-int-derived value).
-    Assignment is :func:`kmeans_assign` (whose last scoring pass also
+    Assignment is :func:`_kmeans` (whose last scoring pass also
     hands over the quantized vectors: one input scan, no join back on
     the id), the pair stage :func:`_prune_numpy`; the result equals
     :func:`semdedup_sql` row for row."""

@@ -79,21 +79,14 @@ def _norm2(a) -> F.Column:
     )
 
 
-def with_cosine(joined: DataFrame, a: str = "emb_a", b: str = "emb_b") -> DataFrame:
-    return joined.withColumn(
-        "cosine",
-        _dot(F.col(a), F.col(b))
-        / F.sqrt(_norm2(F.col(a)) * _norm2(F.col(b))),
-    )
-
-
 def _cosine_prenorm(joined: DataFrame, a: str = "emb_a", b: str = "emb_b",
                     n2a: str = "_n2a", n2b: str = "_n2b") -> DataFrame:
-    """:func:`with_cosine` over rows that carry precomputed squared
-    norms. The higher-order-function folds evaluate interpreted (no
-    codegen), so computing ``_norm2`` per PAIR was 2/3 of the scoring
-    work; hoisting the norms to the (linear-sized) join inputs leaves
-    only the unavoidable per-pair dot product (guide §1.2 step 1:
+    """Attach ``cosine`` = dot(a, b) / sqrt(|a|²·|b|²) to pair rows
+    that carry the squared norms precomputed. The higher-order-function
+    folds evaluate interpreted (no codegen), so computing ``_norm2``
+    per PAIR was 2/3 of the scoring work; hoisting the norms to the
+    (linear-sized) join inputs leaves only the unavoidable per-pair
+    dot product (guide §1.2 step 1:
     don't compute things twice). The float values are identical — the
     same fold over the same array, just evaluated once per row."""
     return joined.withColumn(

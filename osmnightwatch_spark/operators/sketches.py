@@ -64,16 +64,6 @@ def hll_registers(df: DataFrame, col: str, p: int = 12) -> DataFrame:
     )
 
 
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Union of register tables → max per register (associative,
-    order-free). This is the whole incremental story: sketch the new
-    files, max-merge with the stored sketch — never rescan history."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("register").agg(F.max("rank").alias("rank"))
-
-
 def hll_estimate(registers: list[tuple[int, int]], p: int = 12) -> float:
     """Driver-side estimate from (register, rank) rows: bias-corrected
     harmonic mean, linear counting below 2.5·m. Exact integer inputs,
@@ -154,15 +144,6 @@ def cms_sketch(df: DataFrame, col: str, width: int = 1024,
             .groupBy(F.col("_p.row").alias("row"),
                      F.col("_p.bucket").alias("bucket"))
             .agg(F.count("*").alias("cnt")))
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Sum-merge (associative, order-free): sketch new data, merge,
-    never rescan history — same contract as :func:`hll_merge`."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(sketch: DataFrame, probes: DataFrame, col: str,

@@ -30,17 +30,6 @@ from ..functions import cells as C
 from ..session import CacheScope
 
 
-def hot_cells(points: DataFrame, res: int, max_rows_per_cell: int,
-              lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Stats pass: cells at ``res`` whose row count exceeds the cap."""
-    return (
-        C.attach_cell(points, res, lon=lon, lat=lat, out="cell")
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > max_rows_per_cell)
-    )
-
-
 def adaptive_cells(points: DataFrame, base_res: int, max_rows_per_cell: int,
                    max_res: int | None = None, lon: str = "lon",
                    lat: str = "lat", out: str = "acell") -> DataFrame:

@@ -10,8 +10,8 @@ no shuffle until the aggregation itself (which map-side combines).
 Skew: city cells concentrate 20%+ of rows in 3 tiles. ``tile_counts``
 is a plain count — Spark's partial aggregation absorbs that (each task
 pre-aggregates its hot cell to one row). For heavy per-group payloads
-(e.g. collect-style rollups) use ``salted_group_count`` which
-demonstrates explicit two-phase salting.
+(e.g. collect-style rollups) spread the hot key first with
+``skew.salted_repartition``.
 """
 
 from __future__ import annotations
@@ -49,26 +49,6 @@ def tile_rollup(tiles: DataFrame, steps: int = 1, tile: str = "tile",
         .groupBy("parent_tile")
         .agg(F.sum(value).alias(value))
     )
-
-
-def salted_group_count(points: DataFrame, key: str, salt_buckets: int = 32,
-                       value_alias: str = "n") -> DataFrame:
-    """Explicit two-phase (salted) aggregation for skewed keys:
-    groupBy(key, salt) partial → groupBy(key) final. Used when the
-    aggregate state per group is heavy enough that a single reducer
-    per hot key would bottleneck.
-
-    The salt is a deterministic row hash (not ``rand``): task retries
-    re-derive the same salt, so a recomputed partition lands in the
-    same partial groups — same discipline as ``skew.salted_repartition``.
-    """
-    salted = points.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in points.columns]),
-               F.lit(salt_buckets)).cast("int"),
-    )
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_pn"))
-    return partial.groupBy(key).agg(F.sum("_pn").alias(value_alias))
 
 
 def compact_cells(cells: DataFrame, min_res: int, max_res: int,

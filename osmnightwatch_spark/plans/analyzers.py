@@ -23,7 +23,7 @@ collect.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -88,15 +88,6 @@ def names_issues(entities: dict) -> DataFrame:
     for o in outs[1:]:
         issues = issues.unionByName(o)
     return issues
-
-
-def names_analyzer() -> Analyzer:
-    return Analyzer(
-        name="NamesAnalyzer",
-        relevant=lambda e: e["nodes"].where(
-            F.map_contains_key(F.col("tags"), F.lit("name"))),
-        analyze=names_issues,
-    )
 
 
 def default_registry() -> Registry:

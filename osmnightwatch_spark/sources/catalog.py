@@ -630,20 +630,3 @@ def run_stage(spark: SparkSession, table_root: str, stage: str,
     df = build()
     t.commit(df, lineage={"stage": stage, "inputs_fp": inputs_fp})
     return t.read(spark)
-
-
-def write_bucketed(df: DataFrame, table_name: str, key: str,
-                   buckets: int, sort: bool = True) -> None:
-    """Persist a table bucketed (and sorted) by the join key.
-
-    The co-located-join primitive for repeated big⋈big joins on one
-    key (e.g. candidates bucketed by cell for nightly kNN/crossing
-    runs): both sides pre-bucketed on the same key with the same
-    bucket count join with NO exchange — the shuffle is paid once at
-    write time instead of per query. Spark keeps bucketing metadata in
-    the session catalog (Iceberg: a bucket partition transform).
-    """
-    w = df.write.format("parquet").mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table_name)

@@ -52,53 +52,3 @@ def normalize_expected(expected: DataFrame) -> DataFrame:
         F.col("level_str").cast("int").alias("admin_level"),
         F.explode("admin_ids").alias("admin_id"),
     )
-
-
-class ExpectedStateCache:
-    """Conditional-fetch semantics of the reference's expected-state
-    source (``AdminCountPerCountryAnalyzer.cs:296-316``): the reference
-    sends ``If-None-Match`` with the last ETag and reuses its cached
-    deserialized state on ``304 Not Modified``. The local analog
-    fingerprints the source files (size + mtime per file — the
-    filesystem's ETag) and returns the cached DataFrame when nothing
-    changed, re-reading only on a fingerprint miss.
-
-    The cached value is a parsed (lazy) DataFrame, so a hit skips
-    driver-side file listing/JSON planning the way the reference skips
-    the re-download + re-deserialize; content is identical either way.
-    """
-
-    def __init__(self):
-        self._etag: str | None = None
-        self._cached: DataFrame | None = None
-        self.hits = 0
-        self.misses = 0
-
-    @staticmethod
-    def _fingerprint(path: str) -> str:
-        import hashlib
-        import os
-
-        h = hashlib.md5()
-        if os.path.isdir(path):
-            names = sorted(
-                f for f in os.listdir(path) if f.endswith(".json"))
-            files = [os.path.join(path, f) for f in names]
-        else:
-            files = [path]
-        for f in files:
-            st = os.stat(f)
-            h.update(f.encode())
-            h.update(f":{st.st_size}:{st.st_mtime_ns};".encode())
-        return h.hexdigest()
-
-    def read(self, spark: SparkSession, path: str,
-             multiline: bool = True) -> DataFrame:
-        etag = self._fingerprint(path)
-        if self._cached is not None and etag == self._etag:
-            self.hits += 1
-            return self._cached
-        self.misses += 1
-        self._etag = etag
-        self._cached = read_expected_state(spark, path, multiline)
-        return self._cached

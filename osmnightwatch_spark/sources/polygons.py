@@ -23,18 +23,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
 from ..functions import geometry as G
-
-ADMIN_SCHEMA = T.StructType([
-    T.StructField("relation_id", T.LongType(), False),
-    T.StructField("name", T.StringType(), False),
-    T.StructField("admin_level", T.IntegerType(), False),
-    T.StructField("geom_wkb", T.BinaryType(), True),
-    T.StructField("reason", T.StringType(), True),
-])
 
 # failure-reason strings reproduced verbatim from the reference
 # (BuildPolygonFromRelation.cs:70-117) — kept in sync with
@@ -118,10 +107,6 @@ def admin_polygons_pdf() -> pd.DataFrame:
                                        "geom_wkb", "reason"])
 
 
-def admin_polygons_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(admin_polygons_pdf(), schema=ADMIN_SCHEMA)
-
-
 def valid_polygon_list(levels: tuple[int, ...] | None = None,
                        rect_only: bool = False) -> list[tuple[int, bytes]]:
     """[(relation_id, wkb)] for the valid (geom-bearing) fixture rows."""
@@ -132,21 +117,3 @@ def valid_polygon_list(levels: tuple[int, ...] | None = None,
     if rect_only:
         pdf = pdf[pdf.relation_id.isin([r[0] for r in rect_bounds()])]
     return [(int(r.relation_id), r.geom_wkb) for r in pdf.itertuples()]
-
-
-def rect_pip_sql_predicate(point_lon: str, point_lat: str) -> str:
-    """DuckDB oracle: containment for the rectangular admins as a UNION
-    of range predicates, returning (polygon_id) rows — boundary
-    inclusive, matching the engine's boundary_is_inside=True."""
-    parts = []
-    for rid, _name, _lvl, (lon0, lat0, lon1, lat1) in rect_bounds():
-        parts.append(
-            f"SELECT {rid} AS polygon_id, {lon0!r} AS lon0, {lat0!r} AS lat0,"
-            f" {lon1!r} AS lon1, {lat1!r} AS lat1"
-        )
-    rects = " UNION ALL ".join(parts)
-    return (
-        f"(SELECT polygon_id FROM ({rects}) r "
-        f"WHERE ({point_lon}) >= r.lon0 AND ({point_lon}) <= r.lon1 "
-        f"AND ({point_lat}) >= r.lat0 AND ({point_lat}) <= r.lat1)"
-    )

@@ -20,6 +20,13 @@ def pytest_configure(config):
         "filterwarnings",
         r"error:A column as 'key' in getItem is deprecated:FutureWarning",
     )
+    # a negative int64 hash cast to uint64 must reinterpret its bits
+    # (``np.int64(h).view(np.uint64)``): NumPy will reject the cast
+    config.addinivalue_line(
+        "filterwarnings",
+        r"error:NumPy will stop allowing conversion of out-of-bound Python "
+        r"integers:DeprecationWarning",
+    )
 
 
 @pytest.fixture(scope="session")

@@ -3,7 +3,9 @@
 import pandas as pd
 from pyspark.sql import functions as F
 
-from osmnightwatch_spark.plans.analyzers import default_registry, write_issues_json
+from osmnightwatch_spark.plans.analyzers import (
+    default_registry, names_issues, write_issues_json,
+)
 
 from tests.test_validator_plan_streaming import admin_world  # noqa: F401
 from tests.test_validators_cdc import COAST_SCHEMA, v
@@ -106,3 +108,17 @@ def test_dedup_clusters_nonconvergence_raises(spark):
     # enough rounds → converges to one cluster labeled by the min id
     out = dedup_clusters(pairs).toPandas()
     assert set(out.keeper_id) == {1}
+
+
+def test_names_analyzer(spark):
+    nodes = spark.createDataFrame(
+        [(1, 0.0, 0.0, {"name": "*"}), (2, 1.0, 1.0, {"name": "Riga"}),
+         (3, 2.0, 2.0, None)],
+        "id long, lon double, lat double, tags map<string,string>")
+    ways = spark.createDataFrame(
+        [(10, [1, 2], {"name": "*"})],
+        "id long, nodes array<long>, tags map<string,string>")
+    out = names_issues({"nodes": nodes, "ways": ways}).toPandas()
+    assert set(zip(out.osm_type, out.osm_id)) == {("N", 1), ("W", 10)}
+    assert (out.issue_type == "Invalid characters").all()
+    assert (out.details == "*").all()

@@ -57,7 +57,8 @@ def test_phash_deterministic_and_robust(img):
     assert h1 == K.phash64(img.copy())
     # lossy round-trip keeps the perceptual hash close (<= 4 bit flips)
     out = K.decode(K.encode(img, "lossy1"), "lossy1", 32, 48)
-    flips = bin(np.uint64(h1) ^ np.uint64(K.phash64(out))).count("1")
+    flips = bin(np.int64(h1).view(np.uint64)
+               ^ np.int64(K.phash64(out)).view(np.uint64)).count("1")
     assert flips <= 4
 
 

@@ -5,8 +5,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from osmnightwatch_spark.operators.colocation import (colocation_pairs,
-                                                      colocation_pairs_sql,
-                                                      hot_buckets)
+                                                      colocation_pairs_sql)
 
 
 def _fixes(spark):
@@ -57,9 +56,6 @@ def test_colocation_bucket_cap_and_hot_report(spark):
     assert {(r.a, r.b) for r in capped} == {(10, 11)}  # stadium dropped
     full = colocation_pairs(pts, res=6, window_s=86400).collect()
     assert len(full) == 10 + 1  # C(5,2) + the pair
-
-    hot = hot_buckets(pts, res=6, window_s=86400, min_entities=5).collect()
-    assert len(hot) == 1 and hot[0].n_entities == 5
 
     # SQL twin honors the cap identically
     con = duckdb.connect()

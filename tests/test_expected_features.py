@@ -133,29 +133,3 @@ def test_golden_corpus_admin_diff_end_to_end(spark):
     assert set(got_gained.osm_id) == set(gained.admin_id)
     # no country disappears entirely in this perturbation
     assert not (issues.issue_type == "MissingCountry").any()
-
-
-def test_expected_state_cache_conditional_reload(spark, tmp_path):
-    """ETag-analog conditional fetch (AdminCountPerCountryAnalyzer.cs:
-    296-316): unchanged files → cache hit (no re-read); touching a file
-    → fingerprint miss → reload reflects the new content."""
-    from osmnightwatch_spark.sources.expected_state import ExpectedStateCache
-
-    d = {"RelationId": 100, "EnglishName": "Alpha", "Iso2": "AA", "Iso3": "AAA",
-         "Admins": {"4": [11]}}
-    f = tmp_path / "Alpha.json"
-    f.write_text(json.dumps(d))
-    cache = ExpectedStateCache()
-    df1 = cache.read(spark, str(tmp_path))
-    assert df1.count() == 1 and cache.misses == 1
-    df2 = cache.read(spark, str(tmp_path))
-    assert df2 is df1 and cache.hits == 1  # 304 Not Modified analog
-    # content change → new fingerprint → reload
-    import os
-    d["Admins"]["4"] = [11, 12]
-    f.write_text(json.dumps(d))
-    os.utime(f, ns=(1, 10**18))  # force a distinct mtime
-    df3 = cache.read(spark, str(tmp_path))
-    assert cache.misses == 2
-    from osmnightwatch_spark.sources.expected_state import normalize_expected
-    assert normalize_expected(df3).count() == 2

@@ -4,8 +4,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from osmnightwatch_spark.operators.overlay import (rect_overlay_join,
-                                                   res_for_extent)
+from osmnightwatch_spark.operators.overlay import rect_overlay_join
 
 
 def _boxes(seed, n, idc, max_w=8.0, max_h=5.0):
@@ -61,9 +60,3 @@ def test_overlay_edge_touch_excluded_and_res_rule(spark):
     r = got[(1, 2)]
     assert (r.ilon0, r.ilon1, r.ilat0, r.ilat1) == (9.0, 10.0, 9.0, 10.0)
     assert abs(r.area - 1.0) < 1e-12
-
-    assert res_for_extent(4.0) == 5   # 180/2^5 = 5.6 >= 4
-    assert res_for_extent(200.0) == 0
-    import pytest
-    with pytest.raises(ValueError):
-        res_for_extent(0.0)

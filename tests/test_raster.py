@@ -64,7 +64,7 @@ def test_render_round_trips_grid(spark):
             want[15 - r.py, r.px] = (255 * r.n) // max_n
         assert (img[..., 0] == want).all()
         # phash is of the rendered pixels
-        assert t.phash == int(np.int64(np.uint64(K.phash64(img))))
+        assert t.phash == K.phash64(img)
         # the hottest pixel renders at full intensity
         assert img[..., 0].max() == 255 or max_n == 0
 

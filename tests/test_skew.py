@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmnightwatch_spark.functions import cells as C
-from osmnightwatch_spark.operators.skew import adaptive_cells, hot_cells, salted_repartition
+from osmnightwatch_spark.operators.skew import adaptive_cells, salted_repartition
 
 
 @pytest.fixture(scope="module")
@@ -23,13 +23,6 @@ def skewed(spark):
     pdf.loc[hot, "lon"] = 7.0 + rng.uniform(0, 0.2, len(hot))
     pdf.loc[hot, "lat"] = 45.0 + rng.uniform(0, 0.2, len(hot))
     return spark.createDataFrame(pdf)
-
-
-def test_hot_cells_found(spark, skewed):
-    hs = hot_cells(skewed, res=4, max_rows_per_cell=500).toPandas()
-    assert len(hs) >= 1
-    city = C.cell_of([7.1], [45.1], 4)[0]
-    assert city in set(hs.cell)
 
 
 def test_adaptive_cells_bounds_occupancy(spark, skewed):

@@ -1,5 +1,5 @@
-"""End-to-end admin validator, relation closure, multimodal image ops,
-structured streaming, and physical-plan quality assertions."""
+"""End-to-end admin validator, relation closure, image ops and
+physical-plan quality assertions."""
 
 import re
 
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from osmnightwatch_spark.operators.closure import relation_closure
 from osmnightwatch_spark.operators.images_ops import (
-    decode_verify, extract_features, verified_flagship,
+    decode_verify, verified_flagship,
 )
 from osmnightwatch_spark.sources import images as I
 
@@ -122,7 +122,7 @@ def test_admin_validator_end_to_end(spark, admin_world):
 def test_country_admin_sets(spark, admin_world):
     from osmnightwatch_spark.operators.assembly import assemble_polygons
     from osmnightwatch_spark.plans.admin_validator import (
-        admin_relations, build_state, country_admin_sets,
+        admin_relations, admins_to_country, build_state, country_admin_sets,
     )
 
     rel_df, ways_df, nodes_df, _ = admin_world
@@ -131,13 +131,23 @@ def test_country_admin_sets(spark, admin_world):
                                   ways_df, nodes_df)
     state = build_state(assembled, admins.select(
         F.col("id").alias("relation_id"), "admin_level", "name"))
-    sets = country_admin_sets(state).toPandas().set_index("country_id")
+    rows = country_admin_sets(state).toPandas()
+    sets = rows.set_index("country_id")
     assert list(sets.loc[1].admin_ids) == [31, 41] and sets.loc[1].n_admins == 2
     assert list(sets.loc[2].admin_ids) == [51]
+    # A6 is A5 read the other way: an admin's memberships are the
+    # (country, level) rows whose admin_ids list it
+    want = {}
+    for r in rows.itertuples():
+        for a in r.admin_ids:
+            want.setdefault(a, set()).add((r.country_id, r.admin_level))
+    got = {r.admin_id: {(m.country_id, m.admin_level) for m in r.memberships}
+           for r in admins_to_country(state).collect()}
+    assert got == want == {31: {(1, 4)}, 41: {(1, 4)}, 51: {(2, 4)}}
 
 
 # ---------------------------------------------------------------------------
-# multimodal image ops
+# image ops
 # ---------------------------------------------------------------------------
 
 
@@ -157,58 +167,11 @@ def test_decode_verify_catches_corruption(spark):
     assert not out.phash_ok.any()
 
 
-def test_extract_features(spark):
-    imgs = I.images_df(spark, 100, partitions=2)
-    feats = extract_features(imgs).toPandas()
-    assert len(feats) == 100
-    assert ((feats.mean_r >= 0) & (feats.mean_r <= 255)).all()
-    assert all(len(t) == 16 for t in feats.thumb)
-
-
 def test_verified_flagship_counts(spark):
     imgs = I.images_df(spark, 1000, partitions=4)
     out = verified_flagship(imgs).toPandas()
     assert out.n_images.sum() > 0
     assert (out.n_images > 0).all()
-
-
-# ---------------------------------------------------------------------------
-# structured streaming
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_tile_counts(spark, tmp_path):
-    import shutil
-
-    from osmnightwatch_spark.sources.catalog import Table
-    from osmnightwatch_spark.streaming.stream import (
-        read_events_stream, stream_to_snapshot_table, windowed_tile_counts,
-    )
-
-    src = str(tmp_path / "in")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.write.mode("overwrite").parquet(src)
-    stream = read_events_stream(spark, src, ev.schema)
-    agg = windowed_tile_counts(stream, res=3)
-    q = stream_to_snapshot_table(
-        agg, str(tmp_path / "tbl"), str(tmp_path / "ckpt")).start()
-    q.awaitTermination(120)
-
-    t = Table(str(tmp_path / "tbl"))
-    snap = t.current_snapshot()
-    assert snap is not None and snap >= 1
-    got = t.read(spark)
-    total_stream = got.agg(F.sum("n")).collect()[0][0]
-    # batch equivalence: same aggregation over the same data
-    batch = windowed_tile_counts(ev, res=3)
-    total_batch = batch.agg(F.sum("n")).collect()[0][0]
-    assert total_stream == total_batch == ev.count()
-
-    # resume: restarting the stream with the same checkpoint reprocesses nothing
-    q2 = stream_to_snapshot_table(
-        agg, str(tmp_path / "tbl"), str(tmp_path / "ckpt")).start()
-    q2.awaitTermination(60)
-    assert t.current_snapshot() == snap  # no new commit
 
 
 # ---------------------------------------------------------------------------
@@ -279,34 +242,6 @@ def test_lsh_multitable_plan_shape(spark, pre_checkpoint):
     assert "LeftAnti" in plan            # hot-bucket broadcast anti-join
     assert "HashAggregate" in plan       # pair dedup is a partial-agg groupBy
     assert "Window" in plan              # per-probe top-k only
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Pre-bucketed tables join co-located: the plan has a
-    SortMergeJoin with ZERO Exchange nodes — the shuffle was paid at
-    write time (the bucketing story for repeated big-big joins)."""
-    from osmnightwatch_spark.sources.catalog import write_bucketed
-
-    pts = spark.range(0, 10_000).selectExpr(
-        "id", "CAST(id % 257 AS LONG) AS cell", "id * 2 AS v")
-    write_bucketed(pts, "bkt_a", "cell", 8)
-    write_bucketed(pts.selectExpr("id AS id2", "cell", "v AS v2"),
-                   "bkt_b", "cell", 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the big-big (SMJ) path is exercised —
-        # that's the case bucketing exists for
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a, b = spark.table("bkt_a"), spark.table("bkt_b")
-        joined = a.join(b, "cell")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
 def test_pip_join_shuffle_path_copartition_and_skew(spark):
@@ -416,46 +351,6 @@ def test_lang_ngram_and_sampling_plan_shapes(spark):
     pplan = _plan_of(packed)
     assert pplan.count("Exchange hashpartitioning") == 1  # one shard shuffle
     assert "ArrowEvalPython" not in pplan
-
-
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    """dedup_stream drops duplicate fingerprints ACROSS micro-batches
-    (stateful): two input files sharing texts yield one surviving row
-    per distinct text, in arrival order by maxFilesPerTrigger=1."""
-    from osmnightwatch_spark.streaming.stream import dedup_stream
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    b1 = pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "text": ["alpha", "beta", "alpha"],        # in-batch dup
-        "ts": pd.Timestamp("2024-05-01 00:00:00"),
-    })
-    b2 = pd.DataFrame({
-        "doc_id": [4, 5],
-        "text": ["beta", "gamma"],                  # cross-batch dup
-        "ts": pd.Timestamp("2024-05-01 00:10:00"),
-    })
-    spark.createDataFrame(b1).coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(b2).coalesce(1).write.parquet(str(src / "f2"))
-    schema = spark.read.parquet(str(src / "f1")).schema
-    stream = (
-        spark.readStream.format("parquet").schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(str(src) + "/*")
-    )
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir).option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir).toPandas()
-    assert sorted(got.text) == ["alpha", "beta", "gamma"]
-    # the keeper of each text is its first arrival
-    assert set(got.doc_id) <= {1, 2, 5} or len(got) == 3
 
 
 def test_range_join_plan_one_shuffle_no_python(spark):
