@@ -1,46 +1,24 @@
 """Point-in-polygon containment join — the engine's core spatial operator.
 
 Recasts the reference's filter-and-refine containment join
-(``AdminCountPerCountryAnalyzer.cs:615-679``: SpatiaLite R-tree
-``search_frame`` candidate pass at :645-648, prepared-geometry
-``Intersects``→``Contains``∨``Overlaps`` refinement at :664-674) as a
-Spark-native two-phase plan:
+(``AdminCountPerCountryAnalyzer.cs:615-679``: R-tree candidate pass at
+:645-648, prepared-geometry ``Contains``∨``Overlaps`` refinement at
+:664-674) as one Spark-native join per point:
 
 1. **Prepare** (once per polygon set, memoized — the PreparedPolygon
-   analog, :486,637): each polygon → quadtree cell covering with cells
-   classified FULL (entirely inside) or BOUNDARY (edge passes through)
-   — ``functions.geometry.cover_polygon``, on executors for large sets
-   and on the driver for small ones — expanded to the leaf resolution
-   (the small side is replicated, never the point side), plus a band
-   index, built on the driver: per (polygon, leaf-resolution grid row)
-   the polygon's edges whose y-range overlaps that row.
-2. **Candidate pass** (the R-tree analog): points get their leaf cell
-   via the *native* ``attach_cell`` encode (whole-stage codegen, no
-   Python) and equi-join the leaf table on ``cell``: one probe per
-   point. For dim-sized polygon sets we force ``broadcast`` so the
-   10^12-row point side is never shuffled.
-3. **Refine**, in the same pass: FULL-cell hits are inside by
-   construction. BOUNDARY hits LEFT-join the band index on (polygon,
-   grid row) and one ``Filter`` ray-casts them only: a native SQL
-   ``aggregate`` over that row's edges — bit-identical to
-   ``geometry.points_in_edgesoup`` over the whole polygon (an edge
-   whose y-range misses the point's row adds no crossing and cannot
-   hold it), with no Python in the plan.
-
-Scale notes (100 TB / 10^12 rows):
-* the point side is scanned once and touched by one narrow projection
-  + two map-side joins — no shuffle, no explode and no Python;
-* refinement volume is proportional to the polygon *perimeter* measured
-  in cells, not to the point count: finer covering resolution trades a
-  bigger broadcast for less refine work (``cover_res`` knob; the leaf
-  table grows ~4× per level, capped at ``_MAX_LEAF_CELLS`` rows); per
-  refined point the cost is the edges of one grid row, not of the
-  whole polygon, so polygons with 10^4–10^6 vertices stay cheap;
-* hot cells (cities) don't skew this join: broadcast join has no
-  shuffle; when the index outgrows the session's broadcast threshold
-  both sides shuffle on the cell key and AQE skew-join splitting
-  applies (the band join keys a polygon's FULL hits on (polygon,
-  NULL); AQE splits a LEFT join's left side too).
+   analog, :486,637): each polygon → quadtree covering of FULL
+   (inside) and BOUNDARY (edge passes through) cells
+   (``geometry.cover_polygon``), expanded to the leaf resolution: the
+   small side is replicated, never the point side. Each BOUNDARY leaf
+   cell carries its own ray-cast edges — the edges near it plus stubs
+   for those wholly east of it (S2's ``S2ShapeIndex`` cell pattern).
+2. **Probe and refine**: points get their leaf cell by the native
+   ``attach_cell`` encode and equi-join the leaf table on it, broadcast
+   for dim-sized sets so the 10^12-row point side is never shuffled.
+   FULL hits are inside; one ``Filter`` ray-casts BOUNDARY hits over
+   their cell's few edges in native SQL, bit-identical to
+   ``geometry.points_in_edgesoup`` over the whole polygon, so polygons
+   with 10^4–10^6 vertices stay cheap.
 """
 
 from __future__ import annotations
@@ -66,36 +44,28 @@ BOUNDARY = int(G.BOUNDARY)
 #: polygon tuple) — see the docstring there
 _BUILD_CACHE: dict = {}
 
-#: total vertex (edge) count from which :meth:`PreparedPolygons.build`
-#: covers on executors: the smallest measured size at which executors
-#: won every rep. Seconds per cold build, local[4] on a 4-core host,
-#: res 7 random stars with an 8-vertex hole (300 random rectangles at
-#: res 6), the two paths alternating; at every size both paths gave
-#: the same covering and bands:
-#:
-#:   set                total   driver       executors   executors won
-#:   300 rectangles      1.2k   0.61–0.68    1.14–1.57   0 of 3
-#:   64 × 100 vertices   6.9k   0.35–0.37    0.76–0.92   0 of 3
-#:   64 × 250           16.5k   0.45–0.56    0.69–0.81   0 of 3
-#:   64 × 500           32.5k   0.65–1.06    0.86–1.22   2 of 7
-#:   64 × 600           38.9k   0.81–0.87    0.83–1.01   1 of 4
-#:   64 × 750           48.5k   1.11–1.34    0.88–1.16   4 of 4
-#:   64 × 1000          64.5k   1.34–1.88    1.01–1.13   7 of 7
-#:   64 × 10000          641k   9.3–11.6     3.9–4.7     3 of 3
+#: total vertex count from which :meth:`PreparedPolygons.build` covers
+#: on executors: the smallest at which executors won every rep (cold
+#: builds, local[4] on a 4-core host, res 7 stars of 64 × k vertices,
+#: paths alternating; the driver won every rep up to 16.5k, executors
+#: from 48.5k, and at 641k they took 3.9–4.7 s against 9.3–11.6 s).
 _EXECUTOR_MIN_VERTICES = 48_000
 
 #: most rows :func:`_leaf_table` may expand a covering to (~80 MB; the
 #: 25 admin fixture polygons give 17k at res 7, 258k at 9, 4.08M at 11)
 _MAX_LEAF_CELLS = 1 << 22
 
-#: per-edge array columns of the band index (ray-cast inputs)
+#: per-edge array columns of a BOUNDARY leaf row (ray-cast inputs)
 _EDGE_COLS = ("_bx1", "_by1", "_bx2", "_by2", "_binv")
 
-#: degrees each edge's y-range is widened by before it is assigned to
-#: grid rows — the row of an in-range point already lies inside the
-#: exact span (the row expression is monotone), so this only guards
-#: against a last-ulp disagreement between numpy and the JVM
-_BAND_TOL = 1e-9
+#: degrees each leaf cell's box is widened by before polygon edges are
+#: sorted into it — a point's cell (the floor of its grid coordinate)
+#: holds it to within an ulp, so this only guards against a last-ulp
+#: disagreement between numpy and the JVM
+_CELL_TOL = 1e-9
+
+#: about the most (edge, cell) pairs :func:`_cell_edges` holds at once
+_PAIR_CHUNK = 1 << 20
 
 
 def _cover_one(pid: int, polys: list, res: int, max_cells: int) -> pd.DataFrame:
@@ -131,38 +101,30 @@ def _cover_on_executors(spark: SparkSession, polygons: list[tuple[int, bytes]],
 
 @dataclass
 class PreparedPolygons:
-    """Prepared polygon set: quadtree covering, its expansion to the
-    leaf resolution, and the band index."""
+    """Prepared polygon set: quadtree covering and its expansion to the
+    leaf resolution, whose BOUNDARY rows carry their ray-cast edges."""
 
     covering: pd.DataFrame          # polygon_id LONG, cell LONG, kind TINYINT
     res: int                        # leaf (finest) covering resolution
-    leaf: pd.DataFrame              # covering expanded to res, kind INT
-    bands: pd.DataFrame             # polygon_id, _band, + _EDGE_COLS arrays
+    leaf: pd.DataFrame              # polygon_id, cell, kind INT, + _EDGE_COLS
 
     @classmethod
     def build(cls, polygons: list[tuple[int, bytes]], res: int = 7,
               max_cells: int = 4096) -> "PreparedPolygons":
         """polygons: [(polygon_id, wkb_polygon_or_multipolygon), ...].
 
-        Each WKB is parsed once on the driver, into the edge arrays the
-        band index is built from. The covering — the per-polygon
-        quadtree recursion, the expensive half of prepare — runs on
-        executors (``mapInPandas``, one task per polygon group) when the
-        set holds at least ``_EXECUTOR_MIN_VERTICES`` vertices and at
-        least 2 polygons and a Spark session is active; otherwise it
-        runs on the driver. The vertex count is checked first, so a
-        small set never touches the JVM. Both paths run
-        :func:`_cover_one` and give the same covering.
+        Each WKB is parsed once on the driver. The covering runs on
+        executors (``mapInPandas``) for sets of at least 2 polygons and
+        ``_EXECUTOR_MIN_VERTICES`` vertices while a session is active,
+        else on the driver (checked in that order, so a small set never
+        touches the JVM); both paths run :func:`_cover_one`, and the one
+        :func:`_leaf_table` builds ``leaf`` from either covering,
+        raising ``ValueError`` past ``_MAX_LEAF_CELLS`` rows.
 
-        ``leaf`` (:func:`_leaf_table`, the table :func:`pip_join`
-        probes) raises ``ValueError`` past ``_MAX_LEAF_CELLS`` rows.
-
-        Memoized on the full input (polygon set is immutable): a caller
-        that re-plans the same join (every bench run, every streaming
-        micro-batch of the admin validator) pays the covering once. The
-        cache also carries the per-session DataFrame memos across
-        calls. Reference analog: the prepared-geometry cache,
-        ``AdminCountPerCountryAnalyzer.cs:470-490``.
+        Memoized on the full input, with the per-session DataFrame
+        memos: a caller that re-plans the same join (every bench run,
+        every validator micro-batch) pays the build once. Reference
+        analog: ``AdminCountPerCountryAnalyzer.cs:470-490``.
         """
         key = (res, max_cells,
                tuple((int(p), bytes(w)) for p, w in polygons))
@@ -170,11 +132,8 @@ class PreparedPolygons:
         if hit is not None:
             return hit
         parsed = [(int(pid), G.wkb_to_polygons(wkb)) for pid, wkb in polygons]
-        edges: dict[int, tuple] = {}
-        for pid, polys in parsed:
-            soup = G.EdgeSoup(polys)
-            edges[pid] = (soup.x1, soup.y1, soup.x2, soup.y2)
-        n_vertices = sum(len(e[0]) for e in edges.values())
+        soups = {pid: G.EdgeSoup(polys) for pid, polys in parsed}
+        n_vertices = sum(len(s.x1) for s in soups.values())
         spark = (SparkSession.getActiveSession()
                  if n_vertices >= _EXECUTOR_MIN_VERTICES and len(parsed) >= 2
                  else None)
@@ -185,22 +144,19 @@ class PreparedPolygons:
                                   for pid, polys in parsed], ignore_index=True)
         else:
             covering = _cover_one(0, [], res, max_cells)
-        out = cls(covering=covering, res=res, leaf=_leaf_table(covering, res),
-                  bands=_edge_table(edges, res))
+        out = cls(covering=covering, res=res,
+                  leaf=_leaf_table(covering, res, soups))
         if len(_BUILD_CACHE) >= 16:  # bounded: a handful of live sets
             _BUILD_CACHE.clear()
         _BUILD_CACHE[key] = out
         return out
 
     def _per_session(self, spark: SparkSession, name: str, make) -> DataFrame:
-        """``make()``, memoized per session: the prepared tables are
-        immutable and repeated pip_join calls (flagship, coverage, every
-        bench run) would otherwise pay the pandas→Arrow→JVM conversion
-        of the same table on every plan build (driver-side, measured
-        ~0.1 s of the per-run planning gap — guide §5 "the driver should
-        do almost no data work"). applicationId is in the key: build()
-        memoization makes prepared sets outlive sessions, and a
-        recycled id() alone could alias a dead session's DataFrame."""
+        """``make()``, memoized per session: repeated pip_join calls
+        would otherwise pay the pandas→Arrow→JVM conversion of the same
+        immutable table on every plan build. applicationId is in the
+        key: memoized prepared sets outlive sessions, and a recycled
+        id() alone could alias a dead session's DataFrame."""
         memo = self.__dict__.setdefault("_session_memo", {})
         key = (id(spark), spark.sparkContext.applicationId, name)
         if key not in memo:
@@ -213,14 +169,10 @@ class PreparedPolygons:
             self.covering.astype({"kind": "int32"}), schema=_COVER_SCHEMA))
 
     def leaf_df(self, spark: SparkSession) -> DataFrame:
-        """The leaf table as a LocalRelation (per-session memo)."""
+        """The leaf table as a LocalRelation (per-session memo), passed as
+        Arrow: from pandas, its list columns convert ~4× slower."""
         return self._per_session(spark, "leaf", lambda: spark.createDataFrame(
-            self.leaf, schema=_COVER_SCHEMA))
-
-    def bands_df(self, spark: SparkSession) -> DataFrame:
-        """The band index as a LocalRelation (per-session memo)."""
-        return self._per_session(spark, "bands", lambda: spark.createDataFrame(
-            self.bands, schema=_EDGE_SCHEMA))
+            pa.Table.from_pandas(self.leaf, preserve_index=False), schema=_LEAF_SCHEMA))
 
 
 _COVER_SCHEMA = T.StructType([
@@ -228,26 +180,22 @@ _COVER_SCHEMA = T.StructType([
     T.StructField("cell", T.LongType(), False),
     T.StructField("kind", T.IntegerType(), False),
 ])
-
-_EDGE_SCHEMA = T.StructType(
-    [T.StructField("polygon_id", T.LongType(), False),
-     T.StructField("_band", T.LongType(), False)]
-    + [T.StructField(c, T.ArrayType(T.DoubleType(), False), False)
-       for c in _EDGE_COLS]
-)
+_EDGE_FIELDS = [T.StructField(c, T.ArrayType(T.DoubleType(), False), False)
+                for c in _EDGE_COLS]
+_LEAF_SCHEMA = T.StructType(_COVER_SCHEMA.fields + _EDGE_FIELDS)
+_EDGE_SCHEMA = T.StructType([_COVER_SCHEMA["polygon_id"]] + _EDGE_FIELDS)
 
 
-def _leaf_table(covering: pd.DataFrame, res: int) -> pd.DataFrame:
+def _leaf_table(covering: pd.DataFrame, res: int,
+                soups: dict[int, G.EdgeSoup]) -> pd.DataFrame:
     """``covering`` with every cell at level ``lv < res`` replaced by its
-    ``4^(res-lv)`` descendants at ``res`` (kind carried), built
-    vectorized. Descendant ``i`` of a cell with ``d = res - lv`` is
-    ``(res << 58) | ((morton << 2d) + i)``: the exact inverse of
-    ``parent_spark_sql``. Covering cells are disjoint per polygon, so
-    ``(polygon_id, cell)`` stays unique.
-
-    The row count ``Σ 4^(res-lv)`` is checked before anything is
-    allocated: a world-size polygon at a high ``res`` would otherwise
-    exhaust the driver.
+    ``4^(res-lv)`` descendants ``(res << 58) | ((morton << 2d) + i)``
+    (``d = res - lv``, the exact inverse of ``parent_spark_sql``), kind
+    carried, then each polygon's BOUNDARY rows given their edges by
+    :func:`_cell_edges`; FULL rows hold empty arrays. ``(polygon_id,
+    cell)`` stays unique. The row count ``Σ 4^(res-lv)`` is checked
+    before anything is allocated: a world-size polygon at a high
+    ``res`` would otherwise exhaust the driver.
     """
     cell = covering["cell"].to_numpy(np.int64)
     depth = res - (cell >> C._RES_SHIFT)
@@ -263,57 +211,117 @@ def _leaf_table(covering: pd.DataFrame, res: int) -> pd.DataFrame:
     src = np.repeat(np.arange(len(cell)), fan)
     i = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(fan) - fan, fan)
     morton = cell[src] & ((1 << C._RES_SHIFT) - 1)
-    return pd.DataFrame({
-        "polygon_id": covering["polygon_id"].to_numpy(np.int64)[src],
-        "cell": (res << C._RES_SHIFT) | ((morton << (2 * depth[src])) + i),
-        "kind": covering["kind"].to_numpy()[src].astype(np.int32),
-    })
+    pid = covering["polygon_id"].to_numpy(np.int64)[src]
+    leaf = (res << C._RES_SHIFT) | ((morton << (2 * depth[src])) + i)
+    kind = covering["kind"].to_numpy()[src].astype(np.int32)
+
+    rows = np.flatnonzero(kind == BOUNDARY)
+    rows = rows[np.argsort(pid[rows], kind="stable")]
+    at, edges = [np.empty(0, np.int64)], [(np.empty(0),) * 4]
+    for r in np.split(rows, np.flatnonzero(np.diff(pid[rows])) + 1)[:len(rows)]:
+        kind[r], j, *xy = _cell_edges(soups[int(pid[r[0]])], leaf[r], res)
+        at.append(r[j])
+        edges.append(xy)
+    at = np.concatenate(at)
+    order = np.argsort(at, kind="stable")
+    keep = kind >= 0
+    out = pd.DataFrame({"polygon_id": pid[keep], "cell": leaf[keep], "kind": kind[keep]})
+    return out.assign(**_edge_lists(np.bincount(at, minlength=len(kind))[keep],
+                                    *(np.concatenate(v)[order] for v in zip(*edges))))
 
 
-def _edge_table(edges: dict[int, tuple], res: int | None) -> pd.DataFrame:
-    """Edge arrays grouped per (polygon_id, _band), built vectorized.
+def _cell_edges(soup: G.EdgeSoup, cells: np.ndarray, res: int):
+    """One polygon's BOUNDARY leaf cells → ``(kind, at, x1, y1, x2,
+    y2)``: each cell's new kind (BOUNDARY, FULL, or -1 to drop it) and
+    the ray-cast edges of the cells kept BOUNDARY, ``at`` being the
+    cell's index. With ``B`` the cell box widened by ``t = _CELL_TOL``,
+    an edge whose y-range meets the cell's row (widened alike) is:
 
-    With ``res``, ``_band`` is the leaf grid row of ``res`` (the numpy
-    twin of the ``_grid_spark_sql`` latitude row ``attach_cell`` uses)
-    and each edge is listed in every row its y-range, widened by
-    ``_BAND_TOL``, overlaps. With ``res=None`` every polygon is one
-    group holding its whole edge list (``_band`` 0). Groups without
-    edges are never emitted: the ray cast iterates ``sequence(0,
-    size - 1)``, and ``sequence(0, -1)`` is ``[0, -1]``.
+    * **near** if its bounding box meets ``B`` and its cross product
+      (the kernel's on-edge test, ``≤ 1e-12``, plus ``t`` per degree of
+      edge for rounding) can vanish on ``B``. Kept as is, so the ray
+      cast reads the same floats as ``points_in_edgesoup``.
+    * **west** if not near and west of ``B`` in the row: it crosses
+      no point's eastward ray. Dropped.
+    * **east** if not near and east of ``B``: a point's ray crosses it iff ``min(y) ≤ Y <
+      max(y)``, so it adds the parity of its endpoint-ys ``≤ Y``. Equal
+      pairs cancel, values above ``B`` never count and values below
+      always do (folded into one ``cy0 - 1`` when odd); each other
+      value ``v`` becomes a stub ``(cx1 + 1, v) → (cx1 + 1, cy1 + 1)``,
+      which the unchanged kernel crosses iff ``v ≤ Y``, never on it.
+
+    Edges outside the row neither hold nor cross a point of the cell. A
+    cell with no near edge is wholly inside or outside: FULL if its
+    stubs put its centre inside, dropped otherwise.
     """
-    pids = np.fromiter(edges, dtype=np.int64, count=len(edges))
-    n_edges = np.array([len(edges[p][0]) for p in pids.tolist()], dtype=np.int64)
-    x1, y1, x2, y2 = (
-        np.concatenate([np.asarray(edges[p][k], np.float64) for p in pids.tolist()])
-        if len(pids) else np.empty(0, np.float64)
-        for k in range(4)
-    )
-    pid = np.repeat(pids, n_edges)
-    if res is None:
-        lo = hi = np.zeros(len(x1), np.int64)
-    else:
-        def row(y):
-            return C.grid_xy(np.zeros_like(y), y, res)[1]
-        lo = row(np.minimum(y1, y2) - _BAND_TOL)
-        hi = row(np.maximum(y1, y2) + _BAND_TOL)
-    span = hi - lo + 1
-    edge = np.repeat(np.arange(len(x1), dtype=np.int64), span)
-    band = lo[edge] + np.arange(len(edge)) - np.repeat(np.cumsum(span) - span, span)
-    order = np.lexsort((band, pid[edge]))
-    edge, band = edge[order], band[order]
-    gpid = pid[edge]
-    new = np.ones(len(edge), dtype=bool)
-    new[1:] = (gpid[1:] != gpid[:-1]) | (band[1:] != band[:-1])
-    start = np.flatnonzero(new)
-    offsets = pa.array(np.append(start, len(edge)), pa.int32())
-    # the same expression as points_in_edgesoup's inv_dy
+    t = _CELL_TOL
+    x1, y1, x2, y2 = soup.x1, soup.y1, soup.x2, soup.y2
+    cx0, cy0, cx1, cy1 = C.cell_bounds(cells)
+    gy = C.decode_cell(cells)[2]
+    by_row = np.argsort(gy, kind="stable")
+    # each edge pairs with the cells of the grid rows its y-range meets
+    first = np.searchsorted(gy[by_row], C.grid_xy(x1, np.minimum(y1, y2) - t, res)[1])
+    n = np.searchsorted(gy[by_row], C.grid_xy(x1, np.maximum(y1, y2) + t, res)[1],
+                        "right") - first
+    near, east, lo, ends = [], [], 0, np.cumsum(n)
+    while lo < len(n):  # in runs of about _PAIR_CHUNK pairs
+        hi = max(lo + 1, int(np.searchsorted(ends, ends[lo] - n[lo] + _PAIR_CHUNK, "right")))
+        k = n[lo:hi]
+        e = np.repeat(np.arange(lo, hi), k)
+        c = by_row[np.repeat(first[lo:hi] - np.cumsum(k) + k, k)
+                   + np.arange(int(k.sum()))]
+        lo = hi
+        ex1, ey1, ex2, ey2 = x1[e], y1[e], x2[e], y2[e]
+        L, R, B, T = cx0[c] - t, cx1[c] + t, cy0[c] - t, cy1[c] + t
+        dx, dy = ex2 - ex1, ey2 - ey1
+        cross = [dx * (Y - ey1) - dy * (X - ex1) for X in (L, R) for Y in (B, T)]
+        tol = 1e-12 + t * (np.abs(dx) + np.abs(dy))
+        is_near = ((np.minimum(ex1, ex2) <= R) & (np.maximum(ex1, ex2) >= L)
+                   & (np.minimum(ey1, ey2) <= T) & (np.maximum(ey1, ey2) >= B)
+                   & (np.minimum.reduce(cross) <= tol)
+                   & (np.maximum.reduce(cross) >= -tol))
+        near.append((c[is_near], e[is_near]))
+        # a far edge lies wholly on one side of B within the row: the
+        # side of its point at a height inside both
+        ys = np.clip((ey1 + ey2) / 2, B, T)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xs = np.where(dy != 0, ex1 + (ys - ey1) * dx / dy, ex1)
+        is_east = ~is_near & (xs > (cx0[c] + cx1[c]) / 2)
+        c, v = np.tile(c[is_east], 2), np.concatenate([ey1[is_east], ey2[is_east]])
+        c, v = c[v <= cy1[c] + t], v[v <= cy1[c] + t]
+        east.append(_odd_pairs(c, np.where(v < cy0[c] - t, cy0[c] - 1.0, v)))
+    nc, ne = (np.concatenate(a) for a in zip(*near))
+    sc, sv = _odd_pairs(*(np.concatenate(a) for a in zip(*east)))
+    has_near = np.bincount(nc, minlength=len(cells)) > 0
+    inside = np.bincount(sc[sv <= ((cy0 + cy1) / 2)[sc]], minlength=len(cells)) % 2
+    kind = np.where(has_near, BOUNDARY, np.where(inside == 1, FULL, -1))
+    sc, sv = sc[has_near[sc]], sv[has_near[sc]]
+    sx = cx1[sc] + 1.0
+    return (kind, np.concatenate([nc, sc]),
+            np.concatenate([x1[ne], sx]), np.concatenate([y1[ne], sv]),
+            np.concatenate([x2[ne], sx]), np.concatenate([y2[ne], cy1[sc] + 1.0]))
+
+
+def _odd_pairs(c: np.ndarray, v: np.ndarray):
+    """The distinct ``(c, v)`` pairs that occur an odd number of times."""
+    o = np.lexsort((v, c))
+    c, v = c[o], v[o]
+    start = np.flatnonzero(np.r_[True, (c[1:] != c[:-1]) | (v[1:] != v[:-1])])[:len(c)]
+    odd = start[np.diff(start, append=len(c)) % 2 == 1]
+    return c[odd], v[odd]
+
+
+def _edge_lists(counts: np.ndarray, x1, y1, x2, y2) -> dict:
+    """``_EDGE_COLS`` as Arrow-backed list columns: row ``i`` holds the
+    next ``counts[i]`` edges. ``_binv`` is ``1 / dy`` (0 for a
+    horizontal edge), the same expression as ``points_in_edgesoup``'s."""
+    offsets = pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32())
     dy = y2 - y1
     with np.errstate(divide="ignore", invalid="ignore"):
         inv_dy = np.where(dy != 0, 1.0 / np.where(dy == 0, 1.0, dy), 0.0)
-    out = pd.DataFrame({"polygon_id": gpid[start], "_band": band[start]})
-    for name, v in zip(_EDGE_COLS, (x1, y1, x2, y2, inv_dy)):
-        out[name] = pa.ListArray.from_arrays(offsets, pa.array(v[edge])).to_pandas()
-    return out
+    return {name: pd.arrays.ArrowExtensionArray(
+                pa.ListArray.from_arrays(offsets, pa.array(v, pa.float64())))
+            for name, v in zip(_EDGE_COLS, (x1, y1, x2, y2, inv_dy))}
 
 
 def _raycast_sql(lon: str, lat: str) -> str:
@@ -338,12 +346,10 @@ def _raycast_sql(lon: str, lat: str) -> str:
 
 
 def _index_bytes(prepared: PreparedPolygons) -> int:
-    """Estimated size of the leaf table plus band index: row count ×
-    schema width. A leaf row is two longs and an int (20 B); a band row
-    is two longs (16 B) plus five doubles per edge it lists (40 B per
-    edge reference)."""
-    refs = int(prepared.bands[_EDGE_COLS[0]].map(len).sum())
-    return 20 * len(prepared.leaf) + 16 * len(prepared.bands) + 40 * refs
+    """Estimated size of the leaf table: two longs and an int (20 B)
+    per row, five doubles (40 B) per edge."""
+    edges = int(prepared.leaf[_EDGE_COLS[0]].list.len().sum())
+    return 20 * len(prepared.leaf) + 40 * edges
 
 
 def pip_join(points: DataFrame, prepared: PreparedPolygons,
@@ -355,35 +361,27 @@ def pip_join(points: DataFrame, prepared: PreparedPolygons,
     polygon drop out). Boundary points count as inside (reference
     Contains ∨ Overlaps, ``AdminCountPerCountryAnalyzer.cs:515-518``).
 
-    One pass over ``points``: each point's leaf cell equi-joins the
-    leaf table once (a point matches at most one row per polygon);
-    BOUNDARY hits get their leaf grid row as ``_band`` (FULL hits
-    NULL), LEFT-join that row's edges, and one ``Filter`` keeps FULL
-    hits and the BOUNDARY hits the ray cast puts inside. As a filter,
-    not a join condition, the ray cast leaves the join in whole-stage
-    codegen; ``OR`` short-circuits it for FULL hits.
-
-    The leaf table and band index are broadcast when their estimated
-    size (:func:`_index_bytes`) fits under the session's
-    ``spark.sql.autoBroadcastJoinThreshold``; a threshold ≤ 0 turns
-    broadcast off. Otherwise both joins shuffle on their keys: the
-    10^12-row-covering shape, with no hand ``.repartition``: AQE
-    splits a hot cell only in a join's own exchanges.
+    Each point's leaf cell equi-joins the leaf table once (at most one
+    row per polygon), and one ``Filter`` keeps FULL hits and the
+    BOUNDARY hits the ray cast over the row's own edges puts inside;
+    ``OR`` short-circuits it for FULL hits, whose arrays are empty.
+    Spark folds the filter into the join's condition, which keeps that
+    join out of whole-stage codegen (``aggregate`` is interpreted).
+    The leaf table is broadcast when :func:`_index_bytes` fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` (≤ 0 turns it off);
+    otherwise both sides shuffle once, on the cell key, with no hand
+    ``.repartition``: AQE splits a hot cell only in a join's own
+    exchanges.
     """
     spark = points.sparkSession
     leaf = prepared.leaf_df(spark).withColumnRenamed("cell", "_cell")
-    bands = prepared.bands_df(spark)
     limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     if limit > 0 and _index_bytes(prepared) <= limit:
-        leaf, bands = F.broadcast(leaf), F.broadcast(bands)
-    row = C._grid_spark_sql(f"`{lat}`", *C.LAT, prepared.res)
+        leaf = F.broadcast(leaf)
     return (
         C.attach_cell(points, prepared.res, lon=lon, lat=lat, out="_cell")
         .join(leaf, "_cell")
-        .withColumn("_band", F.expr(f"IF(kind = {BOUNDARY}, {row}, NULL)"))
-        .join(bands, ["polygon_id", "_band"], "left")
-        .where(F.expr(f"kind = {FULL} OR (`{_EDGE_COLS[0]}` IS NOT NULL"
-                      f" AND {_raycast_sql(lon, lat)})"))
+        .where(F.expr(f"kind = {FULL} OR {_raycast_sql(lon, lat)}"))
         .select(*(f"`{c}`" for c in points.columns), "polygon_id")
     )
 
@@ -392,15 +390,16 @@ def pip_join_brute(points: DataFrame, polygons: list[tuple[int, bytes]],
                    lon: str = "lon", lat: str = "lat") -> DataFrame:
     """Reference implementation for tests: every point ray-cast against
     every edge of every polygon by pip_join's SQL kernel (no covering
-    prefilter, no bands). O(points × edges)."""
-    spark = points.sparkSession
-    edges = {}
-    for pid, wkb in polygons:
-        soup = G.EdgeSoup.from_wkb(wkb)
-        edges[int(pid)] = (soup.x1, soup.y1, soup.x2, soup.y2)
-    table = spark.createDataFrame(_edge_table(edges, None), schema=_EDGE_SCHEMA)
+    prefilter). O(points × edges)."""
+    soups = [(int(p), G.EdgeSoup.from_wkb(w)) for p, w in polygons]
+    soups = [(p, s) for p, s in soups if len(s.x1)]  # sequence(0, -1) is [0, -1]
+    table = pd.DataFrame({"polygon_id": [p for p, _ in soups]}, dtype=np.int64).assign(
+        **_edge_lists(np.array([len(s.x1) for _, s in soups], np.int64), *(
+            np.concatenate([getattr(s, k) for _, s in soups] or [np.empty(0)])
+            for k in ("x1", "y1", "x2", "y2"))))
     return (
-        points.crossJoin(F.broadcast(table))
+        points.crossJoin(F.broadcast(points.sparkSession.createDataFrame(
+            table, schema=_EDGE_SCHEMA)))
         .where(F.expr(_raycast_sql(lon, lat)))
-        .drop("_band", *_EDGE_COLS)
+        .drop(*_EDGE_COLS)
     )

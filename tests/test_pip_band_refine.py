@@ -1,12 +1,16 @@
-"""pip_join's native band-index refine vs the independent numpy ray cast
+"""pip_join's per-cell refine vs the independent numpy ray cast
 (``geometry.points_in_edgesoup`` over each polygon's whole edge soup).
 
-The polygons are random stars with a hole, and about 30% of their
-vertices sit exactly on leaf grid-row boundaries, so edges start and
-end on the rows the band index splits them by. The points include
-every vertex, every edge midpoint and points lying exactly on row
-boundaries — the cases where a wrong band assignment would show."""
+The polygons are random stars with a hole. About 30% of their vertices
+sit exactly on leaf grid-row boundaries and about 30% exactly on
+leaf grid-column boundaries (some on cell corners), so edges start and
+end on the lines the leaf cells clip them by. The points include every
+vertex, every edge midpoint, points lying exactly on row and column
+boundaries and on cell corners, and points at the height of every
+vertex (where an east edge's stub starts) — the cases where a wrong
+edge-to-cell assignment would show."""
 
+import re
 import tracemalloc
 
 import numpy as np
@@ -14,16 +18,20 @@ import pandas as pd
 import pytest
 
 from osmnightwatch_spark.functions import geometry as G
-from osmnightwatch_spark.operators.pip_join import PreparedPolygons, pip_join
+from osmnightwatch_spark.functions import cells as C
+from osmnightwatch_spark.operators.pip_join import (_EDGE_COLS, PreparedPolygons,
+                                                  pip_join)
 from osmnightwatch_spark.sources import polygons as P
 
 RES = 7
 ROW = 180.0 / (1 << RES)
+COL = 360.0 / (1 << RES)
 
 
 def _snap(xy, rng):
-    snap = rng.random(len(xy)) < 0.3
-    xy[snap, 1] = -90.0 + np.round((xy[snap, 1] + 90.0) / ROW) * ROW
+    for axis, lo, step in ((0, -180.0, COL), (1, -90.0, ROW)):
+        snap = rng.random(len(xy)) < 0.3
+        xy[snap, axis] = lo + np.round((xy[snap, axis] - lo) / step) * step
     return xy
 
 
@@ -50,10 +58,20 @@ def _probe_points(rng, polys):
         x0, y0, x1, y1 = soup.bbox
         xs += [soup.x1, (soup.x1 + soup.x2) / 2, rng.uniform(x0, x1, 1000)]
         ys += [soup.y1, (soup.y1 + soup.y2) / 2, rng.uniform(y0, y1, 1000)]
-        # exactly on the leaf rows the polygon spans
-        rows = np.arange(np.floor((y0 + 90) / ROW), np.ceil((y1 + 90) / ROW) + 1)
-        xs.append(rng.uniform(x0, x1, len(rows) * 10))
-        ys.append(np.repeat(-90.0 + rows * ROW, 10))
+        # exactly on the leaf rows and columns the polygon spans, and
+        # on the cell corners where they meet
+        rows = -90.0 + ROW * np.arange(np.floor((y0 + 90) / ROW),
+                                       np.ceil((y1 + 90) / ROW) + 1)
+        cols = -180.0 + COL * np.arange(np.floor((x0 + 180) / COL),
+                                        np.ceil((x1 + 180) / COL) + 1)
+        xs += [rng.uniform(x0, x1, len(rows) * 10), np.repeat(cols, 10)]
+        ys += [np.repeat(rows, 10), rng.uniform(y0, y1, len(cols) * 10)]
+        gx, gy = np.meshgrid(cols, rows)
+        xs.append(gx.ravel())
+        ys.append(gy.ravel())
+        # at every vertex height, mostly west of the vertex
+        xs.append(rng.uniform(x0, x1, len(soup.y1)))
+        ys.append(soup.y1)
     lon, lat = np.concatenate(xs), np.concatenate(ys)
     return pd.DataFrame({"pt_id": np.arange(len(lon)), "lon": lon, "lat": lat})
 
@@ -78,8 +96,8 @@ def star_case():
 @pytest.fixture
 def join_shape(spark, request):
     """``broadcast`` runs under the session's broadcast threshold;
-    ``shuffle`` sets it to -1 for the test, so pip_join shuffles its
-    covering and band index."""
+    ``shuffle`` sets it to -1 for the test, so pip_join shuffles both
+    sides of its leaf join."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     if request.param == "shuffle":
@@ -92,7 +110,8 @@ def join_shape(spark, request):
 @pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
 def test_band_refine_matches_numpy_ray_cast(spark, star_case, join_shape, max_cells):
     """``max_cells=256`` caps the covering, so BOUNDARY cells sit above
-    the leaf resolution while the band rows stay at it."""
+    the leaf resolution while the leaf rows and their edges stay at
+    it."""
     polys, pts, exp = star_case
     prep = PreparedPolygons.build(polys, res=RES, max_cells=max_cells)
     q = pip_join(spark.createDataFrame(pts), prep)
@@ -105,11 +124,39 @@ def test_band_refine_matches_numpy_ray_cast(spark, star_case, join_shape, max_ce
     assert ("BroadcastHashJoin" in plan) == (join_shape == "broadcast")
 
 
-def test_band_index_has_no_empty_band(star_case):
-    polys, _, _ = star_case
-    bands = PreparedPolygons.build(polys, res=RES).bands
-    assert bands["_bx1"].map(len).min() >= 1
-    assert not bands.duplicated(["polygon_id", "_band"]).any()
+@pytest.mark.parametrize("max_cells", [4096, 256])
+def test_boundary_leaf_rows_carry_edges(star_case, max_cells):
+    """Every BOUNDARY leaf row holds at least one edge (the ray cast
+    runs ``sequence(0, size - 1)``, and ``sequence(0, -1)`` is ``[0,
+    -1]``), FULL rows hold none, and ``(polygon_id, cell)`` is
+    unique."""
+    leaf = PreparedPolygons.build(star_case[0], res=RES, max_cells=max_cells).leaf
+    n = leaf["_bx1"].map(len)
+    assert (n[leaf.kind == G.BOUNDARY] >= 1).all()
+    assert (n[leaf.kind == G.FULL] == 0).all()
+    assert (leaf[list(_EDGE_COLS)].map(len).to_numpy() == n.to_numpy()[:, None]).all()
+    assert not leaf.duplicated(["polygon_id", "cell"]).any()
+
+
+@pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
+def test_short_edge_near_cell_corner(spark, join_shape):
+    """A short edge whose part inside a cell's row lies west of the
+    cell can still hold the cell's corner within the kernel's on-edge
+    tolerance (|cross| ≤ 1e-12 is ~1e-7° for a 1e-5° edge). The corner
+    point is outside by parity and inside by the ray cast, so the cell
+    must keep that edge."""
+    x0, y0 = -180.0 + 70 * COL, -90.0 + 70 * ROW
+    a = (x0 - 1e-8 - 1e-5, y0 + 1e-5)
+    ring = np.array([a, (x0 - 1e-8 + 1e-5, y0 - 1e-5),
+                     (x0 - COL / 2, y0 - ROW / 2), (x0 - COL / 2, y0 + 0.6 * ROW),
+                     (x0 + COL / 2, y0 + 0.6 * ROW), (x0 + COL / 2, y0 + ROW / 2), a])
+    polys = [(7, G.rings_to_wkb([ring]))]
+    pts = pd.DataFrame({"pt_id": [0, 1, 2], "lon": [x0, x0 + 3e-9, x0 + 1e-3],
+                        "lat": [y0, y0, y0]})
+    assert _numpy_pairs(pts, polys) == {(0, 7), (1, 7)}
+    got = pip_join(spark.createDataFrame(pts), PreparedPolygons.build(polys, res=RES))
+    assert set(map(tuple, got.select("pt_id", "polygon_id").toPandas()
+                   .to_numpy().tolist())) == {(0, 7), (1, 7)}
 
 
 @pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
@@ -134,20 +181,39 @@ def _descendants(cell, res):
 @pytest.mark.parametrize("case", ["flagship_rects", "capped_stars"])
 def test_leaf_table_expands_covering(star_case, case):
     """``leaf`` is the covering with every coarse cell replaced by its
-    leaf-resolution descendants, kind carried; ``capped_stars`` has
-    BOUNDARY cells above the leaf resolution."""
+    leaf-resolution descendants, in order, FULL carried; a BOUNDARY
+    descendant stays BOUNDARY, or — when no edge comes near it — turns
+    FULL or is dropped, and then the numpy ray cast agrees on a 7 × 7
+    grid of its interior points. ``capped_stars`` has BOUNDARY cells
+    above the leaf resolution."""
     if case == "flagship_rects":
-        prep = PreparedPolygons.build(P.valid_polygon_list(rect_only=True), res=RES)
+        polys = P.valid_polygon_list(rect_only=True)
+        prep = PreparedPolygons.build(polys, res=RES)
     else:
-        prep = PreparedPolygons.build(star_case[0], res=RES, max_cells=256)
+        polys = star_case[0]
+        prep = PreparedPolygons.build(polys, res=RES, max_cells=256)
         bnd = prep.covering[prep.covering.kind == G.BOUNDARY].cell.to_numpy()
         assert (bnd >> 58).min() < RES
     want = [(int(pid), d, int(kind))
             for pid, cell, kind in prep.covering.itertuples(index=False)
             for d in _descendants(int(cell), RES)]
     leaf = prep.leaf
-    assert list(leaf.columns) == ["polygon_id", "cell", "kind"]
-    assert list(map(tuple, leaf.to_numpy().tolist())) == want
+    assert list(leaf.columns) == ["polygon_id", "cell", "kind", *_EDGE_COLS]
+    got = {(pid, cell): kind for pid, cell, kind in
+           leaf[["polygon_id", "cell", "kind"]].to_numpy().tolist()}
+    kept = [(pid, d) for pid, d, _ in want if (pid, d) in got]
+    assert kept == list(zip(leaf.polygon_id.tolist(), leaf.cell.tolist()))
+    soups = {pid: G.EdgeSoup.from_wkb(wkb) for pid, wkb in polys}
+    f = (np.arange(7) + 0.5) / 7
+    fx, fy = (a.ravel() for a in np.meshgrid(f, f))
+    for pid, d, kind in want:
+        if kind == G.FULL:
+            assert got[(pid, d)] == G.FULL
+        elif got.get((pid, d)) != G.BOUNDARY:
+            x0, y0, x1, y1 = (v[0] for v in C.cell_bounds(np.array([d])))
+            inside = G.points_in_edgesoup(x0 + fx * (x1 - x0), y0 + fy * (y1 - y0),
+                                          soups[pid])
+            assert inside.all() if (pid, d) in got else not inside.any()
     assert not leaf.duplicated(["polygon_id", "cell"]).any()
     assert ((leaf.cell.to_numpy() >> 58) == RES).all()
 
@@ -169,10 +235,12 @@ def test_leaf_table_guard_raises_before_expanding():
 
 @pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
 def test_pip_join_is_one_pass(spark, tmp_path, join_shape):
-    """One scan of the point side, one leaf-table probe per point: no
-    branch union and no ancestor-chain ``Generate``. Broadcast: the
-    leaf table and band index are the plan's two broadcasts. The point
-    columns come through in order, a dotted name included."""
+    """One scan of the point side and one join on the leaf cell: no
+    branch union, no ancestor-chain ``Generate`` and no second join.
+    Broadcast: the leaf table is the plan's one broadcast. Shuffle
+    (AQE off for a stable plan): both sides shuffle once, on ``_cell``
+    only. The point columns come through in order, a dotted name
+    included."""
     rng = np.random.default_rng(3)
     spark.createDataFrame(pd.DataFrame({
         "pt_id": np.arange(2000), "lon": rng.uniform(-180, 180, 2000),
@@ -182,10 +250,21 @@ def test_pip_join_is_one_pass(spark, tmp_path, join_shape):
     prep = PreparedPolygons.build(P.valid_polygon_list(rect_only=True), res=RES)
     q = pip_join(pts, prep)
     assert q.columns == pts.columns + ["polygon_id"]
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = q._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert plan.count("FileScan") == 1
     assert "Union" not in plan and "Generate" not in plan
     if join_shape == "broadcast":
-        assert plan.count("BroadcastExchange") == 2
+        assert plan.count("BroadcastExchange") == 1
+        assert len(re.findall(r"BroadcastHashJoin \[_cell#\d+L\], \[_cell#\d+L\]",
+                              plan)) == plan.count("BroadcastHashJoin") == 1
     else:
         assert "BroadcastHashJoin" not in plan
+        keys = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+        assert len(keys) == 2, plan
+        assert all(re.fullmatch(r"_cell#\d+L, \d+", k) for k in keys), keys
+        assert "polygon_id" not in " ".join(keys)

@@ -186,13 +186,19 @@ def _star_set(n, k, seed):
     return polys
 
 
-def test_build_picks_executors_by_vertex_count(spark):
+def _with_lists(leaf):
+    return leaf.assign(**{c: leaf[c].map(list) for c in PJ._EDGE_COLS})
+
+
+def test_build_picks_executors_by_vertex_count(spark, monkeypatch):
     """PreparedPolygons.build is the one builder: a set below
     ``_EXECUTOR_MIN_VERTICES`` covers on the driver and starts no Spark
-    job; a set above it covers in a ``MapInPandas`` execution. Both
-    equal per-polygon ``cover_polygon`` in input order plus the band
-    table of their edges, and a second build of the large set is a
-    memo hit that starts no job."""
+    job; a set above it covers in a ``MapInPandas`` execution. Each
+    covering equals per-polygon ``cover_polygon`` in input order, and
+    each whole leaf table, edge arrays included, equals the one table
+    ``_leaf_table`` makes of that covering — the large set's on both
+    paths (its driver build forced by raising the threshold). A second
+    build of the large set is a memo hit that starts no job."""
     rng = np.random.default_rng(5)
     rects = []
     for i in range(300):
@@ -201,28 +207,26 @@ def test_build_picks_executors_by_vertex_count(spark):
         rects.append((i, P.rect_wkb(x0, y0, x0 + rng.uniform(0.5, 8),
                                     y0 + rng.uniform(0.5, 8))))
     stars = _star_set(8, PJ._EXECUTOR_MIN_VERTICES // 8 + 1, seed=9)
-    PJ._BUILD_CACHE.clear()
-    for polys, res, on_executors in ((rects, 6, False), (stars, 7, True)):
-        prep, jobs, plans = _jobs_and_plans(
-            spark, lambda: PreparedPolygons.build(polys, res=res))
+    for polys, res, on_executors in ((rects, 6, False), (stars, 7, False),
+                                     (stars, 7, True)):
+        PJ._BUILD_CACHE.clear()
+        with monkeypatch.context() as m:
+            if polys is stars and not on_executors:
+                m.setattr(PJ, "_EXECUTOR_MIN_VERTICES", 1 << 62)
+            prep, jobs, plans = _jobs_and_plans(
+                spark, lambda: PreparedPolygons.build(polys, res=res))
         assert bool(jobs) is on_executors
         assert any("MapInPandas" in p for p in plans) is on_executors
         want = []
-        edges = {}
         for pid, wkb in polys:
             ids, kinds = G.cover_polygon(G.wkb_to_polygons(wkb), res=res)
             want.append(pd.DataFrame({"polygon_id": np.full(len(ids), pid, np.int64),
                                       "cell": ids, "kind": kinds}))
-            soup = G.EdgeSoup.from_wkb(wkb)
-            edges[pid] = (soup.x1, soup.y1, soup.x2, soup.y2)
-        pd.testing.assert_frame_equal(prep.covering,
-                                      pd.concat(want, ignore_index=True))
-        band_want = PJ._edge_table(edges, res)
-        assert prep.bands.columns.tolist() == band_want.columns.tolist()
-        for c in ("polygon_id", "_band"):
-            assert prep.bands[c].tolist() == band_want[c].tolist()
-        for c in PJ._EDGE_COLS:
-            assert prep.bands[c].map(list).tolist() == band_want[c].map(list).tolist()
+        want = pd.concat(want, ignore_index=True)
+        pd.testing.assert_frame_equal(prep.covering, want)
+        leaf_want = PJ._leaf_table(
+            want, res, {pid: G.EdgeSoup.from_wkb(wkb) for pid, wkb in polys})
+        pd.testing.assert_frame_equal(_with_lists(prep.leaf), _with_lists(leaf_want))
     again, jobs, _ = _jobs_and_plans(
         spark, lambda: PreparedPolygons.build(stars, res=7))
     assert again is prep and not jobs

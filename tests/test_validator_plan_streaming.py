@@ -207,8 +207,11 @@ def test_pip_join_plan_shape(spark):
     assert "SortMergeJoin" not in plan
     # geotag, cell encode and the boundary refine are all native
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # the boundary branch's band-index join is map-side too
-    assert re.search(r"BroadcastHashJoin \[polygon_id#\d+L, _band#\d+L\]", plan)
+    # one join per point: the leaf probe on the cell, whose rows carry
+    # the boundary refine's edges
+    assert plan.count("BroadcastExchange") == 1
+    assert len(re.findall(r"BroadcastHashJoin \[_cell#\d+L\], \[_cell#\d+L\]",
+                          plan)) == plan.count("BroadcastHashJoin") == 1
 
 
 def test_tile_counts_plan_no_python(spark):

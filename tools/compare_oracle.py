@@ -17,6 +17,7 @@ being absorbed by check_dtype=False.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -24,7 +25,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")

@@ -32,10 +32,11 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/data/sf1_synth"
+DST = os.path.join(REPO, "data", "sf1_synth")
 COPIES = 10
 OFFSET = 10_000_000
 
@@ -173,7 +174,7 @@ def main() -> int:
     rc = subprocess.run(
         [sys.executable, "tools/compare_oracle.py", DST,
          "minhash_pairs", "ann_lsh_topk", "adaptive_cell_split"],
-        cwd="/root/repo",
+        cwd=REPO,
     ).returncode
     ok = knn_sweep()
     ok2 = clusters_fixpoint_sweep()

@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BOILER = ("the quick brown fox jumps over the lazy dog near the river "
           "tonight")  # 12 tokens
@@ -85,7 +86,7 @@ def main() -> None:
 
     # Materialize the corpus once as parquet (generation cost excluded
     # from op timings, mirroring bench.py's cached-images discipline).
-    path = f"/root/repo/data/text_scale_{n_docs}"
+    path = os.path.join(REPO, "data", f"text_scale_{n_docs}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         synth_docs(spark, n_docs).write.mode("overwrite").parquet(path)
     docs = spark.read.parquet(path)
