@@ -243,12 +243,12 @@ def _cell_edges(soup: G.EdgeSoup, cells: np.ndarray, res: int):
       cast reads the same floats as ``points_in_edgesoup``.
     * **west** if not near and west of ``B`` in the row: it crosses
       no point's eastward ray. Dropped.
-    * **east** if not near and east of ``B``: a point's ray crosses it iff ``min(y) ≤ Y <
-      max(y)``, so it adds the parity of its endpoint-ys ``≤ Y``. Equal
-      pairs cancel, values above ``B`` never count and values below
-      always do (folded into one ``cy0 - 1`` when odd); each other
-      value ``v`` becomes a stub ``(cx1 + 1, v) → (cx1 + 1, cy1 + 1)``,
-      which the unchanged kernel crosses iff ``v ≤ Y``, never on it.
+    * **east** if not near and east of ``B``: a point's ray crosses it
+      iff ``min(y) ≤ Y < max(y)``, adding the parity of its endpoint-ys
+      ``≤ Y``. Equal pairs cancel, values above ``B`` never count and
+      values below always do (one ``cy0 - 1`` when odd); each other
+      ``v`` becomes a stub ``(cx1 + 1, v) → (cx1 + 1, cy1 + 1)``, which
+      the kernel crosses iff ``v ≤ Y`` and never finds a point on.
 
     Edges outside the row neither hold nor cross a point of the cell. A
     cell with no near edge is wholly inside or outside: FULL if its
@@ -272,18 +272,18 @@ def _cell_edges(soup: G.EdgeSoup, cells: np.ndarray, res: int):
                    + np.arange(int(k.sum()))]
         lo = hi
         ex1, ey1, ex2, ey2 = x1[e], y1[e], x2[e], y2[e]
-        L, R, B, T = cx0[c] - t, cx1[c] + t, cy0[c] - t, cy1[c] + t
+        bx0, bx1, by0, by1 = cx0[c] - t, cx1[c] + t, cy0[c] - t, cy1[c] + t
         dx, dy = ex2 - ex1, ey2 - ey1
-        cross = [dx * (Y - ey1) - dy * (X - ex1) for X in (L, R) for Y in (B, T)]
+        cross = [dx * (y - ey1) - dy * (x - ex1) for x in (bx0, bx1) for y in (by0, by1)]
         tol = 1e-12 + t * (np.abs(dx) + np.abs(dy))
-        is_near = ((np.minimum(ex1, ex2) <= R) & (np.maximum(ex1, ex2) >= L)
-                   & (np.minimum(ey1, ey2) <= T) & (np.maximum(ey1, ey2) >= B)
+        is_near = ((np.minimum(ex1, ex2) <= bx1) & (np.maximum(ex1, ex2) >= bx0)
+                   & (np.minimum(ey1, ey2) <= by1) & (np.maximum(ey1, ey2) >= by0)
                    & (np.minimum.reduce(cross) <= tol)
                    & (np.maximum.reduce(cross) >= -tol))
         near.append((c[is_near], e[is_near]))
         # a far edge lies wholly on one side of B within the row: the
         # side of its point at a height inside both
-        ys = np.clip((ey1 + ey2) / 2, B, T)
+        ys = np.clip((ey1 + ey2) / 2, by0, by1)
         with np.errstate(divide="ignore", invalid="ignore"):
             xs = np.where(dy != 0, ex1 + (ys - ey1) * dx / dy, ex1)
         is_east = ~is_near & (xs > (cx0[c] + cx1[c]) / 2)
