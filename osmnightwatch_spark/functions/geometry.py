@@ -8,11 +8,9 @@ reference engine uses via NetTopologySuite:
   little-endian WKB Polygon / MultiPolygon;
 * point-in-polygon by ray casting with even-odd rule + boundary
   detection (the refine step of the reference's filter-and-refine
-  containment join, ``AdminCountPerCountryAnalyzer.cs:664-674``);
-* "prepared polygon" analog: classify the cells of a quadtree covering
-  as FULL (entirely inside) vs BOUNDARY (edge passes through), so the
-  join short-circuits containment for FULL cells
-  (mirrors PreparedPolygon caching, ``AdminCountPerCountryAnalyzer.cs:486,637``);
+  containment join, ``AdminCountPerCountryAnalyzer.cs:664-674``); the
+  "prepared polygon" analog that short-circuits it for cells wholly
+  inside is ``operators.pip_join``'s leaf table;
 * ring orientation (shoelace — ``BrokenCoastlineAnalyzer.cs:195-198``
   island-CCW check), segment crossing (DE-9IM "crosses" for curves,
   ``BrokenCoastlineAnalyzer.cs:93-94``) and simple self-intersection.
@@ -186,96 +184,6 @@ def points_in_edgesoup(px: np.ndarray, py: np.ndarray, soup: EdgeSoup,
 def point_in_wkb(px, py, wkb: bytes) -> np.ndarray:
     """Convenience: ray-cast against a WKB polygon (test oracle path)."""
     return points_in_edgesoup(np.atleast_1d(px), np.atleast_1d(py), EdgeSoup.from_wkb(wkb))
-
-
-# ---------------------------------------------------------------------------
-# Prepared covering: quadtree cells classified FULL / BOUNDARY
-# ---------------------------------------------------------------------------
-
-FULL = 0      # cell entirely inside the polygon → containment short-circuits
-BOUNDARY = 1  # polygon edge passes through the cell → exact refine needed
-
-
-def _segment_intersects_box(soup: EdgeSoup, lon0, lat0, lon1, lat1) -> np.ndarray:
-    """Per-cell bool: does any polygon edge intersect the [box]?
-
-    Conservative-but-exact separating-axis test per (edge, box) pair,
-    vectorized over cells (boxes are arrays, edges broadcast).
-    """
-    x1, y1, x2, y2 = (a[None, :] for a in (soup.x1, soup.y1, soup.x2, soup.y2))
-    L, B, R, T = (np.asarray(v, dtype=np.float64)[:, None] for v in (lon0, lat0, lon1, lat1))
-    # bbox reject
-    overlap = (
-        (np.minimum(x1, x2) <= R) & (np.maximum(x1, x2) >= L)
-        & (np.minimum(y1, y2) <= T) & (np.maximum(y1, y2) >= B)
-    )
-    # line side test: all 4 corners strictly on one side of the edge line → no hit
-    dx, dy = x2 - x1, y2 - y1
-    s1 = dx * (B - y1) - dy * (L - x1)
-    s2 = dx * (B - y1) - dy * (R - x1)
-    s3 = dx * (T - y1) - dy * (L - x1)
-    s4 = dx * (T - y1) - dy * (R - x1)
-    all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
-    all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
-    return (overlap & ~(all_pos | all_neg)).any(axis=1)
-
-
-def cover_polygon(polys: list[list[np.ndarray]], res: int,
-                  max_cells: int = 4096, min_res: int = 3):
-    """Quadtree covering of a polygon: (cell_ids int64, kinds int8).
-
-    Top-down refinement from ``min_res``: cells whose box intersects no
-    edge are either FULL (center inside) or dropped (outside); cells cut
-    by an edge recurse until ``res``, where they are kept as BOUNDARY.
-    ``max_cells`` caps the covering size by lowering the effective leaf
-    resolution (coarser BOUNDARY cells = more refine work, never wrong).
-
-    This table *is* the engine's prepared-geometry: the PIP join first
-    equi-joins points' cell ids against it; FULL hits skip ray casting.
-    """
-    from . import cells as C
-
-    soup = EdgeSoup(polys)
-    if len(soup.x1) == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int8)
-    bx0, by0, bx1, by1 = soup.bbox
-
-    start = min(min_res, res)
-    # seed: all cells at `start` overlapping the bbox
-    n = 1 << start
-    x0 = max(0, min(n - 1, int(np.floor((bx0 + 180.0) / 360.0 * n))))
-    x1_ = max(0, min(n - 1, int(np.floor((bx1 + 180.0) / 360.0 * n))))
-    y0 = max(0, min(n - 1, int(np.floor((by0 + 90.0) / 180.0 * n))))
-    y1_ = max(0, min(n - 1, int(np.floor((by1 + 90.0) / 180.0 * n))))
-    xs, ys = np.meshgrid(np.arange(x0, x1_ + 1), np.arange(y0, y1_ + 1))
-    frontier = C.cell_from_xy(xs.ravel(), ys.ravel(), start)
-
-    full_parts, boundary_parts = [], []
-    level = start
-    while len(frontier):
-        lon0, lat0, lon1, lat1 = C.cell_bounds(frontier)
-        cut = _segment_intersects_box(soup, lon0, lat0, lon1, lat1)
-        clean = frontier[~cut]
-        if len(clean):
-            cx = (lon0[~cut] + lon1[~cut]) / 2
-            cy = (lat0[~cut] + lat1[~cut]) / 2
-            inside = points_in_edgesoup(cx, cy, soup)
-            full_parts.append(clean[inside])
-        cut_cells = frontier[cut]
-        if level >= res or (len(cut_cells) * 4 + sum(map(len, full_parts))
-                            + sum(map(len, boundary_parts))) > max_cells:
-            boundary_parts.append(cut_cells)
-            break
-        frontier = children_flat = C.children_cells(cut_cells).ravel()
-        level += 1
-    cells_full = np.concatenate(full_parts) if full_parts else np.empty(0, np.int64)
-    cells_bnd = np.concatenate(boundary_parts) if boundary_parts else np.empty(0, np.int64)
-    ids = np.concatenate([cells_full, cells_bnd])
-    kinds = np.concatenate([
-        np.zeros(len(cells_full), dtype=np.int8),
-        np.ones(len(cells_bnd), dtype=np.int8),
-    ])
-    return ids, kinds
 
 
 # ---------------------------------------------------------------------------

@@ -13,9 +13,9 @@ Two aggregates:
   occupied by images inside the polygon. SQL-expressible → checked
   against the DuckDB oracle for rectangular polygon sets.
 * ``geometric_coverage`` — data-independent: per (tile, polygon_id)
-  the fraction of the tile's area covered, from the prepared covering
+  the fraction of the tile's area covered, from the prepared leaf
   table alone (FULL cells count 1, BOUNDARY cells ½ as an explicit
-  midpoint estimate). Pure DataFrame ops over the covering.
+  midpoint estimate). Pure DataFrame ops over the leaf table.
 """
 
 from __future__ import annotations
@@ -54,20 +54,19 @@ def observed_coverage(points: DataFrame, prepared: PreparedPolygons,
 
 def geometric_coverage(spark: SparkSession, prepared: PreparedPolygons,
                        tile_res: int) -> DataFrame:
-    """Per (tile, polygon): covered-area fraction from the covering
-    table only.
+    """Per (tile, polygon): covered-area fraction from the leaf table
+    only (its ``covering`` columns).
 
-    Covering cells at res >= tile_res roll up to their ancestor tile,
-    each contributing area 4^-(res - tile_res) (half for BOUNDARY).
-    Covering cells *coarser* than tile_res (quadtree coverings seed at
-    min_res, so large polygons produce them) expand to their 4^(tile_res
-    - cres) descendant tiles, each fully covered (weight 1.0, or 0.5
-    for a BOUNDARY cell's midpoint estimate). The expansion explode is
-    output-proportional — one row per covered tile, which is exactly
-    the result cardinality — so it cannot blow up beyond the answer
-    itself."""
+    Leaf cells at res >= tile_res roll up to their ancestor tile, each
+    contributing area 4^-(res - tile_res) (half for BOUNDARY). When
+    tile_res is finer than the leaf res, each leaf cell expands to its
+    4^(tile_res - res) descendant tiles, each fully covered (weight
+    1.0, or 0.5 for a BOUNDARY cell's midpoint estimate). The expansion
+    explode is output-proportional — one row per covered tile, which is
+    exactly the result cardinality — so it cannot blow up beyond the
+    answer itself."""
     mask = (1 << 58) - 1
-    cov = prepared.covering_df(spark).withColumn(
+    cov = prepared.leaf_df(spark).select("polygon_id", "cell", "kind").withColumn(
         "cres", F.expr("shiftrightunsigned(cell, 58)")
     )
     kind_w = F.when(F.col("kind") == F.lit(0), F.lit(1.0)).otherwise(F.lit(0.5))

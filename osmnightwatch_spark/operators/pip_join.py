@@ -6,12 +6,11 @@ Recasts the reference's filter-and-refine containment join
 :664-674) as one Spark-native join per point:
 
 1. **Prepare** (once per polygon set, memoized — the PreparedPolygon
-   analog, :486,637): each polygon → quadtree covering of FULL
-   (inside) and BOUNDARY (edge passes through) cells
-   (``geometry.cover_polygon``), expanded to the leaf resolution: the
-   small side is replicated, never the point side. Each BOUNDARY leaf
-   cell carries its own ray-cast edges — the edges near it plus stubs
-   for those wholly east of it (S2's ``S2ShapeIndex`` cell pattern).
+   analog, :486,637): one row scan per polygon lists its leaf cells,
+   FULL (inside) and BOUNDARY (an edge comes near): the small side is
+   replicated, never the point side. Each BOUNDARY leaf cell carries
+   its own ray-cast edges — the edges near it plus stubs for those
+   wholly east of it (S2's ``S2ShapeIndex`` cell pattern).
 2. **Probe and refine**: points get their leaf cell by the native
    ``attach_cell`` encode and equi-join the leaf table on it, broadcast
    for dim-sized sets so the 10^12-row point side is never shuffled.
@@ -36,23 +35,16 @@ from pyspark.sql import types as T
 from ..functions import cells as C
 from ..functions import geometry as G
 
-FULL = int(G.FULL)
-BOUNDARY = int(G.BOUNDARY)
+FULL = 0      # leaf cell wholly inside the polygon: the hit is kept
+BOUNDARY = 1  # an edge comes near the leaf cell: the hit is ray-cast
 
 
-#: memo for :meth:`PreparedPolygons.build` keyed on (res, max_cells,
-#: polygon tuple) — see the docstring there
+#: memo for :meth:`PreparedPolygons.build` keyed on (res, polygon
+#: tuple) — see the docstring there
 _BUILD_CACHE: dict = {}
 
-#: total vertex count from which :meth:`PreparedPolygons.build` covers
-#: on executors: the smallest at which executors won every rep (cold
-#: builds, local[4] on a 4-core host, res 7 stars of 64 × k vertices,
-#: paths alternating; the driver won every rep up to 16.5k, executors
-#: from 48.5k, and at 641k they took 3.9–4.7 s against 9.3–11.6 s).
-_EXECUTOR_MIN_VERTICES = 48_000
-
-#: most rows :func:`_leaf_table` may expand a covering to (~80 MB; the
-#: 25 admin fixture polygons give 17k at res 7, 258k at 9, 4.08M at 11)
+#: most rows the leaf table may hold (~80 MB; the 25 admin fixture
+#: polygons give 17k at res 7, 258k at 9, 4.08M at 11)
 _MAX_LEAF_CELLS = 1 << 22
 
 #: per-edge array columns of a BOUNDARY leaf row (ray-cast inputs)
@@ -64,88 +56,41 @@ _EDGE_COLS = ("_bx1", "_by1", "_bx2", "_by2", "_binv")
 #: disagreement between numpy and the JVM
 _CELL_TOL = 1e-9
 
-#: about the most (edge, cell) pairs :func:`_cell_edges` holds at once
+#: about the most (edge, cell) or (edge, row) pairs held at once
 _PAIR_CHUNK = 1 << 20
-
-
-def _cover_one(pid: int, polys: list, res: int, max_cells: int) -> pd.DataFrame:
-    """One polygon's covering rows — the kernel both build paths run,
-    so their coverings are identical."""
-    ids, kinds = G.cover_polygon(polys, res=res, max_cells=max_cells)
-    return pd.DataFrame({"polygon_id": np.full(len(ids), pid, np.int64),
-                         "cell": ids, "kind": kinds.astype(np.int8)})
-
-
-def _cover_on_executors(spark: SparkSession, polygons: list[tuple[int, bytes]],
-                        res: int, max_cells: int) -> pd.DataFrame:
-    """:func:`_cover_one` per polygon as ``mapInPandas`` over a
-    (polygon_id, wkb) DataFrame; only the covering rows are collected
-    back, reordered into input order (the driver loop's order)."""
-    src = spark.createDataFrame(pd.DataFrame({
-        "_i": np.arange(len(polygons), dtype=np.int64),
-        "polygon_id": [int(p) for p, _ in polygons],
-        "geom_wkb": [bytes(w) for _, w in polygons],
-    })).repartition(min(len(polygons), spark.sparkContext.defaultParallelism))
-
-    def gen(batches):
-        for b in batches:
-            for i, pid, wkb in zip(b["_i"], b["polygon_id"], b["geom_wkb"]):
-                yield _cover_one(int(pid), G.wkb_to_polygons(bytes(wkb)),
-                                 res, max_cells).assign(_i=i)
-
-    out = src.mapInPandas(
-        gen, "polygon_id long, cell long, kind tinyint, _i long").toPandas()
-    return (out.sort_values("_i", kind="stable").drop(columns="_i")
-            .reset_index(drop=True))
 
 
 @dataclass
 class PreparedPolygons:
-    """Prepared polygon set: quadtree covering and its expansion to the
-    leaf resolution, whose BOUNDARY rows carry their ray-cast edges."""
+    """Prepared polygon set: the leaf table, one row per (polygon, leaf
+    cell) it keeps — FULL, or BOUNDARY with the cell's ray-cast edges."""
 
-    covering: pd.DataFrame          # polygon_id LONG, cell LONG, kind TINYINT
-    res: int                        # leaf (finest) covering resolution
+    res: int                        # leaf resolution
     leaf: pd.DataFrame              # polygon_id, cell, kind INT, + _EDGE_COLS
 
+    @property
+    def covering(self) -> pd.DataFrame:
+        """``leaf``'s ``polygon_id``, ``cell`` and ``kind`` columns."""
+        return self.leaf[["polygon_id", "cell", "kind"]]
+
     @classmethod
-    def build(cls, polygons: list[tuple[int, bytes]], res: int = 7,
-              max_cells: int = 4096) -> "PreparedPolygons":
+    def build(cls, polygons: list[tuple[int, bytes]], res: int = 7) -> "PreparedPolygons":
         """polygons: [(polygon_id, wkb_polygon_or_multipolygon), ...].
 
-        Each WKB is parsed once on the driver. The covering runs on
-        executors (``mapInPandas``) for sets of at least 2 polygons and
-        ``_EXECUTOR_MIN_VERTICES`` vertices while a session is active,
-        else on the driver (checked in that order, so a small set never
-        touches the JVM); both paths run :func:`_cover_one`, and the one
-        :func:`_leaf_table` builds ``leaf`` from either covering,
-        raising ``ValueError`` past ``_MAX_LEAF_CELLS`` rows.
+        Each WKB is parsed once and :func:`_leaf_table` scans it on the
+        driver, raising ``ValueError`` past ``_MAX_LEAF_CELLS`` rows.
 
         Memoized on the full input, with the per-session DataFrame
         memos: a caller that re-plans the same join (every bench run,
         every validator micro-batch) pays the build once. Reference
         analog: ``AdminCountPerCountryAnalyzer.cs:470-490``.
         """
-        key = (res, max_cells,
-               tuple((int(p), bytes(w)) for p, w in polygons))
+        key = (res, tuple((int(p), bytes(w)) for p, w in polygons))
         hit = _BUILD_CACHE.get(key)
         if hit is not None:
             return hit
-        parsed = [(int(pid), G.wkb_to_polygons(wkb)) for pid, wkb in polygons]
-        soups = {pid: G.EdgeSoup(polys) for pid, polys in parsed}
-        n_vertices = sum(len(s.x1) for s in soups.values())
-        spark = (SparkSession.getActiveSession()
-                 if n_vertices >= _EXECUTOR_MIN_VERTICES and len(parsed) >= 2
-                 else None)
-        if spark is not None:
-            covering = _cover_on_executors(spark, polygons, res, max_cells)
-        elif parsed:
-            covering = pd.concat([_cover_one(pid, polys, res, max_cells)
-                                  for pid, polys in parsed], ignore_index=True)
-        else:
-            covering = _cover_one(0, [], res, max_cells)
-        out = cls(covering=covering, res=res,
-                  leaf=_leaf_table(covering, res, soups))
+        out = cls(res=res, leaf=_leaf_table(
+            [(int(pid), G.EdgeSoup.from_wkb(wkb)) for pid, wkb in polygons], res))
         if len(_BUILD_CACHE) >= 16:  # bounded: a handful of live sets
             _BUILD_CACHE.clear()
         _BUILD_CACHE[key] = out
@@ -163,11 +108,6 @@ class PreparedPolygons:
             memo[key] = make()
         return memo[key]
 
-    def covering_df(self, spark: SparkSession) -> DataFrame:
-        """The covering as a LocalRelation (per-session memo)."""
-        return self._per_session(spark, "covering", lambda: spark.createDataFrame(
-            self.covering.astype({"kind": "int32"}), schema=_COVER_SCHEMA))
-
     def leaf_df(self, spark: SparkSession) -> DataFrame:
         """The leaf table as a LocalRelation (per-session memo), passed as
         Arrow: from pandas, its list columns convert ~4× slower."""
@@ -175,63 +115,157 @@ class PreparedPolygons:
             pa.Table.from_pandas(self.leaf, preserve_index=False), schema=_LEAF_SCHEMA))
 
 
-_COVER_SCHEMA = T.StructType([
+_EDGE_FIELDS = [T.StructField(c, T.ArrayType(T.DoubleType(), False), False)
+                for c in _EDGE_COLS]
+_LEAF_SCHEMA = T.StructType([
     T.StructField("polygon_id", T.LongType(), False),
     T.StructField("cell", T.LongType(), False),
     T.StructField("kind", T.IntegerType(), False),
-])
-_EDGE_FIELDS = [T.StructField(c, T.ArrayType(T.DoubleType(), False), False)
-                for c in _EDGE_COLS]
-_LEAF_SCHEMA = T.StructType(_COVER_SCHEMA.fields + _EDGE_FIELDS)
-_EDGE_SCHEMA = T.StructType([_COVER_SCHEMA["polygon_id"]] + _EDGE_FIELDS)
+] + _EDGE_FIELDS)
+_EDGE_SCHEMA = T.StructType([_LEAF_SCHEMA["polygon_id"]] + _EDGE_FIELDS)
 
 
-def _leaf_table(covering: pd.DataFrame, res: int,
-                soups: dict[int, G.EdgeSoup]) -> pd.DataFrame:
-    """``covering`` with every cell at level ``lv < res`` replaced by its
-    ``4^(res-lv)`` descendants ``(res << 58) | ((morton << 2d) + i)``
-    (``d = res - lv``, the exact inverse of ``parent_spark_sql``), kind
-    carried, then each polygon's BOUNDARY rows given their edges by
-    :func:`_cell_edges`; FULL rows hold empty arrays. ``(polygon_id,
-    cell)`` stays unique. The row count ``Σ 4^(res-lv)`` is checked
-    before anything is allocated: a world-size polygon at a high
-    ``res`` would otherwise exhaust the driver.
+def _leaf_table(soups: list[tuple[int, G.EdgeSoup]], res: int) -> pd.DataFrame:
+    """The leaf table of ``soups``, polygon by polygon in input order:
+    the candidate cells of :func:`_row_scan` as :func:`_cell_edges`
+    classifies them (BOUNDARY with its edges, FULL, or dropped), then
+    the cells of its FULL runs, each in row-major order; FULL rows hold
+    empty arrays. ``(polygon_id, cell)`` is unique. The row count
+    (candidates plus FULL run lengths) is checked before any run is
+    expanded: a world-size polygon at a high ``res`` would otherwise
+    exhaust the driver.
     """
-    cell = covering["cell"].to_numpy(np.int64)
-    depth = res - (cell >> C._RES_SHIFT)
-    levels, counts = np.unique(depth, return_counts=True)
-    total = sum(int(n) << (2 * int(d)) for d, n in zip(levels, counts))
+    scans, total = [], 0
+    for _, soup in soups:
+        cand, full = _row_scan(soup, res, total)
+        total += _run_length(cand) + _run_length(full)
+        scans.append((cand, full))
+    _check_leaf_cells(total, res)
+    pid, cell, kind, counts = ([np.empty(0, np.int64)] for _ in range(4))
+    edges = [(np.empty(0),) * 4]
+    for (p, soup), (cand, full) in zip(soups, scans):
+        cells = _run_cells(*cand, res)
+        if not len(cells):
+            continue
+        k, at, *xy = _cell_edges(soup, cells, res)
+        keep = k >= 0
+        order = np.argsort(at, kind="stable")
+        inner = _run_cells(*full, res)
+        pid.append(np.full(int(keep.sum()) + len(inner), p, np.int64))
+        cell += [cells[keep], inner]
+        kind += [k[keep], np.full(len(inner), FULL)]
+        counts += [np.bincount(at, minlength=len(cells))[keep], np.zeros(len(inner), np.int64)]
+        edges.append([v[order] for v in xy])
+    out = pd.DataFrame({"polygon_id": np.concatenate(pid), "cell": np.concatenate(cell),
+                        "kind": np.concatenate(kind).astype(np.int32)})
+    return out.assign(**_edge_lists(np.concatenate(counts),
+                                    *(np.concatenate(v) for v in zip(*edges))))
+
+
+def _row_scan(soup: G.EdgeSoup, res: int, spent: int):
+    """One polygon's leaf cells as column runs ``(row, c0, c1)`` of grid
+    coordinates, sorted, disjoint and not yet expanded: ``(candidates,
+    full)``. With ``t = _CELL_TOL``:
+
+    * **Candidates** hold every cell :func:`_cell_edges` could call near
+      an edge. Each edge pairs with the grid rows its y-range meets,
+      widened by ``t`` (the rows ``_cell_edges`` pairs it with). Its
+      cross product is ``-dy · (x - x_line(y))``, so the on-edge band
+      ``|cross| ≤ tol`` of ``_cell_edges`` meets a cell box widened by
+      ``t`` only if the cell meets the line's x-range over the row's
+      widened y-band, widened by ``tol / |dy| + t``; and a near edge's
+      bounding box meets that box, which caps the range to the edge's
+      x-range ± ``t``. Both margins get one more ``t`` against rounding
+      (a horizontal edge's range is the capped one).
+    * **FULL runs**: the cells between two candidate runs of a row meet
+      no edge, so they are all inside or all outside — inside iff an
+      odd number of the edges crossing the row's centre line (the
+      kernel's half-open rule) cross it east of the run. Each crossing
+      lies in a candidate cell, so only each column's crossing parity
+      is kept.
+
+    The pairs are cut in runs of ``_PAIR_CHUNK``, and the candidates
+    alone are held to ``_MAX_LEAF_CELLS`` (less the ``spent`` rows of
+    earlier polygons) as they grow, so a huge edge raises early.
+    """
+    t, h = _CELL_TOL, 180.0 / (1 << res)
+    x1, y1, x2, y2 = soup.x1, soup.y1, soup.x2, soup.y2
+    r0 = C.grid_xy(x1, np.minimum(y1, y2) - t, res)[1]
+    ends = np.cumsum(C.grid_xy(x1, np.maximum(y1, y2) + t, res)[1] - r0 + 1)
+    pairs = int(ends[-1]) if len(ends) else 0
+    empty = np.empty(0, np.int64)
+    cand, crossings = (empty,) * 3, (empty,) * 2
+    for p0 in range(0, pairs, _PAIR_CHUNK):
+        p = np.arange(p0, min(p0 + _PAIR_CHUNK, pairs))
+        e = np.searchsorted(ends, p, "right")
+        row = r0[e] + p - np.r_[0, ends][e]
+        ex1, ey1, ex2, ey2 = x1[e], y1[e], x2[e], y2[e]
+        dx, dy = ex2 - ex1, ey2 - ey1
+        cy0 = -90.0 + row * h
+        cy1 = cy0 + h
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xa = ex1 + (cy0 - t - ey1) * dx / dy
+            xb = ex1 + (cy1 + t - ey1) * dx / dy
+            w = 2 * t + (1e-12 + t * (np.abs(dx) + np.abs(dy))) / np.abs(dy)
+            inv_dy = np.where(dy != 0, 1.0 / np.where(dy == 0, 1.0, dy), 0.0)
+        lo = np.fmax(np.fmin(xa, xb) - w, np.minimum(ex1, ex2) - 2 * t)
+        hi = np.fmin(np.fmax(xa, xb) + w, np.maximum(ex1, ex2) + 2 * t)
+        c0, c1 = C.grid_xy(np.stack([lo, hi]), 0.0, res)[0]
+        ok = c0 <= c1
+        cand = _merge_runs(*(np.concatenate(a) for a in zip(cand, (row[ok], c0[ok], c1[ok]))))
+        _check_leaf_cells(spent + _run_length(cand), res)
+        # the kernel's crossings of the row's centre line
+        yc = (cy0 + cy1) / 2
+        cross = ((ey1 <= yc) & (yc < ey2)) | ((ey2 <= yc) & (yc < ey1))
+        xi = ex1 + (yc - ey1) * dx * inv_dy
+        crossings = _odd_pairs(*(np.concatenate(a) for a in zip(
+            crossings, (row[cross], C.grid_xy(xi[cross], 0.0, res)[0]))))
+    row, c0, c1 = cand
+    gap = row[1:] == row[:-1]
+    row, c0, c1 = row[1:][gap], c1[:-1][gap] + 1, c0[1:][gap] - 1
+    keys = (crossings[0] << C.MAX_RES) | crossings[1]
+    east = (np.searchsorted(keys, (row + 1) << C.MAX_RES)
+            - np.searchsorted(keys, (row << C.MAX_RES) | c0))
+    odd = east % 2 == 1
+    return cand, (row[odd], c0[odd], c1[odd])
+
+
+def _merge_runs(row: np.ndarray, c0: np.ndarray, c1: np.ndarray):
+    """The sorted, disjoint column runs that cover the ``(row, c0, c1)``
+    runs; runs that touch are joined."""
+    o = np.lexsort((c0, row))
+    row, c0, c1 = row[o], c0[o], c1[o]
+    # the furthest column reached so far in each row
+    reach = np.maximum.accumulate((row << C.MAX_RES) | c1) & ((1 << C.MAX_RES) - 1)
+    start = np.flatnonzero(np.r_[True, (row[1:] != row[:-1]) | (c0[1:] > reach[:-1] + 1)]
+                           [:len(row)])
+    return row[start], c0[start], reach[np.r_[start[1:], len(row)] - 1]
+
+
+def _run_length(runs) -> int:
+    return int((runs[2] - runs[1] + 1).sum())
+
+
+def _run_cells(row: np.ndarray, c0: np.ndarray, c1: np.ndarray, res: int) -> np.ndarray:
+    """The cell ids of the column runs, run by run."""
+    n = c1 - c0 + 1
+    col = np.repeat(c0 - np.cumsum(n) + n, n) + np.arange(int(n.sum()))
+    return C.cell_from_xy(col, np.repeat(row, n), res)
+
+
+def _check_leaf_cells(total: int, res: int) -> None:
+    """``ValueError`` past ``_MAX_LEAF_CELLS`` rows, naming a coarser
+    res (each level down quarters a table of mostly FULL rows)."""
     if total > _MAX_LEAF_CELLS:
         k = next(k for k in range(1, 64) if total <= _MAX_LEAF_CELLS << 2 * k)
         raise ValueError(
-            f"the covering expands to {total} cells at res {res}, over the "
-            f"{_MAX_LEAF_CELLS} limit: use a coarser res (about "
+            f"the leaf table needs at least {total} cells at res {res}, over "
+            f"the {_MAX_LEAF_CELLS} limit: use a coarser res (about "
             f"{max(0, res - k)})")
-    fan = np.left_shift(np.int64(1), 2 * depth)
-    src = np.repeat(np.arange(len(cell)), fan)
-    i = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(fan) - fan, fan)
-    morton = cell[src] & ((1 << C._RES_SHIFT) - 1)
-    pid = covering["polygon_id"].to_numpy(np.int64)[src]
-    leaf = (res << C._RES_SHIFT) | ((morton << (2 * depth[src])) + i)
-    kind = covering["kind"].to_numpy()[src].astype(np.int32)
-
-    rows = np.flatnonzero(kind == BOUNDARY)
-    rows = rows[np.argsort(pid[rows], kind="stable")]
-    at, edges = [np.empty(0, np.int64)], [(np.empty(0),) * 4]
-    for r in np.split(rows, np.flatnonzero(np.diff(pid[rows])) + 1)[:len(rows)]:
-        kind[r], j, *xy = _cell_edges(soups[int(pid[r[0]])], leaf[r], res)
-        at.append(r[j])
-        edges.append(xy)
-    at = np.concatenate(at)
-    order = np.argsort(at, kind="stable")
-    keep = kind >= 0
-    out = pd.DataFrame({"polygon_id": pid[keep], "cell": leaf[keep], "kind": kind[keep]})
-    return out.assign(**_edge_lists(np.bincount(at, minlength=len(kind))[keep],
-                                    *(np.concatenate(v)[order] for v in zip(*edges))))
 
 
 def _cell_edges(soup: G.EdgeSoup, cells: np.ndarray, res: int):
-    """One polygon's BOUNDARY leaf cells → ``(kind, at, x1, y1, x2,
+    """One polygon's candidate leaf cells → ``(kind, at, x1, y1, x2,
     y2)``: each cell's new kind (BOUNDARY, FULL, or -1 to drop it) and
     the ray-cast edges of the cells kept BOUNDARY, ``at`` being the
     cell's index. With ``B`` the cell box widened by ``t = _CELL_TOL``,

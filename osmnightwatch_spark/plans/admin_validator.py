@@ -10,16 +10,15 @@ Pipeline (mirrors ProcessPbf, SURVEY.md §3.1, stages 4-6):
 3. admin_centre structural checks (:263-294);
 4. state construction: country (admin_level=2) polygons become the
    prepared PIP set (``PreparedPolygons.build``: memoized, so a
-   streaming re-run over the same countries covers them once, and
-   covered on executors once the countries hold enough vertices);
+   streaming re-run over the same countries prepares them once);
    every admin's representative point joins against it →
    per-(country, level) sorted admin sets (A5) and the reverse
    admin→country map (A6);
 5. expected-vs-actual diff (operators/issues.admin_diff_issues) →
    lost/gained/missing issues.
 
-Everything but the pandas kernels (ring stitch, representative point,
-and the covering when the country set is large) is native DataFrame
+Everything but the pandas kernels (ring stitch, representative point)
+and the driver-side leaf table of the countries is native DataFrame
 ops; the PIP refine is a native SQL ray cast.
 """
 
@@ -106,8 +105,8 @@ def build_state(assembled: DataFrame, admin_meta: DataFrame,
 
     Countries = assembled level-2 polygons, collected and prepared by
     ``PreparedPolygons.build`` (the reference's in-memory STRtree,
-    :470-490; the builder picks driver or executors for the covering
-    itself); admins join by representative point (J3/J4).
+    :470-490; one row scan per country on the driver); admins join
+    by representative point (J3/J4).
     """
     meta = admin_meta.select("relation_id", "admin_level", "name")
     geoms = assembled.where(F.col("reason").isNull()).join(meta, "relation_id")

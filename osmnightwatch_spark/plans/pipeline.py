@@ -6,9 +6,9 @@ H3-encode + PIP-join + tile-assign pipeline"): given the images table,
 1. derive the geotag from ``phash`` (native arithmetic, codegen'd);
 2. assign every image a hierarchical tile (native ``attach_cell``);
 3. broadcast PIP join against the admin polygon set, in one pass:
-   one probe of the leaf-resolution covering per point, then a LEFT
-   band-index join whose native ray cast filters boundary-cell hits
-   only;
+   one equi-join of each point's leaf cell with the leaf table, whose
+   condition ray-casts boundary-cell hits only, natively, over the
+   cell's own edges;
 4. aggregate: per (admin polygon, tile) image counts — the engine's
    analog of the reference's per-country admin feature counts
    (``AdminCountPerCountryAnalyzer.cs:222-260``).

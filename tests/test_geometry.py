@@ -1,7 +1,9 @@
-"""Geometry kernel truth tables (PIP boundary cases, covering
+"""Geometry kernel truth tables (PIP boundary cases, leaf-table
 invariants, curve predicates) — mirrors the reference's predicate
 semantics (AdminCountPerCountryAnalyzer.cs:664-674 containment,
 BrokenCoastlineAnalyzer.cs:93-217 curve checks)."""
+
+from types import SimpleNamespace
 
 import numpy as np
 import pytest
@@ -10,6 +12,8 @@ from hypothesis import strategies as st
 
 from osmnightwatch_spark.functions import cells as C
 from osmnightwatch_spark.functions import geometry as G
+from osmnightwatch_spark.operators.pip_join import (_EDGE_COLS, BOUNDARY, FULL,
+                                                  PreparedPolygons)
 
 SQUARE = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], float)
 HOLE = np.array([[4, 4], [6, 4], [6, 6], [4, 6], [4, 4]], float)
@@ -48,17 +52,25 @@ def test_wkb_roundtrip_multipolygon():
     np.testing.assert_array_equal(polys[1][0], SQUARE + 20)
 
 
+def _leaf(polys, res):
+    return PreparedPolygons.build([(1, G.polygons_to_wkb(polys))], res=res).leaf
+
+
 def test_covering_partition_invariants():
     polys = [[SQUARE, HOLE]]
-    ids, kinds = G.cover_polygon(polys, res=9)
-    # no duplicate cells; FULL and BOUNDARY disjoint
-    assert len(np.unique(ids)) == len(ids)
+    leaf = _leaf(polys, 9)
+    # one row per leaf cell, every cell at the leaf res
+    assert not leaf.cell.duplicated().any()
+    assert ((leaf.cell.to_numpy() >> 58) == 9).all()
     soup = G.EdgeSoup(polys)
-    full = ids[kinds == G.FULL]
+    full = leaf.cell.to_numpy()[leaf.kind == FULL]
     lon0, lat0, lon1, lat1 = C.cell_bounds(full)
     # all four corners of a FULL cell are inside
     for cx, cy in [(lon0, lat0), (lon0, lat1), (lon1, lat0), (lon1, lat1)]:
         assert G.points_in_edgesoup(cx, cy, soup).all()
+    # a BOUNDARY cell carries its ray-cast edges, a FULL cell none
+    n = leaf._bx1.map(len).to_numpy()
+    assert (n[leaf.kind == BOUNDARY] > 0).all() and (n[leaf.kind == FULL] == 0).all()
 
 
 @given(st.lists(st.tuples(
@@ -67,25 +79,25 @@ def test_covering_partition_invariants():
 ), min_size=30, max_size=30))
 @settings(max_examples=20, deadline=None)
 def test_covering_matches_raycast(points):
-    """covering-classified containment == plain ray cast for any point
-    (the engine's FULL-cell shortcut must never disagree)."""
+    """leaf-table containment == plain ray cast for any point (the
+    engine's FULL-cell shortcut and per-cell edges must never
+    disagree)."""
     polys = [[SQUARE, HOLE]]
     soup = G.EdgeSoup(polys)
-    ids, kinds = G.cover_polygon(polys, res=8)
+    leaf = _leaf(polys, 8).set_index("cell")
     px = np.array([p[0] for p in points])
     py = np.array([p[1] for p in points])
     truth = G.points_in_edgesoup(px, py, soup)
-    # emulate the join: find the covering cell (any res) holding each point
+    # emulate the join: a FULL row is inside, a BOUNDARY row ray-casts
+    # the point over the row's own edges, a missing row is outside
     verdict = np.zeros(len(px), dtype=bool)
-    res_of = (ids >> 58).astype(int)
-    for r in np.unique(res_of):
-        sel = res_of == r
-        pcell = C.cell_of(px, py, int(r))
-        match = np.isin(pcell, ids[sel][kinds[sel] == G.FULL])
-        verdict |= match
-        bmatch = np.isin(pcell, ids[sel][kinds[sel] == G.BOUNDARY])
-        if bmatch.any():
-            verdict[bmatch] |= G.points_in_edgesoup(px[bmatch], py[bmatch], soup)
+    for i, cell in enumerate(C.cell_of(px, py, 8)):
+        if cell not in leaf.index:
+            continue
+        row = leaf.loc[cell]
+        own = SimpleNamespace(**{k: np.asarray(row[c]) for k, c in zip(
+            ("x1", "y1", "x2", "y2"), _EDGE_COLS)})
+        verdict[i] = row.kind == FULL or G.points_in_edgesoup(px[i:i + 1], py[i:i + 1], own)[0]
     np.testing.assert_array_equal(verdict, truth)
 
 

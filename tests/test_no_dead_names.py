@@ -19,6 +19,7 @@ KEEP = {
     "operators.pip_join.pip_join_brute": "oracle of pip_join",
     "operators.knn.knn_join_brute": "oracle of knn_join",
     "functions.cells.ring_neighbors": "oracle of ring_cells_col",
+    "functions.cells.children_cells": "oracle of parent_cell and compact_cells",
     "functions.geometry.point_in_wkb": "oracle of the PIP refine",
     "operators.sketches.hll_estimate": "oracle of the HLL registers",
     "functions.codecs.LONLAT_SQL": "oracle of the geotag codec",

@@ -12,6 +12,7 @@ edge-to-cell assignment would show."""
 
 import re
 import tracemalloc
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -19,7 +20,8 @@ import pytest
 
 from osmnightwatch_spark.functions import geometry as G
 from osmnightwatch_spark.functions import cells as C
-from osmnightwatch_spark.operators.pip_join import (_EDGE_COLS, PreparedPolygons,
+from osmnightwatch_spark.operators.pip_join import (_EDGE_COLS, BOUNDARY, FULL,
+                                                  PreparedPolygons, _cell_edges,
                                                   pip_join)
 from osmnightwatch_spark.sources import polygons as P
 
@@ -106,14 +108,10 @@ def join_shape(spark, request):
     spark.conf.set(key, prev)
 
 
-@pytest.mark.parametrize("max_cells", [4096, 256])
 @pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
-def test_band_refine_matches_numpy_ray_cast(spark, star_case, join_shape, max_cells):
-    """``max_cells=256`` caps the covering, so BOUNDARY cells sit above
-    the leaf resolution while the leaf rows and their edges stay at
-    it."""
+def test_band_refine_matches_numpy_ray_cast(spark, star_case, join_shape):
     polys, pts, exp = star_case
-    prep = PreparedPolygons.build(polys, res=RES, max_cells=max_cells)
+    prep = PreparedPolygons.build(polys, res=RES)
     q = pip_join(spark.createDataFrame(pts), prep)
     got = q.select("pt_id", "polygon_id").toPandas()
     assert not got.duplicated().any()
@@ -124,18 +122,34 @@ def test_band_refine_matches_numpy_ray_cast(spark, star_case, join_shape, max_ce
     assert ("BroadcastHashJoin" in plan) == (join_shape == "broadcast")
 
 
-@pytest.mark.parametrize("max_cells", [4096, 256])
-def test_boundary_leaf_rows_carry_edges(star_case, max_cells):
+def test_boundary_leaf_rows_carry_edges(star_case):
     """Every BOUNDARY leaf row holds at least one edge (the ray cast
     runs ``sequence(0, size - 1)``, and ``sequence(0, -1)`` is ``[0,
     -1]``), FULL rows hold none, and ``(polygon_id, cell)`` is
     unique."""
-    leaf = PreparedPolygons.build(star_case[0], res=RES, max_cells=max_cells).leaf
+    leaf = PreparedPolygons.build(star_case[0], res=RES).leaf
     n = leaf["_bx1"].map(len)
-    assert (n[leaf.kind == G.BOUNDARY] >= 1).all()
-    assert (n[leaf.kind == G.FULL] == 0).all()
+    assert (n[leaf.kind == BOUNDARY] >= 1).all()
+    assert (n[leaf.kind == FULL] == 0).all()
     assert (leaf[list(_EDGE_COLS)].map(len).to_numpy() == n.to_numpy()[:, None]).all()
     assert not leaf.duplicated(["polygon_id", "cell"]).any()
+
+
+# the corner of leaf cell (70, 70), and the first vertex of a
+# 1.4e-5°-long edge whose midpoint lies 1e-8° west of that corner
+X0, Y0 = -180.0 + 70 * COL, -90.0 + 70 * ROW
+A = (X0 - 1e-8 - 1e-5, Y0 + 1e-5)
+
+
+def _assert_corner_hits(spark, ring, lons):
+    """The numpy ray cast holds the points ``(lons[0], Y0)`` and
+    ``(lons[1], Y0)`` of ``ring``, and only those; pip_join agrees."""
+    polys = [(7, G.rings_to_wkb([np.array(ring)]))]
+    pts = pd.DataFrame({"pt_id": np.arange(len(lons)), "lon": lons, "lat": Y0})
+    assert _numpy_pairs(pts, polys) == {(0, 7), (1, 7)}
+    got = pip_join(spark.createDataFrame(pts), PreparedPolygons.build(polys, res=RES))
+    assert set(map(tuple, got.select("pt_id", "polygon_id").toPandas()
+                   .to_numpy().tolist())) == {(0, 7), (1, 7)}
 
 
 @pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
@@ -145,18 +159,20 @@ def test_short_edge_near_cell_corner(spark, join_shape):
     tolerance (|cross| ≤ 1e-12 is ~1e-7° for a 1e-5° edge). The corner
     point is outside by parity and inside by the ray cast, so the cell
     must keep that edge."""
-    x0, y0 = -180.0 + 70 * COL, -90.0 + 70 * ROW
-    a = (x0 - 1e-8 - 1e-5, y0 + 1e-5)
-    ring = np.array([a, (x0 - 1e-8 + 1e-5, y0 - 1e-5),
-                     (x0 - COL / 2, y0 - ROW / 2), (x0 - COL / 2, y0 + 0.6 * ROW),
-                     (x0 + COL / 2, y0 + 0.6 * ROW), (x0 + COL / 2, y0 + ROW / 2), a])
-    polys = [(7, G.rings_to_wkb([ring]))]
-    pts = pd.DataFrame({"pt_id": [0, 1, 2], "lon": [x0, x0 + 3e-9, x0 + 1e-3],
-                        "lat": [y0, y0, y0]})
-    assert _numpy_pairs(pts, polys) == {(0, 7), (1, 7)}
-    got = pip_join(spark.createDataFrame(pts), PreparedPolygons.build(polys, res=RES))
-    assert set(map(tuple, got.select("pt_id", "polygon_id").toPandas()
-                   .to_numpy().tolist())) == {(0, 7), (1, 7)}
+    _assert_corner_hits(spark, [A, (X0 - 1e-8 + 1e-5, Y0 - 1e-5),
+                                (X0 - COL / 2, Y0 - ROW / 2), (X0 - COL / 2, Y0 + 0.6 * ROW),
+                                (X0 + COL / 2, Y0 + 0.6 * ROW), (X0 + COL / 2, Y0 + ROW / 2), A],
+                        [X0, X0 + 3e-9, X0 + 1e-3])
+
+
+@pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
+def test_corner_cell_held_only_within_tolerance(spark, join_shape):
+    """The same short edge as a thin triangle's: it holds the corner,
+    and a point 3e-9° east of it, only within the kernel's on-edge
+    tolerance, so the corner's cell meets no edge exactly, yet it must
+    be a BOUNDARY row."""
+    _assert_corner_hits(spark, [A, (X0 - 1e-8 + 1e-5, Y0 - 1e-5), (X0 - 1e-3, Y0), A],
+                        [X0, X0 + 3e-9])
 
 
 @pytest.mark.parametrize("join_shape", ["broadcast", "shuffle"], indirect=True)
@@ -167,55 +183,47 @@ def test_pip_join_empty_polygon_set(spark, join_shape):
     assert pip_join(pts, prep).count() == 0
 
 
-def _descendants(cell, res):
-    """``cell``'s descendants at ``res`` by repeated ``children``
-    (``cells`` module spec: ``((r+1) << 58) | (morton << 2) | q``)."""
-    lv = cell >> 58
-    if lv == res:
-        return [cell]
-    morton = cell & ((1 << 58) - 1)
-    return [d for q in range(4)
-            for d in _descendants(((lv + 1) << 58) | (morton << 2) | q, res)]
-
-
-@pytest.mark.parametrize("case", ["flagship_rects", "capped_stars"])
-def test_leaf_table_expands_covering(star_case, case):
-    """``leaf`` is the covering with every coarse cell replaced by its
-    leaf-resolution descendants, in order, FULL carried; a BOUNDARY
-    descendant stays BOUNDARY, or — when no edge comes near it — turns
-    FULL or is dropped, and then the numpy ray cast agrees on a 7 × 7
-    grid of its interior points. ``capped_stars`` has BOUNDARY cells
-    above the leaf resolution."""
-    if case == "flagship_rects":
-        polys = P.valid_polygon_list(rect_only=True)
-        prep = PreparedPolygons.build(polys, res=RES)
-    else:
-        polys = star_case[0]
-        prep = PreparedPolygons.build(polys, res=RES, max_cells=256)
-        bnd = prep.covering[prep.covering.kind == G.BOUNDARY].cell.to_numpy()
-        assert (bnd >> 58).min() < RES
-    want = [(int(pid), d, int(kind))
-            for pid, cell, kind in prep.covering.itertuples(index=False)
-            for d in _descendants(int(cell), RES)]
-    leaf = prep.leaf
+@pytest.mark.parametrize("case", ["flagship_rects", "snapped_stars"])
+def test_leaf_table_matches_interior_grid(star_case, case):
+    """Of the cells in and around each polygon's bounding box, the leaf
+    table keeps exactly those ``_cell_edges`` keeps, with its kinds, so
+    the row scan's candidates miss no near cell. On a 7 × 7 grid of
+    each cell's interior points, ``points_in_edgesoup`` puts all points
+    of a FULL row inside and all points of a dropped cell outside; a
+    BOUNDARY row's ray cast over its own edges agrees with it on every
+    point. Every row sits at the leaf res and ``(polygon_id, cell)`` is
+    unique."""
+    polys = P.valid_polygon_list(rect_only=True) if case == "flagship_rects" else star_case[0]
+    leaf = PreparedPolygons.build(polys, res=RES).leaf
     assert list(leaf.columns) == ["polygon_id", "cell", "kind", *_EDGE_COLS]
-    got = {(pid, cell): kind for pid, cell, kind in
-           leaf[["polygon_id", "cell", "kind"]].to_numpy().tolist()}
-    kept = [(pid, d) for pid, d, _ in want if (pid, d) in got]
-    assert kept == list(zip(leaf.polygon_id.tolist(), leaf.cell.tolist()))
-    soups = {pid: G.EdgeSoup.from_wkb(wkb) for pid, wkb in polys}
-    f = (np.arange(7) + 0.5) / 7
-    fx, fy = (a.ravel() for a in np.meshgrid(f, f))
-    for pid, d, kind in want:
-        if kind == G.FULL:
-            assert got[(pid, d)] == G.FULL
-        elif got.get((pid, d)) != G.BOUNDARY:
-            x0, y0, x1, y1 = (v[0] for v in C.cell_bounds(np.array([d])))
-            inside = G.points_in_edgesoup(x0 + fx * (x1 - x0), y0 + fy * (y1 - y0),
-                                          soups[pid])
-            assert inside.all() if (pid, d) in got else not inside.any()
     assert not leaf.duplicated(["polygon_id", "cell"]).any()
     assert ((leaf.cell.to_numpy() >> 58) == RES).all()
+    f = (np.arange(7) + 0.5) / 7
+    fx, fy = (a.ravel() for a in np.meshgrid(f, f))
+    for pid, wkb in polys:
+        soup = G.EdgeSoup.from_wkb(wkb)
+        rows = leaf[leaf.polygon_id == pid].set_index("cell")
+        # the bounding box's cells and a ring of one more around them
+        (gx0, gx1), (gy0, gy1) = C.grid_xy(np.array(soup.bbox[0::2]),
+                                           np.array(soup.bbox[1::2]), RES)
+        gx, gy = np.meshgrid(np.arange(max(gx0 - 1, 0), min(gx1 + 2, 1 << RES)),
+                             np.arange(max(gy0 - 1, 0), min(gy1 + 2, 1 << RES)))
+        cells = C.cell_from_xy(gx.ravel(), gy.ravel(), RES)
+        # every kept cell, and only those, as _cell_edges classifies it
+        kind = _cell_edges(soup, cells, RES)[0]
+        assert dict(zip(rows.index, rows.kind)) == {c: k for c, k in zip(cells, kind) if k >= 0}
+        x0, y0, x1, y1 = (v[:, None] for v in C.cell_bounds(cells))
+        px, py = x0 + fx * (x1 - x0), y0 + fy * (y1 - y0)
+        inside = G.points_in_edgesoup(px.ravel(), py.ravel(), soup).reshape(px.shape)
+        for cell, ins, cx, cy in zip(cells, inside, px, py):
+            if cell not in rows.index:
+                assert not ins.any()
+            elif rows.kind[cell] == FULL:
+                assert ins.all()
+            else:
+                own = SimpleNamespace(**{k: np.asarray(rows[c][cell]) for k, c in zip(
+                    ("x1", "y1", "x2", "y2"), _EDGE_COLS)})
+                assert (G.points_in_edgesoup(cx, cy, own) == ins).all()
 
 
 def test_leaf_table_guard_raises_before_expanding():

@@ -113,7 +113,7 @@ def test_geometric_coverage_approximates_area(spark):
     truth = 1 / 8 * 1 / 4
     errs = []
     for res in (6, 8):
-        prep = PreparedPolygons.build(rect, res=res, max_cells=50000)
+        prep = PreparedPolygons.build(rect, res=res)
         cov = geometric_coverage(spark, prep, tile_res=0).toPandas()
         bnd = prep.covering[prep.covering.kind == 1]
         bound = 0.5 * sum(4.0 ** -(int(c) >> 58) for c in bnd.cell)
@@ -124,15 +124,15 @@ def test_geometric_coverage_approximates_area(spark):
 
 
 def test_geometric_coverage_expands_coarse_cells(spark):
-    """Covering cells coarser than tile_res expand into their
-    descendant tiles (ADVICE r01): a large aligned rect covered by
-    coarse FULL cells must still be fully counted at a finer tile_res, and
-    the total covered area must be identical at every tile_res."""
+    """Leaf cells coarser than tile_res expand into their descendant
+    tiles (ADVICE r01): a large aligned rect prepared at res 5 must
+    still be fully counted at tile_res 6, and the total covered area
+    must be identical at every tile_res."""
     rect = [(1, P.rect_wkb(-180.0, -90.0, -135.0, -45.0))]
     truth = 1 / 8 * 1 / 4
-    prep = PreparedPolygons.build(rect, res=7)
+    prep = PreparedPolygons.build(rect, res=5)
     # the fixture really produces coarse cells
-    assert (prep.covering.cell.to_numpy() >> 58).min() < 6
+    assert (prep.covering.cell.to_numpy() >> 58).max() < 6
     cov5 = geometric_coverage(spark, prep, tile_res=6).toPandas()
     cov0 = geometric_coverage(spark, prep, tile_res=0).toPandas()
     total5 = float((cov5.covered_fraction * 4.0 ** -6).sum())
@@ -186,49 +186,16 @@ def _star_set(n, k, seed):
     return polys
 
 
-def _with_lists(leaf):
-    return leaf.assign(**{c: leaf[c].map(list) for c in PJ._EDGE_COLS})
-
-
-def test_build_picks_executors_by_vertex_count(spark, monkeypatch):
-    """PreparedPolygons.build is the one builder: a set below
-    ``_EXECUTOR_MIN_VERTICES`` covers on the driver and starts no Spark
-    job; a set above it covers in a ``MapInPandas`` execution. Each
-    covering equals per-polygon ``cover_polygon`` in input order, and
-    each whole leaf table, edge arrays included, equals the one table
-    ``_leaf_table`` makes of that covering — the large set's on both
-    paths (its driver build forced by raising the threshold). A second
-    build of the large set is a memo hit that starts no job."""
-    rng = np.random.default_rng(5)
-    rects = []
-    for i in range(300):
-        x0 = float(rng.uniform(-179, 170))
-        y0 = float(rng.uniform(-84, 75))
-        rects.append((i, P.rect_wkb(x0, y0, x0 + rng.uniform(0.5, 8),
-                                    y0 + rng.uniform(0.5, 8))))
-    stars = _star_set(8, PJ._EXECUTOR_MIN_VERTICES // 8 + 1, seed=9)
-    for polys, res, on_executors in ((rects, 6, False), (stars, 7, False),
-                                     (stars, 7, True)):
-        PJ._BUILD_CACHE.clear()
-        with monkeypatch.context() as m:
-            if polys is stars and not on_executors:
-                m.setattr(PJ, "_EXECUTOR_MIN_VERTICES", 1 << 62)
-            prep, jobs, plans = _jobs_and_plans(
-                spark, lambda: PreparedPolygons.build(polys, res=res))
-        assert bool(jobs) is on_executors
-        assert any("MapInPandas" in p for p in plans) is on_executors
-        want = []
-        for pid, wkb in polys:
-            ids, kinds = G.cover_polygon(G.wkb_to_polygons(wkb), res=res)
-            want.append(pd.DataFrame({"polygon_id": np.full(len(ids), pid, np.int64),
-                                      "cell": ids, "kind": kinds}))
-        want = pd.concat(want, ignore_index=True)
-        pd.testing.assert_frame_equal(prep.covering, want)
-        leaf_want = PJ._leaf_table(
-            want, res, {pid: G.EdgeSoup.from_wkb(wkb) for pid, wkb in polys})
-        pd.testing.assert_frame_equal(_with_lists(prep.leaf), _with_lists(leaf_want))
-    again, jobs, _ = _jobs_and_plans(
-        spark, lambda: PreparedPolygons.build(stars, res=7))
+def test_build_starts_no_spark_job(spark):
+    """PreparedPolygons.build scans on the driver for any input: an
+    8 × 6,001-vertex star set builds with an active session and starts
+    no Spark job, and a second build is a memo hit."""
+    stars = _star_set(8, 6001, seed=9)
+    PJ._BUILD_CACHE.clear()
+    prep, jobs, plans = _jobs_and_plans(spark, lambda: PreparedPolygons.build(stars, res=7))
+    assert not jobs and not plans
+    assert set(prep.leaf.polygon_id) == {pid for pid, _ in stars}
+    again, jobs, _ = _jobs_and_plans(spark, lambda: PreparedPolygons.build(stars, res=7))
     assert again is prep and not jobs
 
 
